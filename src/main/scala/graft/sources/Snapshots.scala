@@ -174,11 +174,11 @@ object Snapshots {
       // post-upgrade append would pin the contract as its own schema,
       // silently narrowing away columns (and bypassing the type-fork
       // check) for every HEAD reader after it.
-      val merged = schemaOf(s, root, v - 1)
-        .orElse(inferredSchemaOf(s, root, v - 1))
+      val parent = manifest(s, root, v - 1)
+      val merged = parent.schema
+        .orElse(inferredSchemaOf(s, root, v - 1, parent))
         .fold(df.schema)(p => mergeSchemas(p, df.schema))
-      (dirsOf(s, root, v - 1) :+ dataDir, dvDirsOf(s, root, v - 1),
-        Some(merged))
+      (parent.dirs :+ dataDir, parent.dvs, Some(merged))
     }
   }
 
@@ -421,42 +421,48 @@ object Snapshots {
     // before a later column existed surface it as null), and the scan
     // never pays a mergeSchema footer sweep — at 100 TB schema comes
     // from one manifest read, not a million file footers. Pre-contract
-    // manifests (no schema field) fall back to footer inference.
-    val dirs = dirsOf(s, root, v)
-    def scan(): DataFrame = schemaOf(s, root, v)
-      .fold(s.read)(sc => s.read.schema(sc)).parquet(dirs: _*)
-    val base = scan()
-    val dvs = dvDirsOf(s, root, v)
-    if (dvs.isEmpty) base
+    // manifests (no schema field) fall back to footer inference. Dirs,
+    // sidecars and schema come from ONE manifest read, and the scan is
+    // built once (one file-index listing).
+    val m = manifest(s, root, v)
+    val base = m.scan(s)
+    if (m.dvs.isEmpty) base
     else {
       // merge-on-read: anti-join the (file, row-position) sidecar rows
       // out of the scan. Positions come from the parquet reader itself
       // (_metadata.row_index — no stored row ids, no table rewrite);
       // the scan side stays a plain pruned/pushed-down parquet scan.
-      val cols = base.columns.map(col)
       minusDvs(s,
-        scan()
-          .select(cols :+ col("_metadata.file_path").as("_graft_fp")
-            :+ col("_metadata.row_index").as("_graft_ri"): _*),
-        dvs, "_graft_fp", "_graft_ri")
+        base.select(base.columns.map(col)
+          :+ col("_metadata.file_path").as("_graft_fp")
+          :+ col("_metadata.row_index").as("_graft_ri"): _*),
+        m.dvs, "_graft_fp", "_graft_ri")
         .drop("_graft_fp", "_graft_ri")
     }
   }
 
+  /** Every sidecar's fixed schema: the (file, row-position) pairs a
+    * delete recorded.
+    */
+  private val DV_SCHEMA = "file_path STRING, row_index BIGINT"
+
   /** THE deletion-vector application rule — anti-join the sidecars'
     * (file, row-position) pairs out of a scan carrying its positions in
     * columns `fp`/`ri`. The sidecar holds ONLY deleted positions, so it
-    * broadcasts. One definition shared by [[read]] and [[deleteWhere]]'s
-    * candidate scan, so the merge-on-read semantics (distinct pairs,
-    * both-column equality, anti-join) cannot fork between them.
+    * broadcasts. Sidecars are read with their fixed schema (no footer-
+    * inference job) and NOT de-duplicated: a left-anti join only asks
+    * whether a build row exists, so a duplicate pair changes nothing,
+    * and a distinct would add a shuffle over every sidecar ever written
+    * on each read. One definition shared by [[read]] and the MERGE /
+    * delete candidate scans, so the merge-on-read semantics (both-column
+    * equality, anti-join) cannot fork between them.
     */
   private def minusDvs(s: SparkSession, scan: DataFrame, dvs: Seq[String],
       fp: String, ri: String): DataFrame =
     if (dvs.isEmpty) scan
     else {
-      val dv = broadcast(s.read.parquet(dvs: _*)
-        .select(col("file_path").as("_dv_fp"), col("row_index").as("_dv_ri"))
-        .distinct())
+      val dv = broadcast(s.read.schema(DV_SCHEMA).parquet(dvs: _*)
+        .select(col("file_path").as("_dv_fp"), col("row_index").as("_dv_ri")))
       scan.join(dv, col(fp) === col("_dv_fp") && col(ri) === col("_dv_ri"),
         "left_anti")
     }
@@ -482,23 +488,22 @@ object Snapshots {
     while (true) {
       val head = headVersion(s, root)
       require(head > 0, s"no snapshot at $root")
-      val dvs = dvDirsOf(s, root, head)
+      val m = manifest(s, root, head)
       val dvDir = s"$root/dv/w${token()}"
       // the candidate scan carries its own positions (_metadata is a
       // scan column, not a join output), with earlier sidecars
       // anti-joined out (minusDvs — read()'s one rule) so an
       // already-deleted row never double-records
-      val scan = s.read.parquet(dirsOf(s, root, head): _*)
+      val scan = m.scan(s)
         .select(col("_metadata.file_path").as("file_path"),
           col("_metadata.row_index").as("row_index"), col("*"))
-      minusDvs(s, scan, dvs, "file_path", "row_index")
+      minusDvs(s, scan, m.dvs, "file_path", "row_index")
         .filter(cond).select("file_path", "row_index")
         .write.mode("overwrite").parquet(dvDir)
       // a delete changes no columns: the parent's committed schema
       // carries forward verbatim
       if (tryPublishManifest(s, root, head + 1,
-          dirsOf(s, root, head), dvs :+ dvDir,
-          schemaOf(s, root, head))) return head + 1
+          m.dirs, m.dvs :+ dvDir, m.schema)) return head + 1
       // lost the CAS race: this sidecar was computed against a
       // superseded head — discard it and recompute against the new
       // state (a concurrent replace/compact can remap (file, row)
@@ -528,10 +533,15 @@ object Snapshots {
     * merge — refused loudly, src08's documented contract). The CAS
     * retry recomputes the sidecar against the new head (a concurrent
     * compaction remaps (file, row) positions); the data dir is written
-    * ONCE, outside the loop. At 100 TB: cost = one key-column scan of
-    * the table (pruned to the merge keys + _metadata) + |source|
-    * written — never a table rewrite; Catalyst broadcasts the source
-    * key set when it's small (the nightly-delta case).
+    * ONCE, outside the loop, and `source` is evaluated exactly once:
+    * the matched-key set is read back from the data dir just written
+    * (keys from the written dir), so a nondeterministic source deletes
+    * exactly the keys it appended. No distinct: a left-semi join
+    * ignores duplicate build keys. At 100 TB: cost = one key-column
+    * scan of the table (pruned to the merge keys + _metadata) +
+    * |source| written — never a table rewrite; the written key set is
+    * small in the nightly-delta case, so it broadcasts and the table
+    * key scan is not shuffled.
     */
   def mergeInto(s: SparkSession, root: String, source: DataFrame,
       keyCols: Seq[String]): Int = {
@@ -542,32 +552,33 @@ object Snapshots {
     val dataDir =
       try writeData(s, root, dupValidated(source, keyCols, "mergeInto"), None)
       catch { case t: Throwable => rethrowDup(t) }
+    val keys = s.read.schema(source.schema).parquet(dataDir)
+      .select(keyCols.map(col): _*)
     val f = fs(s, root)
     var attempts = 0
     while (true) {
       val head = headVersion(s, root)
       require(head > 0, s"no snapshot at $root — bootstrap with commit()")
-      val dvs = dvDirsOf(s, root, head)
+      val m = manifest(s, root, head)
       val dvDir = s"$root/dv/w${token()}"
       // matched rows = semi-join of the live table (earlier sidecars
       // anti-joined out, so an already-deleted row never double-
-      // records) against the source keys, pruned to keys + positions
-      val keys = source.select(keyCols.map(col): _*).distinct()
-      val scan = s.read.parquet(dirsOf(s, root, head): _*)
+      // records) against the written keys, pruned to keys + positions
+      val scan = m.scan(s)
         .select(col("_metadata.file_path").as("file_path")
           +: col("_metadata.row_index").as("row_index")
           +: keyCols.map(col): _*)
-      minusDvs(s, scan, dvs, "file_path", "row_index")
+      minusDvs(s, scan, m.dvs, "file_path", "row_index")
         .join(keys, keyCols, "left_semi")
         .select("file_path", "row_index")
         .write.mode("overwrite").parquet(dvDir)
       // same contract rule as commit(): merge against the parent's
       // committed (or, pre-contract, inferred) schema
-      val merged = schemaOf(s, root, head)
-        .orElse(inferredSchemaOf(s, root, head))
+      val merged = m.schema
+        .orElse(inferredSchemaOf(s, root, head, m))
         .fold(source.schema)(p => mergeSchemas(p, source.schema))
       if (tryPublishManifest(s, root, head + 1,
-          dirsOf(s, root, head) :+ dataDir, dvs :+ dvDir, Some(merged)))
+          m.dirs :+ dataDir, m.dvs :+ dvDir, Some(merged)))
         return head + 1
       f.delete(new Path(dvDir), true)
       attempts += 1
@@ -603,13 +614,13 @@ object Snapshots {
     while (true) {
       val head = headVersion(s, root)
       require(head > 0, s"no snapshot at $root — bootstrap with commit()")
-      val dvs = dvDirsOf(s, root, head)
-      val scan = s.read.parquet(dirsOf(s, root, head): _*)
+      val m = manifest(s, root, head)
+      val scan = m.scan(s)
         .select(col("_metadata.file_path").as("file_path")
           +: col("_metadata.row_index").as("row_index")
           +: col(versionCol).as("_tgt_v")
           +: keyCols.map(col): _*)
-      val live = minusDvs(s, scan, dvs, "file_path", "row_index")
+      val live = minusDvs(s, scan, m.dvs, "file_path", "row_index")
       val matched = live.join(
         source.select(keyCols.map(col) :+ col(versionCol).as("_src_v"): _*),
         keyCols)
@@ -631,11 +642,11 @@ object Snapshots {
         .write.mode("overwrite").parquet(dvDir)
       catch { case t: Throwable =>
         f.delete(new Path(dataDir), true); throw t }
-      val merged = schemaOf(s, root, head)
-        .orElse(inferredSchemaOf(s, root, head))
+      val merged = m.schema
+        .orElse(inferredSchemaOf(s, root, head, m))
         .fold(source.schema)(p => mergeSchemas(p, source.schema))
       if (tryPublishManifest(s, root, head + 1,
-          dirsOf(s, root, head) :+ dataDir, dvs :+ dvDir, Some(merged)))
+          m.dirs :+ dataDir, m.dvs :+ dvDir, Some(merged)))
         return head + 1
       f.delete(new Path(dvDir), true)
       f.delete(new Path(dataDir), true)
@@ -660,18 +671,36 @@ object Snapshots {
       .getOrElse(head + 1)
   }
 
-  /** The data dirs a version's manifest lists (v0 = the empty table —
-    * the bootstrap anchor for [[changesBetween]]).
+  /** One version's manifest, parsed from ONE read: the data dirs
+    * (v0 = the empty table — the bootstrap anchor for
+    * [[changesBetween]]), the deletion-vector sidecar dirs (absent key
+    * = none — pre-DV manifests parse unchanged) and the committed
+    * schema (None on v0 and on pre-contract manifests).
     */
-  private[graft] def dirsOf(s: SparkSession, root: String, v: Int)
-      : Seq[String] = arrayOf(manifestOf(s, root, v), "dirs")
+  private[graft] final case class Manifest(dirs: Seq[String],
+      dvs: Seq[String], schema: Option[StructType]) {
+    /** The version's data scan, read with the pinned schema when there
+      * is one (no footer-inference job); pre-contract manifests infer.
+      */
+    def scan(s: SparkSession): DataFrame =
+      schema.fold(s.read)(sc => s.read.schema(sc)).parquet(dirs: _*)
+  }
 
-  /** The deletion-vector sidecar dirs a version's manifest lists
-    * (absent key = none — pre-DV manifests parse unchanged).
-    */
+  private[graft] def manifest(s: SparkSession, root: String, v: Int)
+      : Manifest = {
+    val m = manifestOf(s, root, v)
+    Manifest(arrayOf(m, "dirs"), arrayOf(m, "dvs"),
+      stringOf(m, "schema").map(b64 =>
+        org.apache.spark.sql.types.DataType.fromJson(
+          new String(java.util.Base64.getDecoder.decode(b64), "UTF-8"))
+          .asInstanceOf[StructType]))
+  }
+
+  private[graft] def dirsOf(s: SparkSession, root: String, v: Int)
+      : Seq[String] = manifest(s, root, v).dirs
+
   private[graft] def dvDirsOf(s: SparkSession, root: String, v: Int)
-      : Seq[String] =
-    if (v == 0) Seq.empty else arrayOf(manifestOf(s, root, v), "dvs")
+      : Seq[String] = manifest(s, root, v).dvs
 
   private def manifestOf(s: SparkSession, root: String, v: Int): String = {
     if (v == 0) return """{"dirs": []}"""
@@ -692,21 +721,10 @@ object Snapshots {
     * tables by definition; every contract-era commit pays one manifest
     * read instead). v0 and dir-less parents have no data to anchor.
     */
-  private def inferredSchemaOf(s: SparkSession, root: String, v: Int)
-      : Option[StructType] =
-    if (v == 0 || dirsOf(s, root, v).isEmpty) None
+  private def inferredSchemaOf(s: SparkSession, root: String, v: Int,
+      m: Manifest): Option[StructType] =
+    if (m.dirs.isEmpty) None
     else Some(read(s, root, Some(v)).schema)
-
-  /** The schema a version's manifest committed (None on v0 and on
-    * pre-contract manifests).
-    */
-  private[graft] def schemaOf(s: SparkSession, root: String, v: Int)
-      : Option[StructType] =
-    if (v == 0) None
-    else stringOf(manifestOf(s, root, v), "schema").map(b64 =>
-      org.apache.spark.sql.types.DataType.fromJson(
-        new String(java.util.Base64.getDecoder.decode(b64), "UTF-8"))
-        .asInstanceOf[StructType])
 
   private def encodeSchema(sc: StructType): String =
     java.util.Base64.getEncoder.encodeToString(sc.json.getBytes("UTF-8"))

@@ -582,6 +582,10 @@ object EventStreams {
   // order exactly, including the replayed-import tie-break, so the
   // stream's converged state IS the batch answer (StreamingSpec proves
   // it across micro-batches, and that a replayed delta emits nothing).
+  // `better` stays the reference; [[latestWins]] is its Catalyst form
+  // (st17's micro-batch reduce), pinned equal to the `better` fold per
+  // key by a property test over equal versions, replays and extreme
+  // hashes.
   case class Upd(o_orderkey: Long, o_orderstatus: String,
       o_totalprice: Double, __v: Long, __h: Long)
   case class Latest(o_orderkey: Long, o_orderstatus: String,
@@ -601,6 +605,22 @@ object EventStreams {
   private[graft] def withUpdHash(updates: DataFrame): DataFrame =
     updates.withColumn("__h",
       xxhash64(struct(updates.columns.map(col): _*)))
+
+  /** Upd's columns after the key, in field order. */
+  private val UPD_PAYLOAD = Seq("o_orderstatus", "o_totalprice", "__v", "__h")
+
+  /** `better`'s winner per `o_orderkey` as ONE Catalyst aggregate: the
+    * row maximal under (__v, ~__h) — `~h` reverses `__h`'s order with no
+    * overflow (`-h` would overflow at Long.MinValue). Output is Upd's
+    * columns; the key is the grouping attribute itself, so the
+    * aggregate's hash partitioning carries into a downstream per-key
+    * window (the MERGE dup check) with no second exchange.
+    */
+  private[graft] def latestWins(updates: DataFrame): DataFrame =
+    updates.groupBy(col("o_orderkey"))
+      .agg(max_by(struct(UPD_PAYLOAD.map(col): _*),
+        struct(col("__v"), bitwise_not(col("__h")))).as("_w"))
+      .select(col("o_orderkey") +: UPD_PAYLOAD.map(c => col(s"_w.$c")): _*)
 
   private def upsertState(key: Long, rows: Iterator[Upd],
       state: GroupState[Upd]): Iterator[Latest] = {
@@ -977,7 +997,11 @@ object EventStreams {
   // ONE manifest publish — per-batch cost is the delta's size plus a
   // key-column scan of the table, never a rewrite of state that
   // didn't change. In-batch duplicates reduce by the SAME `better`
-  // comparator first (mergeInto's one-row-per-key contract); ACROSS
+  // rule first (mergeInto's one-row-per-key contract), in its Catalyst
+  // form [[latestWins]] — `better` stays the reference, and a property
+  // test pins the aggregate to the `better` fold per key. The batch is
+  // read once: the reduced rows are written once and mergeInto takes
+  // its matched keys back from that write; ACROSS
   // batches the feed must be per-key in-order (the compacted-topic
   // contract) — a late batch carrying an older version would win by
   // arrival. Out-of-order feeds belong on st12's comparator path.
@@ -988,7 +1012,6 @@ object EventStreams {
     */
   private[graft] def mergeCdcBatch(s: SparkSession, root: String,
       batchId: Long, delta: DataFrame): Int = {
-    import s.implicits._
     val head = Snapshots.headVersion(s, root)
     if (head >= batchId + 1) head // replay: already committed, absorb
     else {
@@ -996,11 +1019,7 @@ object EventStreams {
         s"CDC merge expects HEAD == $batchId, found $head: snapshot " +
           "root and stream checkpoint have diverged (single-writer " +
           "invariant violated or root wiped with checkpoint kept)")
-      val reduced = delta.as[Upd]
-        .groupByKey(_.o_orderkey)
-        .reduceGroups((a: Upd, b: Upd) => if (better(b, a)) b else a)
-        .map(_._2)
-        .toDF()
+      val reduced = latestWins(delta)
       if (head == 0) Snapshots.commit(s, root, reduced)
       else Snapshots.mergeInto(s, root, reduced, Seq("o_orderkey"))
     }

@@ -782,6 +782,39 @@ class StreamingSpec extends SparkSpec {
     assert(v1 == wantV1)
   }
 
+  test("st17's Catalyst latest-wins aggregate equals the better fold per key") {
+    import spark.implicits._
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import EventStreams.Upd
+    // equal versions, exact replays and the extreme hashes where a
+    // negated tie-break would overflow
+    val hGen = Gen.frequency(3 -> Gen.oneOf(Long.MinValue, 0L, Long.MaxValue),
+      1 -> Gen.choose(-2L, 2L), 1 -> Gen.choose(Long.MinValue, Long.MaxValue))
+    val rowGen = for {
+      k <- Gen.choose(1L, 6L); v <- Gen.choose(0L, 2L); h <- hGen
+      st <- Gen.oneOf("O", "F", "P"); p <- Gen.choose(0, 99)
+    } yield Upd(k, st, p.toDouble, v, h)
+    val batchGen = for {
+      rows <- Gen.listOf(rowGen)
+      // (key, __v, __h) names one row: two payloads under it would be a
+      // hash collision, which neither form can order
+      distinct = rows.groupBy(r => (r.o_orderkey, r.__v, r.__h))
+        .values.map(_.head).toList
+      replays <- Gen.someOf(distinct)
+    } yield distinct ++ replays
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(60),
+      Prop.forAll(batchGen) { batch =>
+        val got = EventStreams.latestWins(spark.createDataset(batch).toDF())
+          .as[Upd].collect().toSet
+        val want = batch.groupBy(_.o_orderkey).values
+          .map(_.reduce((a, b) => if (EventStreams.better(b, a)) b else a))
+          .toSet
+        got == want
+      })
+    assert(res.passed, res.status.toString)
+  }
+
   test("st11 spike geometry follows spark.graft.spike.* (non-default proven)") {
     import org.apache.spark.sql.functions.{col, expr}
     try {
