@@ -152,7 +152,7 @@ object Bench {
       noiseFloor: Double): Int =
     if (defaultRuns == 3 && warmSec.exists(_ < noiseFloor)) 2 else defaultRuns
 
-  private def loadavg(): String =
+  private[graft] def loadavg(): String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(" ")
     catch { case _: Throwable => "" }
 
@@ -177,28 +177,45 @@ object Bench {
 
   /** The bench_last.json overwrite decision, pure for testing.
     *
-    * The r6 gate (refuse only when 1-min load > cores/2) proved too
-    * loose in r7: a loadavg-9.4 run on 32 cores passed it and replaced
-    * the loadavg-0.6 official record with timings ~25% slower across
-    * the board. The record's quality bar is therefore RELATIVE to the
-    * record: a run only replaces a cleaner record if its own starting
-    * load is comparable (within +1.0), it actually measured faster
-    * (self-evidently not contention-inflated), or the query suite
-    * changed while the machine is near-idle (load ≤ 3) — a stale
-    * record over a stale-but-clean one. A missing stamp/load in
-    * `existing` reads as clean (pre-r6 files keep the old semantics).
+    * A record is only ever replaced by a run of the same `cpus` width
+    * and the same `sf`: an 8-core leg replaced the 32-core record
+    * through the faster-total clause before the record was stamped.
+    * Within one width, the r6 gate (refuse only when 1-min load >
+    * cores/2) proved too loose in r7: a loadavg-9.4 run on 32 cores
+    * passed it and replaced the loadavg-0.6 official record with
+    * timings ~25% slower across the board. The record's quality bar is
+    * therefore RELATIVE to the record: a run only replaces a cleaner
+    * record if its own starting load is comparable (within +1.0), it
+    * actually measured faster (self-evidently not contention-inflated),
+    * or the query suite changed while the machine is near-idle (load
+    * ≤ 3) — a stale record over a stale-but-clean one. A missing stamp
+    * in `existing` reads as clean and width-compatible (older records
+    * keep the older rules).
     */
   private[graft] def shouldRecord(contended: Boolean, load1: Double,
-      nQueries: Int, total: Double, existing: Option[String]): Boolean =
+      nQueries: Int, total: Double, cpus: Int, sf: String,
+      existing: Option[String]): Boolean =
     existing match {
       case None => true
-      case Some(prev) =>
-        if (contended && !prev.contains("\"contended\":true")) false
-        else if (prev.contains("\"contended\":true")) true
+      case Some(text) =>
+        import org.json4s._
+        val prev = scala.util.Try(org.json4s.jackson.JsonMethods.parse(text))
+          .getOrElse(JObject())
+        def num(key: String): Option[Double] = prev \ key match {
+          case JInt(v) => Some(v.toDouble)
+          case JDouble(v) => Some(v)
+          // loadavg_before holds the three load figures; the first counts
+          case JString(v) =>
+            scala.util.Try(v.split(" ")(0).toDouble).toOption
+          case _ => None
+        }
+        val prevContended = (prev \ "contended") == JBool(true)
+        val otherRun = num("cpus").exists(_ != cpus) ||
+          (prev \ "sf" match { case JString(v) => v != sf; case _ => false })
+        if (otherRun) false
+        else if (contended && !prevContended) false
+        else if (prevContended) true
         else {
-          def num(key: String): Option[Double] =
-            s""""$key":"?([0-9.]+)""".r.findFirstMatchIn(prev)
-              .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
           val prevLoad = num("loadavg_before").getOrElse(0.0)
           val prevN = num("n_queries").map(_.toInt).getOrElse(nQueries)
           val prevTotal = num("value").getOrElse(Double.MaxValue)
@@ -210,48 +227,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sf2Dir = sys.env.getOrElse("SPARK_GRAFT_SF2_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Shuffle width must scale with DATA, not core count: AQE starts
-      // every exchange at initialPartitionNum and coalesces down to the
-      // advisory size, so sf100's ~18 GB orderkey joins (q32/c14c) keep
-      // hundreds of partitions instead of spilling through a static 32.
-      // The starting width itself is sized from the input bytes
-      // (GraftConf.initShufflePartitions) so no single constant has to
-      // fit every SF. Streaming exchanges (no AQE) keep the static
-      // floor above.
-      // width sized from the LARGER of the two SF dirs: the session is
-      // shared by both legs, and sizing from the primary alone would
-      // undersize the AQE ceiling if SPARK_GRAFT_SF2_DIR pointed at the
-      // bigger dataset (inverted from the sf2-is-10x-smaller convention)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.get("SPARK_GRAFT_INIT_PARTS")
-          .getOrElse(math.max(
-            GraftConf.initShufflePartitions(sfDir, cpus.toInt),
-            if (sf2Dir.nonEmpty)
-              GraftConf.initShufflePartitions(sf2Dir, cpus.toInt)
-            else 0).toString))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graft.gateSort", "false")
-      // see Verify: single-file parquet needs smaller splits to reach
-      // core-count scan parallelism
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "16m"))
-      // the default 100-entry codegen cache thrashes between a query's
-      // warm-up and its timed runs once the query's plans exceed ~100
-      // generated classes (s12 did): the timed runs then recompile
-      // inside tasks — r16 profiling showed CodeGenerator.compile as
-      // the top executor frame. 2000 entries hold the whole suite's
-      // generated classes; the cache stores compiled classes, not data.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietTinyFrameWindowWarnings()
+    val cpus = envCpus
+    val spark = session(cpus, Seq(sfDir, sf2Dir).filter(_.nonEmpty), gate = false)
     val loadBefore = loadavg()
     // machine probes BEFORE any query: the ratios stamp what the
     // sandbox was worth when the timings started — per-core speed AND
@@ -314,19 +291,14 @@ object Bench {
         // run while the heap is bloated (r15: the s-family read 12.2 s
         // in-suite vs ~1.3x isolated on an IDLE machine; r14: d04 at
         // 14.9 s; r13: t17 — same mode, different victim each run).
-        // SPARK_GRAFT_KEEPCACHE=1 restores the r13-era accumulate-
-        // forever behaviour — ONLY for same-day A/B runs quantifying
-        // the protocol change against old records; never official.
-        if (sys.env.getOrElse("SPARK_GRAFT_KEEPCACHE", "0") != "1") {
-          spark.catalog.clearCache()
-          // clearCache only drops SQL-cached frames; localCheckpoint()
-          // blocks are plain persisted RDDs that linger until the
-          // driver GC + ContextCleaner get around to them — across a
-          // 227-query suite they accumulate into the same large-heap
-          // GC mode the per-query clearCache exists to prevent (r16)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
+        spark.catalog.clearCache()
+        // clearCache only drops SQL-cached frames; localCheckpoint()
+        // blocks are plain persisted RDDs that linger until the
+        // driver GC + ContextCleaner get around to them — across a
+        // 227-query suite they accumulate into the same large-heap
+        // GC mode the per-query clearCache exists to prevent (r16)
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = false))
         name -> med
       }
 
@@ -437,7 +409,7 @@ object Bench {
     val degraded = machineRatio > DEGRADED_RATIO
     val contended = load1 > machineCores / 2.0 || degraded
     val line =
-      s"""{"queries":${json(results)},$sf2Json"failed":$failedJson,"sf":"$sfDir","n_queries":${results.size},"slowest":${json(slowest)},"build_queries":${BUILD_QUERIES.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"build_sec":${num(buildSec, 1)},"core_sec":${num(coreSec, 1)},"loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}","calib_sec":${num(calibSec, 3)},"calib_ref_sec":${num(CALIB_REF_SEC, 3)},"calib_par_sec":${num(calibParSec, 3)},"calib_par_ref_sec":${num(CALIB_PAR_REF_SEC, 3)},"machine_ratio":${num(machineRatio, 2)},"degraded":$degraded,"contended":$contended,"machine_cores":$machineCores,"metric":"total","unit":"sec","value":${num(total, 1)}}"""
+      s"""{"queries":${json(results)},$sf2Json"failed":$failedJson,"n_queries":${results.size},"slowest":${json(slowest)},"build_queries":${BUILD_QUERIES.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"build_sec":${num(buildSec, 1)},"core_sec":${num(coreSec, 1)},"loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}","calib_sec":${num(calibSec, 3)},"calib_ref_sec":${num(CALIB_REF_SEC, 3)},"calib_par_sec":${num(calibParSec, 3)},"calib_par_ref_sec":${num(CALIB_PAR_REF_SEC, 3)},"machine_ratio":${num(machineRatio, 2)},"degraded":$degraded,"contended":$contended,"machine_cores":$machineCores,"cpus":$cpus,"sf":${jstr(sfDir)},"metric":"total","unit":"sec","value":${num(total, 1)}}"""
     try {
       val p = java.nio.file.Paths.get("docs/bench_last.json")
       java.nio.file.Files.createDirectories(p.getParent)
@@ -451,20 +423,73 @@ object Bench {
         else None
       if (only.nonEmpty)
         System.err.println("[bench] SPARK_GRAFT_ONLY subset — docs/bench_last.json not written")
-      else if (sys.env.getOrElse("SPARK_GRAFT_KEEPCACHE", "0") == "1")
-        // the legacy-protocol A/B mode measures a different thing
-        // (cache-accumulating timings) — it must never become official
-        System.err.println("[bench] SPARK_GRAFT_KEEPCACHE A/B mode — docs/bench_last.json not written")
       else if (sfDir != "/root/testdata/sf0.1")
         // scale legs (sf1/sf10) are recorded by the caller under their
         // own names; only the driver's sf0.1 suite IS the official record
         System.err.println(s"[bench] non-default SF $sfDir — docs/bench_last.json not written")
-      else if (shouldRecord(contended, load1, results.size, total, existing))
+      else if (shouldRecord(contended, load1, results.size, total, cpus, sfDir,
+          existing))
         java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
       else
-        System.err.println(s"[bench] run at load $load1 is dirtier than the recorded one — docs/bench_last.json keeps the earlier cleaner record")
+        System.err.println(s"[bench] run at local[$cpus], load $load1 is another width/SF or dirtier than the recorded one — docs/bench_last.json keeps the earlier record")
     } catch { case _: Throwable => () } // bench result must still print
     println(line)
     spark.stop()
+  }
+
+  /** Core count of the mains' `local[N]` (SPARK_GRAFT_CPUS). */
+  private[graft] def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The one way graft builds a session: `local[cpus]` with the
+    * production settings, shared by every main and the test suite.
+    * The AQE start width is sized from the largest of `dataDirs` (the
+    * core count when there are none). `gate = true` keeps the
+    * determinism-only final sorts the oracle gate needs (see Gate);
+    * `gate = false` is the production path Bench times. `extra` adds a
+    * caller's own settings before the session is created.
+    */
+  def session(cpus: Int, dataDirs: Seq[String], gate: Boolean,
+      extra: SparkSession.Builder => SparkSession.Builder = identity)
+      : SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      // Shuffle width must scale with DATA, not core count: AQE starts
+      // every exchange at initialPartitionNum and coalesces down to the
+      // advisory size, so sf100's ~18 GB orderkey joins (q32/c14c) keep
+      // hundreds of partitions instead of spilling through a static 32.
+      // The starting width itself is sized from the input bytes
+      // (GraftConf.initShufflePartitions) so no single constant has to
+      // fit every SF. Streaming exchanges (no AQE) keep the static
+      // floor above. Sized from the LARGEST dir: Bench's session is
+      // shared by both SF legs. SPARK_GRAFT_INIT_PARTS overrides.
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS",
+          (cpus +: dataDirs.map(GraftConf.initShufflePartitions(_, cpus)))
+            .max.toString))
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.session.timeZone", "UTC")
+      // nanos-era events.parquet files read as long (Tables.events
+      // normalizes both generations); must be set at build time
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // single-FILE tables (the shipped/gen_sf testdata) only split into
+      // size/maxPartitionBytes scan tasks; 128 MB caps a 264 MB corpus at
+      // ~4 tasks no matter the core count. 16 MB restores scan-side
+      // parallelism locally; a real many-file deployment keeps 128 MB.
+      .config("spark.sql.files.maxPartitionBytes",
+        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "16m"))
+      // the default 100-entry codegen cache thrashes between a query's
+      // warm-up and its timed runs once the query's plans exceed ~100
+      // generated classes (s12 did): the timed runs then recompile
+      // inside tasks — r16 profiling showed CodeGenerator.compile as
+      // the top executor frame. 2000 entries hold the whole suite's
+      // generated classes; the cache stores compiled classes, not data.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.ui.enabled", "false")
+    if (!gate) b.config("spark.graft.gateSort", "false")
+    val s = extra(b).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    Logs.quietTinyFrameWindowWarnings()
+    s
   }
 }

@@ -36,39 +36,16 @@ import org.apache.spark.sql.SparkSession
   */
 object ConcurrentBench {
 
-  private def loadavg(): String =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-      .split(" ").take(3).mkString(" ")
-    catch { case _: Throwable => "" }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nStreams = if (args.length > 1) args(1).toInt else 8
     val out = if (args.length > 2) args(2) else "docs/bench_concurrent.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // data-proportional shuffle width via AQE coalescing (see Bench)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.get("SPARK_GRAFT_INIT_PARTS")
-          .getOrElse(GraftConf.initShufflePartitions(sfDir, cpus.toInt).toString))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graft.gateSort", "false")
-      // the multi-user scheduler: FAIR pools, one per stream, so a
-      // long scan cannot convoy every other analyst behind it (FIFO
-      // would — the default — and is exactly what a shared deployment
-      // must not run)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "16m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietTinyFrameWindowWarnings()
-    val loadBefore = loadavg()
+    // the multi-user scheduler: FAIR pools, one per stream, so a long
+    // scan cannot convoy every other analyst behind it (FIFO would —
+    // the default — and is exactly what a shared deployment must not run)
+    val spark = Bench.session(Bench.envCpus, Seq(sfDir), gate = false,
+      _.config("spark.scheduler.mode", "FAIR"))
+    val loadBefore = Bench.loadavg()
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -142,7 +119,7 @@ object ConcurrentBench {
         s""""failed_warm":${arr(warmFailures)},""" +
         s""""failed_serial":${arr(serialFailed)},""" +
         s""""failed_concurrent":${arr(concurrentFailed)},""" +
-        s""""loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}"}"""
+        s""""loadavg_before":"$loadBefore","loadavg_after":"${Bench.loadavg()}"}"""
     val p = java.nio.file.Paths.get(out)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))

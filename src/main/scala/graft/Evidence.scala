@@ -274,24 +274,7 @@ object Evidence {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "docs/rowsonly_evidence.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // data-proportional shuffle width via AQE coalescing (see Bench)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.get("SPARK_GRAFT_INIT_PARTS")
-          .getOrElse(GraftConf.initShufflePartitions(sfDir, cpus.toInt).toString))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Verify: single-file parquet needs smaller splits to reach
-      // core-count scan parallelism
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "16m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(Bench.envCpus, Seq(sfDir), gate = true)
     val items = collect(spark, sfDir)
     val json = items.map { i =>
       s"""  "${i.query}": {"class": "${i.cls}", "metric": "${i.metric}", """ +

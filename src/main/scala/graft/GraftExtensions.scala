@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionIn
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, ApproximatePercentile, Count, HyperLogLogPlusPlus, Percentile}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, NumericType, StringType}
 
-import graft.functions.RollingFingerprint
+import graft.functions.{FloatVecDot, RollingFingerprint}
 
 /** Graft's `SparkSessionExtensions` hook — the deployment-facing
   * registration point (`spark.sql.extensions=graft.GraftExtensions`).
@@ -52,24 +52,24 @@ object GraftExtensions {
   }
 
   /** `graft_dot(a, b, dim)`: the engine's deterministic fixed-order dot
-    * product (VectorFunctions.dotFixed) for SQL users — built as the
-    * identical left-associated Add/Multiply chain over array elements,
-    * so a SQL re-rank computes bit-equal cosines to the Scala operators
-    * on any engine and any partitioning. `dim` must be an int literal
-    * (the unroll happens at resolution time).
+    * product for SQL users — the same loop-codegen'd [[FloatVecDot]] the
+    * Scala operators use (VectorFunctions.vecDot), so a SQL re-rank
+    * computes bit-equal cosines on any engine and any partitioning.
+    * Arrays of the numeric types FloatVecDot does not read (decimal,
+    * short, byte) are cast to array<double>: the same per-element
+    * double conversion, so the same values. `dim` must be an int literal.
     */
   val dotFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_dot"),
     new ExpressionInfo(classOf[GraftExtensions].getName, "graft_dot"),
     (children: Seq[Expression]) => children match {
       case Seq(a, b, d) =>
-        val dim = intLit("graft_dot", d, "dim")
-        import org.apache.spark.sql.catalyst.expressions.{Add, GetArrayItem, Multiply}
-        (0 until dim).map { i =>
-          val ai = Cast(GetArrayItem(a, Literal(i)), DoubleType)
-          val bi = Cast(GetArrayItem(b, Literal(i)), DoubleType)
-          Multiply(ai, bi): Expression
-        }.reduceLeft(Add(_, _))
+        def read(e: Expression): Expression = e.dataType match {
+          case ArrayType(FloatType | DoubleType | IntegerType | LongType, _) => e
+          case ArrayType(_: NumericType, n) => Cast(e, ArrayType(DoubleType, n))
+          case _ => e // FloatVecDot's type check names what it accepts
+        }
+        FloatVecDot(read(a), read(b), intLit("graft_dot", d, "dim"))
       case _ => throw new IllegalArgumentException(
         s"graft_dot takes (array, array, dim-literal), got ${children.size} args")
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-process writer for the cross-JVM OCC race (RoundTripSpec
   * forks this main with plain `java -cp` while committing from its own
   * session): N appends to one snapshot root, each a single tagged row.
@@ -18,14 +16,7 @@ object OccRace {
   def main(args: Array[String]): Unit = {
     val Array(root, writer, nStr, readyFile, startFile) = args.take(5)
     val n = nStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-occ-$writer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(2, Nil, gate = false)
     import spark.implicits._
     java.nio.file.Files.write(java.nio.file.Paths.get(readyFile),
       writer.getBytes("UTF-8"))

@@ -1,27 +1,18 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit dump: `explain formatted` for every query, written to one
   * file per query so scan pushdown (PushedFilters/ReadSchema), join
   * strategies (BroadcastHashJoin vs SortMergeJoin) and codegen fusion can
-  * be reviewed and diffed round-over-round. Run with gateSort=false so
-  * the audited plans are the production ones.
+  * be audited and diffed round-over-round. The session is Bench's
+  * (gateSort=false, SPARK_GRAFT_CPUS cores, data-sized AQE width) and the
+  * default SF is Bench's, so the audited plans are the ones Bench times.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "docs/plans"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graft.gateSort", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.envCpus, Seq(sfDir), gate = false)
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

@@ -2,7 +2,7 @@ package graft
 
 import graft.Tables._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-resilience leg — measured task-time evidence that the salted
@@ -38,18 +38,7 @@ object SkewLeg {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1_zipf")
     val out = if (args.length > 1) args(1) else "docs/skew_leg.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "16m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietTinyFrameWindowWarnings()
+    val spark = Bench.session(Bench.envCpus, Seq(sfDir), gate = false)
 
     val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,38 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // data-proportional shuffle width via AQE coalescing (see Bench)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.get("SPARK_GRAFT_INIT_PARTS")
-          .getOrElse(GraftConf.initShufflePartitions(sfDir, cpus.toInt).toString))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // single-FILE tables (the shipped/gen_sf testdata) only split into
-      // size/maxPartitionBytes scan tasks; 128 MB caps a 264 MB corpus at
-      // ~4 tasks no matter the core count. 16 MB restores scan-side
-      // parallelism locally; a real many-file deployment keeps 128 MB.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "16m"))
-      // the default 100-entry codegen cache thrashes across a 227-query
-      // suite (and even within one many-plan query): evicted generated
-      // classes recompile INSIDE tasks — r16 profiling showed
-      // CodeGenerator.compile as the top executor frame. Cache entries
-      // are compiled classes, not data; 2000 covers the suite.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietTinyFrameWindowWarnings()
+    val spark = Bench.session(Bench.envCpus, Seq(sfDir), gate = true)
     new java.io.File(outDir).mkdirs()
     // Bench's focused-iteration convention; the driver sets no filter,
     // so its gate always dumps the full set
@@ -47,20 +20,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -7,27 +7,30 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Fixed-order dot product of two numeric arrays as ONE loop-codegen'd
-  * Catalyst expression — the hot-path form of
-  * [[VectorFunctions.dotFixed]].
+  * Catalyst expression — the engine's one dot product (Scala operators
+  * via [[VectorFunctions.vecDot]], SQL via `graft_dot`).
   *
-  * dotFixed unrolls 64 `GetArrayItem` terms into a ~770-node expression
-  * tree: bit-exact and fine when evaluated once per ROW, but a pair
-  * operator evaluates its cosine per candidate PAIR, and Catalyst can
-  * inline the giant expression into several operators (null-check
-  * filter, threshold filter, output projection) — measured ~3
-  * evaluations x ~1 µs each over 3M candidate pairs in d05b (~9 s of
-  * pure expression walking). The unrolled form's GENERATED SOURCE is
-  * the other cost (r16): a plan inlining several 770-node dots compiles
-  * to a janino source large enough that, across a many-plan query like
-  * s12, the 100-entry codegen cache thrashes and tasks burn their time
-  * in CodeGenerator.compile. This expression is the same arithmetic as
-  * a 5-line loop: identical LEFT-TO-RIGHT accumulation order, so
-  * results are BIT-IDENTICAL to dotFixed / sqlDotFixed (the oracle
-  * relies on that), at ~100x fewer expression nodes per evaluation and
-  * ~100x less generated source.
+  * It replaced the unrolled form, which chained 64 `GetArrayItem` terms
+  * into a ~770-node expression tree: bit-exact and fine when evaluated
+  * once per ROW, but a pair operator evaluates its cosine per candidate
+  * PAIR, and Catalyst can inline the giant expression into several
+  * operators (null-check filter, threshold filter, output projection) —
+  * measured ~3 evaluations x ~1 µs each over 3M candidate pairs in d05b
+  * (~9 s of pure expression walking). The unrolled form's GENERATED
+  * SOURCE is the other cost (r16): a plan inlining several 770-node
+  * dots compiles to a janino source large enough that, across a
+  * many-plan query like s12, the 100-entry codegen cache thrashes and
+  * tasks burn their time in CodeGenerator.compile. This expression is
+  * the same arithmetic as a 5-line loop: identical LEFT-TO-RIGHT
+  * accumulation order, started from -0.0 (the exact additive identity,
+  * so even a signed-zero sum matches), so results are BIT-IDENTICAL to
+  * the unrolled form and to [[VectorFunctions.sqlDotFixed]] (the oracle
+  * relies on that; the unrolled form survives as the specs'
+  * `Oracles.dotFixed`), at ~100x fewer expression nodes per evaluation
+  * and ~100x less generated source.
   *
   * Element types: each side independently float, double, int or long —
-  * every element is widened to double exactly as dotFixed's
+  * every element is widened to double exactly as the unrolled form's
   * `CAST(x[i] AS DOUBLE)` does (all four widenings are exact for the
   * values these columns hold; int/long appear in the SQ8 code path).
   *
@@ -75,7 +78,7 @@ case class FloatVecDot(left: Expression, right: Expression, dim: Int)
     val y = b.asInstanceOf[ArrayData]
     val (tx, ty) = (eltOf(left), eltOf(right))
     boundsCheck(x.numElements()); boundsCheck(y.numElements())
-    var acc = 0.0
+    var acc = -0.0
     var i = 0
     while (i < dim) {
       if (x.isNullAt(i) || y.isNullAt(i)) return null
@@ -102,7 +105,7 @@ case class FloatVecDot(left: Expression, right: Expression, dim: Int)
          |    "float_vec_dot: arrays need >= $dim elements, got " +
          |      $a.numElements() + " and " + $b.numElements());
          |}
-         |double $acc = 0.0;
+         |double $acc = -0.0;
          |for (int $i = 0; $i < $dim; $i++) {
          |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
          |  $acc += ${getJava(a, eltOf(left), i)} * ${getJava(b, eltOf(right), i)};

@@ -3,74 +3,24 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector math over `array<float>` embedding columns using builtin
-  * higher-order functions (zip_with + aggregate) — codegen-friendly, no
-  * UDFs.
+/** Vector math over `array<float>` embedding columns as codegen'd
+  * Catalyst expressions — no UDFs, no higher-order lambdas.
   *
-  * Determinism: dot products accumulate in DECIMAL(38,12), not double.
-  * Each float×float product is exact in double; casting it to decimal
-  * rounds it to a canonical 12-decimal value (ties are impossible — a
-  * dyadic rational can't land exactly on a 10^-12 midpoint), and decimal
-  * addition is associative, so the sum is identical on every engine and
-  * every partitioning — the DuckDB oracle and a 1000-executor cluster
-  * compute bit-equal cosines.
+  * Determinism: every dot product FIXES its summation order (left to
+  * right over the elements, [[FloatVecDot]]). IEEE double addition is
+  * exact-reproducible for a fixed order, so the DuckDB oracle
+  * ([[sqlDotFixed]]) and a 1000-executor cluster compute bit-equal
+  * cosines.
   */
 object VectorFunctions {
-
-  /** Exact-decimal dot product of two array<float>/array<double> columns,
-    * returned as double.
-    */
-  def dotDet(a: String, b: String): Column = expr(
-    s"""CAST(aggregate(
-       |  zip_with($a, $b, (x, y) ->
-       |    CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(38,12))),
-       |  CAST(0 AS DECIMAL(38,12)),
-       |  (acc, v) -> CAST(acc + v AS DECIMAL(38,12))) AS DOUBLE)""".stripMargin)
-
-  /** Deterministic cosine similarity: dotDet / sqrt(normA * normB). All
-    * three operands are engine-identical doubles, so the quotient is too.
-    *
-    * NOTE: recomputes both self-dots per row — fine for one-off use, but
-    * pairwise operators must precompute `dotDet(v, v)` as a per-vector
-    * column BEFORE the join (see cosineFromNorms): at n² pairs the
-    * recomputation is 2/3 of all decimal work.
-    */
-  def cosineDet(a: String, b: String): Column =
-    dotDet(a, b) / sqrt(dotDet(a, a) * dotDet(b, b))
-
-  /** Cosine from a pairwise dot and two precomputed self-dot columns.
-    * Identical doubles to cosineDet (same operands, same IEEE ops).
-    */
-  def cosineFromNorms(a: String, b: String, normA: Column, normB: Column): Column =
-    dotDet(a, b) / sqrt(normA * normB)
-
-  /** Dot product for a KNOWN dimension, unrolled into a flat left-
-    * associated double expression — fully code-generated native math
-    * (the higher-order aggregate/zip_with form evaluates its lambdas
-    * interpreted per element, and decimal accumulation pays BigDecimal
-    * per add). Deterministic because the expression FIXES the summation
-    * order: IEEE double addition is exact-reproducible for a fixed
-    * order, on any engine and any partitioning. The DuckDB oracle
-    * mirrors the identical unrolled expression (sqlDotFixed), so values
-    * are bit-equal.
-    */
-  def dotFixed(a: String, b: String, dim: Int): Column = expr(
-    (0 until dim).map(i =>
-      s"(CAST($a[$i] AS DOUBLE) * CAST($b[$i] AS DOUBLE))").mkString(" + "))
 
   /** The same unrolled dot as DuckDB SQL (1-based list indexing). */
   def sqlDotFixed(a: String, b: String, dim: Int): String =
     (1 to dim).map(i =>
       s"(CAST($a[$i] AS DOUBLE) * CAST($b[$i] AS DOUBLE))").mkString(" + ")
 
-  def cosineFromNormsFixed(a: String, b: String, normA: Column, normB: Column,
-      dim: Int): Column =
-    dotFixed(a, b, dim) / sqrt(normA * normB)
-
-  /** The loop-codegen'd form of dotFixed ([[FloatVecDot]]) —
-    * bit-identical values (same left-to-right accumulation), ~100x
-    * fewer expression nodes per evaluation. Use on PAIR-hot paths
-    * where Catalyst may inline the dot into several operators.
+  /** Fixed-order dot product for a KNOWN dimension ([[FloatVecDot]]):
+    * bit-identical to the unrolled [[sqlDotFixed]] the oracle runs.
     */
   def vecDot(a: String, b: String, dim: Int): Column =
     org.apache.spark.sql.GraftSql.column(FloatVecDot(
@@ -82,20 +32,14 @@ object VectorFunctions {
     vecDot(a, b, dim) / sqrt(normA * normB)
 
   /** Squared Euclidean distance for a KNOWN dimension, unrolled with a
-    * fixed evaluation order like dotFixed — deterministic on any engine
-    * and partitioning. Used by k-means-style codebook training.
+    * fixed evaluation order — deterministic on any engine and
+    * partitioning. Used by k-means-style codebook training.
     */
   def dist2Fixed(a: String, b: String, dim: Int): Column = expr(
     (0 until dim).map { i =>
       val d = s"(CAST($a[$i] AS DOUBLE) - CAST($b[$i] AS DOUBLE))"
       s"($d * $d)"
     }.mkString(" + "))
-
-  /** Matching DuckDB SQL for dotDet/cosineDet, for oracle queries that
-    * unnest embeddings to (id, i, x) rows: exact decimal sum of products.
-    */
-  def sqlDotDet(prod: String): String =
-    s"CAST(SUM(CAST(($prod) AS DECIMAL(38,12))) AS DOUBLE)"
 
   /** All sign-LSH bucket codes of a vector as one loop-codegen'd
     * expression ([[LshSignBuckets]]) — value-identical to the exploded
@@ -110,10 +54,10 @@ object VectorFunctions {
 
   /** Random-hyperplane rows for sign-LSH: (tbl, bit, dim, hval) — one row
     * per hyperplane component, seeded-deterministic (java.util.Random is
-    * a spec'd LCG, identical on every JVM). Broadcast-joined against
-    * exploded vectors, bucketing becomes codegen'd multiply + sum
-    * aggregates. (Unrolling all planes into one literal projection was
-    * tried and rejected: a ~20k-node expression tree stalls Catalyst
+    * a spec'd LCG, identical on every JVM). [[LshSignBuckets]] holds
+    * them as one array; LshBucketsSpec's oracle joins them as rows.
+    * (Unrolling all planes into one literal projection was tried and
+    * rejected: a ~20k-node expression tree stalls Catalyst
     * analysis/codegen for minutes.)
     */
   def hyperplaneRows(dim: Int, tables: Int, nbits: Int, seed: Long)

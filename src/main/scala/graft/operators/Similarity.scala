@@ -21,10 +21,10 @@ object Similarity {
   // nothing is actually close) this still yields recall@10 ≈ 0.9 while
   // scoring only candidate buckets; with real near-dup structure the
   // collision probability of true neighbours rises sharply.
-  private val TABLES = 16
-  private val NBITS = 4
-  private val DIM = 64
-  private val SEED = 42L
+  private[graft] val TABLES = 16
+  private[graft] val NBITS = 4
+  private[graft] val DIM = 64
+  private[graft] val SEED = 42L
 
   /** Query vector (with precomputed self-dot) as a 1-row broadcast frame
     * — no driver-side collect.
@@ -98,22 +98,9 @@ object Similarity {
       .select(col("vec_id"), round(col("cos"), 6).as("cosine"))
 
   // -- s02: LSH-bucketed approximate top-k -------------------------------
-  // Bucket index: explode vectors to (vec, dim, x) rows, broadcast-join
-  // the 4096-row hyperplane table, and reduce with codegen'd aggregates —
-  // dot per (vec, tbl, bit), then sign bits packed per (vec, tbl). Plane
-  // dots accumulate in compact decimal(18,12) (long-backed fast path) so
-  // bucket codes are partitioning-independent — a near-zero double dot
-  // could flip sign with summation order. Candidates = vectors sharing
-  // the query's bucket in >=1 table; exact cosine re-ranks them. At
-  // scale the index is pre-built, so a query touches only its own
-  // buckets.
-  /** The 4096-row hyperplane table as a broadcast frame. */
-  private def planesDF(s: SparkSession): DataFrame = {
-    import s.implicits._
-    broadcast(hyperplaneRows(DIM, TABLES, NBITS, SEED)
-      .toDF("tbl", "bit", "dim", "hval"))
-  }
-
+  // Candidates = vectors sharing the query's bucket in >=1 table; exact
+  // cosine re-ranks them. At scale the index is pre-built, so a query
+  // touches only its own buckets.
   /** Sign-LSH bucket index pipeline: vectors → (vec_id, tbl, bucket).
     *
     * One loop-codegen'd expression per vector (r16): the previous
@@ -123,7 +110,8 @@ object Similarity {
     * get/setDecimal were s02's top frames). [[LshSignBuckets]] computes
     * the same per-product decimal(18,12) rounding and the same exact
     * sums in place — LshBucketsSpec proves code equality against the
-    * old SQL chain over the whole corpus.
+    * old SQL chain (now the specs' `Oracles.bucketsOfSql`) over the
+    * whole corpus.
     *
     * embeddings.parquet is a single file -> a single input partition;
     * the pinned repartition spreads the per-vector plane math over the
@@ -136,22 +124,6 @@ object Similarity {
       .select(col("vec_id"),
         posexplode(lshSignBuckets(col("embedding"), DIM, TABLES, NBITS, SEED))
           .as(Seq("tbl", "bucket")))
-
-  /** The pre-r16 exploded plane-join formulation — kept as the spec's
-    * equivalence oracle for [[bucketsOf]] (LshBucketsSpec proves the
-    * two produce identical (vec_id, tbl, bucket) sets).
-    */
-  private[graft] def bucketsOfSql(s: SparkSession, vecs: DataFrame): DataFrame =
-    vecs
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .join(planesDF(s), "dim")
-      .groupBy(col("vec_id"), col("tbl"), col("bit"))
-      .agg(sum((col("x").cast("double") * col("hval"))
-        .cast("decimal(18,12)")).as("dot"))
-      .groupBy(col("vec_id"), col("tbl"))
-      .agg(sum(when(col("dot") > 0,
-        expr("shiftleft(CAST(1 AS BIGINT), bit)")).otherwise(0L)).as("bucket"))
 
   def s02(s: SparkSession, d: String): DataFrame = {
     val idx = bucketsOf(s, embeddings(s, d))
@@ -232,7 +204,7 @@ object Similarity {
     * Self-norms are hoisted OUT of the vec × cid expansion (r16): each
     * was a 770-node unrolled dot re-evaluated per PAIR row — now once
     * per vector and once per centroid. The score is bit-identical:
-    * dotFixed is deterministic, so the hoisted values are the same
+    * vecDot is deterministic, so the hoisted values are the same
     * doubles the inline form produced, and sqrt(cnrm * vnrm) multiplies
     * the same two operands.
     */

@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Add
 import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, HyperLogLogPlusPlus, Percentile}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 
-import graft.functions.RollingFingerprint
+import graft.functions.{FloatVecDot, RollingFingerprint}
 import graft.operators.Relational
 
 /** GraftExtensions: SQL-registered functions + the ApproxAtScale rule.
@@ -39,18 +40,43 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("graft_dot from SQL is bit-equal to the Scala dotFixed operator") {
-    import graft.functions.VectorFunctions.dotFixed
     val emb = Tables.embeddings(spark, sfDir)
     emb.createOrReplaceTempView("ext_emb")
     // a SQL self-dot must produce the IDENTICAL doubles the operators
-    // compute — same fixed-order chain, same IEEE ops
-    val viaSql = spark.sql(
+    // compute — same fixed-order sum, same IEEE ops
+    val df = spark.sql(
       "SELECT vec_id, graft_dot(embedding, embedding, 64) AS d FROM ext_emb")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val bits = java.lang.Double.doubleToRawLongBits _
+    val viaSql = df.collect().map(r => r.getLong(0) -> bits(r.getDouble(1))).toMap
     val viaApi = emb.select(col("vec_id"),
-      dotFixed("embedding", "embedding", 64).as("d"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      Oracles.dotFixed("embedding", "embedding", 64).as("d"))
+      .collect().map(r => r.getLong(0) -> bits(r.getDouble(1))).toMap
     assert(viaSql.nonEmpty && viaSql == viaApi)
+    // the loop form, not the ~770-node unrolled chain
+    val exprs = df.queryExecution.analyzed.expressions
+    assert(exprs.map(_.collect { case d: FloatVecDot => d }.size).sum == 1)
+    assert(exprs.forall(_.collect { case a: Add => a }.isEmpty))
+  }
+
+  test("graft_dot reads decimal, short and byte arrays as the unrolled chain did") {
+    // FloatVecDot reads float/double/int/long; other numeric arrays are
+    // cast to array<double> first: the same per-element conversion
+    val df = spark.sql("""SELECT
+      array(CAST(1.25 AS DECIMAL(10,4)), CAST(-2.5 AS DECIMAL(10,4)), CAST(0.1 AS DECIMAL(10,4))) AS dec,
+      array(CAST(3 AS SMALLINT), CAST(-4 AS SMALLINT), CAST(5 AS SMALLINT)) AS sh,
+      array(CAST(7 AS TINYINT), CAST(8 AS TINYINT), CAST(-9 AS TINYINT)) AS by""")
+      .repartition(1)
+    for ((a, b) <- Seq("dec" -> "dec", "sh" -> "sh", "by" -> "by",
+        "dec" -> "sh", "sh" -> "by")) {
+      val r = df.selectExpr(s"graft_dot($a, $b, 3)").head().getDouble(0)
+      val want = df.select(Oracles.dotFixed(a, b, 3)).head().getDouble(0)
+      assert(java.lang.Double.doubleToRawLongBits(r) ==
+        java.lang.Double.doubleToRawLongBits(want), s"$a . $b: $r vs $want")
+    }
+    // non-numeric elements are rejected at analysis, naming the rule
+    val e = intercept[Exception](
+      spark.sql("SELECT graft_dot(array('a'), array('b'), 1)").collect())
+    assert(e.getMessage.contains("float_vec_dot needs two array<float|double|int|long>"))
   }
 
   test("ApproxAtScale is inert while spark.graft.approx is unset") {

@@ -98,4 +98,22 @@ class GraftConfSpec extends AnyFunSuite {
     assert(Bench.runsFor(1, Some(0.05), 0.3) === 1) // scale legs untouched
     assert(Bench.runsFor(2, Some(0.05), 0.3) === 2)
   }
+
+  test("the shared test session carries Bench's production confs, gate role") {
+    val c = SparkSpec.session.conf
+    assert(c.get("spark.master") === "local[4]")
+    assert(c.get("spark.sql.shuffle.partitions") === "4")
+    assert(c.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") ===
+      sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS",
+        GraftConf.initShufflePartitions(SparkSpec.sfDir, 4).toString))
+    assert(c.get("spark.sql.extensions") === "graft.GraftExtensions")
+    assert(c.get("spark.sql.session.timeZone") === "UTC")
+    assert(c.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(c.get("spark.sql.files.maxPartitionBytes") ===
+      sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "16m"))
+    assert(c.get("spark.sql.codegen.cache.maxEntries") === "2000")
+    // the one production conf the gate role leaves out: the specs
+    // assert on the determinism-only final sorts
+    assert(c.getOption("spark.graft.gateSort").isEmpty)
+  }
 }

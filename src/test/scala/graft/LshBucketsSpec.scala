@@ -17,7 +17,7 @@ class LshBucketsSpec extends SparkSpec {
   test("lshSignBuckets equals the exploded decimal plane-join chain, corpus-wide") {
     val e = Tables.embeddings(spark, sfDir)
     val fast = codes(Similarity.bucketsOf(spark, e))
-    val sql = codes(Similarity.bucketsOfSql(spark, e))
+    val sql = codes(Oracles.bucketsOfSql(spark, e))
     assert(fast.nonEmpty, "bucketing produced no rows")
     assert(fast == sql,
       s"bucket codes diverge: ${(fast diff sql).take(5)} vs ${(sql diff fast).take(5)}")
@@ -30,7 +30,7 @@ class LshBucketsSpec extends SparkSpec {
       .select(col("vec_id"), slice(concat(array(lit(9.5f)), col("embedding")), 2, 64)
         .as("embedding"))
     assert(codes(Similarity.bucketsOf(spark, e)) ==
-      codes(Similarity.bucketsOfSql(spark, e)))
+      codes(Oracles.bucketsOfSql(spark, e)))
   }
 
   test("interpreted eval matches codegen") {

@@ -208,26 +208,60 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("Bench's record gate never lets a dirtier run replace a cleaner record") {
+    val sf = "sf0.1"
+    // the pre-stamp gate: unstamped records keep exactly these rules
+    def rec(contended: Boolean, load1: Double, n: Int, total: Double,
+        existing: Option[String]): Boolean =
+      Bench.shouldRecord(contended, load1, n, total, 32, sf, existing)
     val clean = """{"contended":false,"loadavg_before":"0.59 1.2 1.5",""" +
       """"n_queries":124,"value":54.1}"""
     // anything records over nothing or over a contended record
-    assert(Bench.shouldRecord(contended = false, 0.5, 124, 50.0, None))
-    assert(Bench.shouldRecord(contended = true, 20.0, 124, 80.0, None))
-    assert(Bench.shouldRecord(contended = false, 2.0, 124, 55.0,
+    assert(rec(contended = false, 0.5, 124, 50.0, None))
+    assert(rec(contended = true, 20.0, 124, 80.0, None))
+    assert(rec(contended = false, 2.0, 124, 55.0,
       Some("""{"contended":true,"loadavg_before":"17.0","value":80.0}""")))
     // comparably-idle or faster runs refresh the record
-    assert(Bench.shouldRecord(contended = false, 1.4, 124, 55.0, Some(clean)))
-    assert(Bench.shouldRecord(contended = false, 4.0, 124, 53.0, Some(clean)))
+    assert(rec(contended = false, 1.4, 124, 55.0, Some(clean)))
+    assert(rec(contended = false, 4.0, 124, 53.0, Some(clean)))
     // the r7 failure mode: sub-cores/2 load but far dirtier than the
     // record, slower, same-ish suite — REFUSED now
-    assert(!Bench.shouldRecord(contended = false, 9.42, 124, 63.2, Some(clean)))
+    assert(!rec(contended = false, 9.42, 124, 63.2, Some(clean)))
     // a changed suite refreshes only from a near-idle machine
-    assert(Bench.shouldRecord(contended = false, 2.8, 130, 60.0, Some(clean)))
-    assert(!Bench.shouldRecord(contended = false, 9.42, 130, 63.2, Some(clean)))
+    assert(rec(contended = false, 2.8, 130, 60.0, Some(clean)))
+    assert(!rec(contended = false, 9.42, 130, 63.2, Some(clean)))
     // contended runs still never replace a clean record, stamp or not
-    assert(!Bench.shouldRecord(contended = true, 20.0, 124, 80.0, Some(clean)))
-    assert(!Bench.shouldRecord(contended = true, 20.0, 124, 80.0,
+    assert(!rec(contended = true, 20.0, 124, 80.0, Some(clean)))
+    assert(!rec(contended = true, 20.0, 124, 80.0,
       Some("""{"value":58.5}""")))
+  }
+
+  test("Bench's record gate never replaces a record across widths or SFs") {
+    val sf = "sf0.1"
+    val stamped = """{"contended":false,"loadavg_before":"0.59 1.2 1.5",""" +
+      s""""n_queries":124,"cpus":32,"sf":"$sf","value":54.1}"""
+    // same width and SF: the load/total rules apply as before
+    assert(Bench.shouldRecord(false, 0.5, 124, 50.0, 32, sf, Some(stamped)))
+    assert(!Bench.shouldRecord(false, 9.42, 124, 63.2, 32, sf, Some(stamped)))
+    // the bench_last.json bug: an 8-core leg, idle and faster, must not
+    // replace the 32-core record — nor the other way round
+    assert(!Bench.shouldRecord(false, 0.1, 124, 40.0, 8, sf, Some(stamped)))
+    assert(!Bench.shouldRecord(false, 0.1, 124, 40.0, 16, sf,
+      Some(stamped.replace("\"cpus\":32", "\"cpus\":8"))))
+    // another SF never replaces it either
+    assert(!Bench.shouldRecord(false, 0.1, 124, 4.0, 32,
+      "sf0.01", Some(stamped)))
+    // not even over a contended record of another width
+    val contended = stamped.replace("\"contended\":false", "\"contended\":true")
+    assert(Bench.shouldRecord(false, 0.1, 124, 40.0, 32, sf, Some(contended)))
+    assert(!Bench.shouldRecord(false, 0.1, 124, 40.0, 8, sf, Some(contended)))
+    // the record line Bench writes parses back: a real tail, as JSON
+    val line = """{"queries":{"a":1.0},"failed":[],"n_queries":124,""" +
+      """"loadavg_before":"4.86 4.59 4.37","degraded":false,""" +
+      s""""contended":false,"machine_cores":32,"cpus":32,"sf":"$sf",""" +
+      """"metric":"total","unit":"sec","value":86.2}"""
+    assert(!Bench.shouldRecord(false, 6.0, 124, 90.0, 32, sf, Some(line)))
+    assert(Bench.shouldRecord(false, 5.5, 124, 90.0, 32, sf, Some(line)))
+    assert(!Bench.shouldRecord(false, 0.1, 124, 40.0, 8, sf, Some(line)))
   }
 
   test("q35 trailing window equals a brute-force per-row recompute") {

@@ -292,14 +292,14 @@ class SimilaritySpec extends SparkSpec {
     // the vector leg's reference: s01's scoring shape with k = POOL
     val vecRanks = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") =!= Similarity.S09_Q)
-      .withColumn("nrm", graft.functions.VectorFunctions
+      .withColumn("nrm", Oracles
         .dotFixed("embedding", "embedding", 64))
       .crossJoin(broadcast(Tables.embeddings(spark, sfDir)
         .filter(col("vec_id") === Similarity.S09_Q)
         .select(col("embedding").as("qv"),
-          graft.functions.VectorFunctions
+          Oracles
             .dotFixed("embedding", "embedding", 64).as("qnrm"))))
-      .select(col("vec_id"), graft.functions.VectorFunctions
+      .select(col("vec_id"), Oracles
         .cosineFromNormsFixed("embedding", "qv", col("nrm"), col("qnrm"), 64)
         .as("cos"))
       .orderBy(col("cos").desc, col("vec_id")).limit(Similarity.S09_POOL)

@@ -9,26 +9,15 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
-  val sfDir = "/root/testdata/sf0.001"
+  val sfDir = SparkSpec.sfDir
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // mirror the driver mains' data-proportional shuffle width (see
-      // Bench) so every spec runs under the production AQE geometry —
-      // at spec scale the coalescer collapses it right back to ~1
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        "64")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val sfDir = "/root/testdata/sf0.001"
+
+  /** The production session (Bench.session) in its gate role: every
+    * spec runs under the confs the mains use, with the
+    * determinism-only final sorts on.
+    */
+  lazy val session: SparkSession = Bench.session(4, Seq(sfDir), gate = true)
 }

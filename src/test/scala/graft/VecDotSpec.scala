@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.functions.FloatVecDot
-import graft.functions.VectorFunctions.{dotFixed, vecDot}
+import graft.functions.VectorFunctions.vecDot
+import graft.Oracles.dotFixed
 
 /** FloatVecDot — the loop-codegen'd dot — must be BIT-identical to the
   * unrolled dotFixed chain (the oracle's sqlDotFixed mirrors that
@@ -58,5 +59,22 @@ class VecDotSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       FloatVecDot(lit(v.take(2)), lit(v), 4).eval(null)
     }
+  }
+
+  test("a sum of negative zeros keeps its sign, as the unrolled fold does") {
+    import spark.implicits._
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    // products -0.0 and -0.0: the unrolled chain adds them to -0.0; a
+    // loop started at +0.0 would return +0.0. repartition keeps the
+    // projection off the local-relation fold, so codegen runs it.
+    val r = Seq((Seq(-0.0f, 0.0f), Seq(1.0f, -1.0f))).toDF("a", "b")
+      .repartition(1)
+      .select(dotFixed("a", "b", 2), vecDot("a", "b", 2)).head()
+    assert(bits(r.getDouble(0)) == bits(-0.0))
+    assert(bits(r.getDouble(1)) == bits(-0.0))
+    val interp = FloatVecDot(
+      Literal.create(Seq(-0.0f, 0.0f), ArrayType(FloatType)),
+      Literal.create(Seq(1.0f, -1.0f), ArrayType(FloatType)), 2).eval(null)
+    assert(bits(interp.asInstanceOf[Double]) == bits(-0.0))
   }
 }

@@ -63,9 +63,9 @@ def uf_components(pairs):
 def emb_pairs_numpy(sf_dir):
     """d05's pair list (vec_a, vec_b, cosine) from embeddings.parquet,
     replaying the engines' EXACT arithmetic: per-dimension products
-    accumulated left-to-right in float64 (dotFixed/sqlDotFixed are flat
-    left-associated sums, and IEEE addition is reproducible for a fixed
-    order), raw-cosine threshold, THEN round to 6."""
+    accumulated left-to-right in float64 (FloatVecDot and sqlDotFixed
+    both sum left to right, and IEEE addition is reproducible for a
+    fixed order), raw-cosine threshold, THEN round to 6."""
     t = pd.read_parquet(f"{sf_dir}/embeddings.parquet")
     ids = t["vec_id"].to_numpy()
     labels = t["label"].to_numpy()
