@@ -3,9 +3,13 @@ package graft.sources
 import graft.Gate
 import graft.Tables._
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.json4s.{JArray, JInt, JLong, JObject, JString}
+import org.json4s.jackson.JsonMethods
 
 /** A replace-form commit (commitReplace / a compaction attempt) lost
   * its CAS race: a concurrent commit landed after this writer read the
@@ -30,9 +34,12 @@ final class SnapshotConflictException(msg: String)
   *
   *   root/data/w<token>/       immutable data files, one dir per commit
   *                              attempt (writer-unique name)
-  *   root/manifests/v<n>.json   the dir list visible at snapshot n —
-  *                              its EXCLUSIVE creation is the one
-  *                              commit point (optimistic concurrency)
+  *   root/dv/w<token>/         deletion-vector sidecars: (file, row)
+  *                              pairs of rows a commit removed
+  *   root/manifests/v<n>.json   the dirs, sidecars, schema and row
+  *                              counts of snapshot n (one json4s
+  *                              object) — its EXCLUSIVE creation is the
+  *                              one commit point (optimistic concurrency)
   *   root/HEAD                  hint to the current version; readers
   *                              probe manifests forward from it
   *
@@ -166,6 +173,7 @@ object Snapshots {
     // files can't be referenced by any DV (sidecars name (file, row)
     // pairs), and rows already deleted must STAY deleted
     val dataDir = writeData(s, root, df, None)
+    val added = rowsIn(s, Seq(dataDir))
     retryCommit(s, root) { v =>
       // the schema contract rebases per attempt too: the parent the
       // loser merges against is the RACE WINNER's committed schema. A
@@ -178,7 +186,8 @@ object Snapshots {
       val merged = parent.schema
         .orElse(inferredSchemaOf(s, root, v - 1, parent))
         .fold(df.schema)(p => mergeSchemas(p, df.schema))
-      (parent.dirs :+ dataDir, parent.dvs, Some(merged))
+      Manifest(parent.dirs :+ dataDir, parent.dvs, Some(merged),
+        Some(parent.counts(s).add(added, 0)))
     }
   }
 
@@ -205,8 +214,9 @@ object Snapshots {
   private[graft] def replaceAt(s: SparkSession, root: String, base: Int,
       df: DataFrame, maxRecordsPerFile: Option[Long]): Int = {
     val dataDir = writeData(s, root, df, maxRecordsPerFile)
-    if (tryPublishManifest(s, root, base + 1, Seq(dataDir), Seq.empty,
-        Some(df.schema))) base + 1
+    if (tryPublishManifest(s, root, base + 1, Manifest(Seq(dataDir),
+        Seq.empty, Some(df.schema), Some(Counts(rowsIn(s, Seq(dataDir)), 0)))))
+      base + 1
     else {
       // this dir was never referenced by any manifest: safe to drop
       // eagerly instead of waiting out vacuumOrphans' age horizon
@@ -279,21 +289,18 @@ object Snapshots {
     dataDir
   }
 
-  /** The optimistic-concurrency loop shared by every commit form
-    * (append / replace / [[deleteWhere]]'s data-free sidecar commit):
-    * derive the next version from the CURRENT head, publish its
-    * manifest exclusively; exactly one concurrent writer wins each
-    * version number — a loser re-invokes `manifestFor`, which re-reads
-    * the parent state (the rebase), and retries at the next version.
+  /** The optimistic-concurrency loop of an append: derive the next
+    * version from the CURRENT head, publish its manifest exclusively;
+    * exactly one concurrent writer wins each version number — a loser
+    * re-invokes `manifestFor`, which re-reads the parent state (the
+    * rebase), and retries at the next version.
     */
   private def retryCommit(s: SparkSession, root: String)
-      (manifestFor: Int => (Seq[String], Seq[String], Option[StructType]))
-      : Int = {
+      (manifestFor: Int => Manifest): Int = {
     var attempts = 0
     while (true) {
       val v = headVersion(s, root) + 1
-      val (dirs, dvs, schema) = manifestFor(v)
-      if (tryPublishManifest(s, root, v, dirs, dvs, schema)) return v
+      if (tryPublishManifest(s, root, v, manifestFor(v))) return v
       attempts += 1
       require(attempts < 64,
         s"commit contention at $root: lost $attempts CAS races")
@@ -308,23 +315,11 @@ object Snapshots {
     * true. On success the HEAD hint advances (best-effort).
     */
   private def tryPublishManifest(s: SparkSession, root: String, v: Int,
-      dirs: Seq[String], dvs: Seq[String],
-      schema: Option[StructType]): Boolean = {
+      m: Manifest): Boolean = {
     val f = fs(s, root)
-    def arr(ps: Seq[String]) = ps.map(p => "\"" + p + "\"").mkString(", ")
-    // manifest = explicit dir list (not "1..v" by convention) so a
-    // compaction/replace commit can swap file sets freely; "dvs" lists
-    // deletion-vector sidecars (absent = none, so every pre-DV
-    // manifest keeps parsing); "schema" pins the committed StructType
-    // (base64 of its canonical JSON — keeps the manifest grammar flat;
-    // absent on pre-contract manifests, which keep parsing)
-    val schemaField =
-      schema.fold("")(sc => s""", "schema": "${encodeSchema(sc)}"""")
-    val manifest =
-      s"""{"version": $v, "dirs": [${arr(dirs)}], "dvs": [${arr(dvs)}]$schemaField}"""
     val mTmp = new Path(s"$root/manifests/v$v.json.tmp-${token()}")
     val mFin = new Path(s"$root/manifests/v$v.json")
-    writeFile(f, mTmp, manifest)
+    writeFile(f, mTmp, m.toJson(v))
     val won = linkExclusive(f, mTmp, mFin)
     f.delete(mTmp, false)
     if (won) advanceHead(s, f, root, v)
@@ -424,13 +419,17 @@ object Snapshots {
     // manifests (no schema field) fall back to footer inference. Dirs,
     // sidecars and schema come from ONE manifest read, and the scan is
     // built once (one file-index listing).
-    val m = manifest(s, root, v)
+    live(s, manifest(s, root, v))
+  }
+
+  /** A manifest's live rows: its data scan minus its sidecars. */
+  private def live(s: SparkSession, m: Manifest): DataFrame = {
     val base = m.scan(s)
     if (m.dvs.isEmpty) base
     else {
       // merge-on-read: anti-join the (file, row-position) sidecar rows
       // out of the scan. Positions come from the parquet reader itself
-      // (_metadata.row_index — no stored row ids, no table rewrite);
+      // (_metadata.row_index — no stored row ids);
       // the scan side stays a plain pruned/pushed-down parquet scan.
       minusDvs(s,
         base.select(base.columns.map(col)
@@ -461,87 +460,155 @@ object Snapshots {
       fp: String, ri: String): DataFrame =
     if (dvs.isEmpty) scan
     else {
-      val dv = broadcast(s.read.schema(DV_SCHEMA).parquet(dvs: _*)
+      val dv = broadcast(s.read.schema(DV_SCHEMA).parquet(dvs.map(literal): _*)
         .select(col("file_path").as("_dv_fp"), col("row_index").as("_dv_ri")))
       scan.join(dv, col(fp) === col("_dv_fp") && col(ri) === col("_dv_ri"),
         "left_anti")
     }
 
-  /** Deletion-vector DELETE — the lakehouse merge-on-read delete: rows
-    * matching `cond` at HEAD are recorded as (file, row-position) pairs
-    * in a sidecar, and the commit is a new manifest referencing the SAME
-    * immutable data files plus the sidecar. No data file is rewritten —
-    * a delete of 100 rows in a 100 TB table costs one small parquet
-    * write — and pinned readers of older versions are untouched. The
-    * candidate scan runs over [[read]] (which already applies earlier
-    * sidecars), so re-deleting a dead row never double-records it.
-    * Physical purge stays [[compact]]'s job: it reads the DV-applied
-    * state and commits a REPLACE with no sidecars, materializing every
-    * outstanding delete (the erasure story: deleteWhere = instant
-    * logical removal, compact = the physical rewrite src11 does eagerly,
-    * on the operator's schedule).
+  /** What one row-removing commit takes out of HEAD's live rows:
+    * `doomed` selects them (the sidecar path records their positions),
+    * `kept` selects the rest (the rewrite path writes those). They are
+    * complements over the live rows; `kept` is spelled out because a
+    * predicate's complement is not its negation when it can be NULL.
     */
-  def deleteWhere(s: SparkSession, root: String,
-      cond: org.apache.spark.sql.Column): Int = {
+  private final case class Removal(doomed: DataFrame => DataFrame,
+      kept: DataFrame => DataFrame)
+
+  /** The MERGE removal: live rows whose key is among `keys` (no
+    * distinct — semi and anti joins ignore duplicate build keys).
+    */
+  private def byKeys(keys: DataFrame, keyCols: Seq[String]): Removal =
+    Removal(_.join(keys, keyCols, "left_semi"),
+      live => live.join(keys, keyCols, "left_anti")
+        .select(live.columns.map(col): _*))
+
+  /** The keys a merge wrote, read back from its data dir: the source is
+    * evaluated once, so even a nondeterministic source removes exactly
+    * the keys it appended.
+    */
+  private def keysOf(s: SparkSession, dataDir: String, schema: StructType,
+      keyCols: Seq[String]): DataFrame =
+    s.read.schema(schema).parquet(literal(dataDir)).select(keyCols.map(col): _*)
+
+  /** THE commit loop of every verb that removes rows ([[deleteWhere]],
+    * [[mergeInto]], [[mergeIntoVersioned]]) and the one place the debt
+    * rule ([[Counts.due]]) picks how the removal lands:
+    *
+    *  - debt not due: a sidecar of the doomed rows' (file, row)
+    *    positions, over HEAD's unchanged data dirs (merge-on-read);
+    *  - debt due: HEAD's live rows minus the doomed ones, written as one
+    *    new data dir that replaces every dir and sidecar of HEAD.
+    *
+    * Either way the commit's own data dir (if any) joins the SAME
+    * manifest publish, so the verb stays one version. `edit` runs per
+    * attempt against the head the CAS asserts and returns that dir, the
+    * removal and the schema to pin; with `ownsAdded` the dir was written
+    * per attempt and a failed or lost attempt deletes it. A lost CAS race
+    * deletes this attempt's sidecar or rewritten dir and re-decides from
+    * the new head (a concurrent compaction remaps positions, a concurrent
+    * delete changes what is dead). The counts come from the parent's
+    * plus the footers of the files this commit wrote: no Spark job.
+    */
+  private def commitRemoving(s: SparkSession, root: String, op: String,
+      ownsAdded: Boolean)
+      (edit: (Int, Manifest) => (Option[String], Removal, Option[StructType]))
+      : Int = {
     val f = fs(s, root)
     var attempts = 0
     while (true) {
       val head = headVersion(s, root)
-      require(head > 0, s"no snapshot at $root")
+      require(head > 0, s"no snapshot at $root — bootstrap with commit()")
       val m = manifest(s, root, head)
-      val dvDir = s"$root/dv/w${token()}"
-      // the candidate scan carries its own positions (_metadata is a
-      // scan column, not a join output), with earlier sidecars
-      // anti-joined out (minusDvs — read()'s one rule) so an
-      // already-deleted row never double-records
-      val scan = m.scan(s)
-        .select(col("_metadata.file_path").as("file_path"),
-          col("_metadata.row_index").as("row_index"), col("*"))
-      minusDvs(s, scan, m.dvs, "file_path", "row_index")
-        .filter(cond).select("file_path", "row_index")
-        .write.mode("overwrite").parquet(dvDir)
-      // a delete changes no columns: the parent's committed schema
-      // carries forward verbatim
-      if (tryPublishManifest(s, root, head + 1,
-          m.dirs, m.dvs :+ dvDir, m.schema)) return head + 1
-      // lost the CAS race: this sidecar was computed against a
-      // superseded head — discard it and recompute against the new
-      // state (a concurrent replace/compact can remap (file, row)
-      // positions; a concurrent delete changes what is already dead)
-      f.delete(new Path(dvDir), true)
+      val debt = m.counts(s)
+      val (added, removal, schema) = edit(head, m)
+      def dropAdded(): Unit =
+        if (ownsAdded) added.foreach(d => f.delete(new Path(d), true))
+      val out = s"$root/${if (debt.due) "data" else "dv"}/w${token()}"
+      val next =
+        try {
+          val addedRows = rowsIn(s, added.toSeq)
+          if (debt.due) {
+            removal.kept(live(s, m)).write.mode("overwrite").parquet(out)
+            Manifest(out +: added.toSeq, Seq.empty, schema,
+              Some(Counts(rowsIn(s, Seq(out)) + addedRows, 0)))
+          } else {
+            // the candidate scan carries its own positions (_metadata is
+            // a scan column, not a join output), with earlier sidecars
+            // anti-joined out so an already-dead row never re-records
+            val scan = m.scan(s)
+              .select(col("_metadata.file_path").as("_graft_fp"),
+                col("_metadata.row_index").as("_graft_ri"), col("*"))
+            removal.doomed(minusDvs(s, scan, m.dvs, "_graft_fp", "_graft_ri"))
+              .select(col("_graft_fp").as("file_path"),
+                col("_graft_ri").as("row_index"))
+              .write.mode("overwrite").parquet(out)
+            Manifest(m.dirs ++ added, m.dvs :+ out, schema,
+              Some(debt.add(addedRows, rowsIn(s, Seq(out)))))
+          }
+        } catch { case t: Throwable => dropAdded(); throw t }
+      if (tryPublishManifest(s, root, head + 1, next)) return head + 1
+      f.delete(new Path(out), true)
+      dropAdded()
       attempts += 1
       require(attempts < 64,
-        s"deleteWhere contention at $root: lost $attempts CAS races")
+        s"$op contention at $root: lost $attempts CAS races")
     }
     -1 // unreachable
   }
 
+  /** DELETE — rows matching `cond` at HEAD leave the table in one
+    * commit, without touching any file an older version lists. While the
+    * table's dead rows are fewer than its live ones the delete is
+    * merge-on-read: a sidecar of the rows' (file, row-position) pairs
+    * over the SAME immutable data files, so deleting 100 rows from a
+    * large table costs one small parquet write. Once dead rows reach
+    * the live count, the delete instead writes the rows it keeps as one
+    * new data dir and drops every sidecar ([[commitRemoving]]): each
+    * rewrite costs at most one written row per dead row, and no sidecar
+    * lands on a HEAD that scans twice its live rows, however many merges
+    * and deletes the table has taken. The commit that adds a sidecar can
+    * still overshoot: a merge leaves HEAD scanning under twice its live
+    * rows plus the rows it replaced, and a delete that removes most
+    * rows leaves more dead than live rows until the next row-removing
+    * commit rewrites them. Rows where `cond` is NULL
+    * stay, as SQL's DELETE keeps them. Pinned readers of older versions
+    * are untouched either way. The erasure story: deleteWhere removes a
+    * row from HEAD at once; its bytes leave the files HEAD lists at the
+    * next rewrite (or an explicit [[compact]]); [[vacuum]] then destroys
+    * the historical files that still hold it.
+    */
+  def deleteWhere(s: SparkSession, root: String, cond: Column): Int =
+    // a delete changes no columns: the parent's committed schema
+    // carries forward verbatim
+    commitRemoving(s, root, "deleteWhere", ownsAdded = false) { (_, m) =>
+      (None, Removal(_.filter(cond), _.filter(!coalesce(cond, lit(false)))),
+        m.schema)
+    }
+
   /** MERGE INTO — latest-wins upsert as ONE atomic commit: table rows
-    * whose merge key appears in `source` are deleted via a
-    * deletion-vector sidecar (merge-on-read: no data file rewrites),
-    * and the whole `source` appends as a new data dir — BOTH listed by
-    * the same manifest publish, so a reader sees the pre-merge or the
-    * fully-merged state, never an intermediate. That single commit
-    * point is what a deleteWhere-then-commit pair cannot give: a crash
-    * between the two leaves matched rows deleted with their
-    * replacements never landed, and a concurrent reader in the window
-    * sees the table with the matched rows simply GONE. Matched →
-    * replace, not-matched → insert (the Delta/Iceberg MERGE in its
-    * latest-wins form — [[RoundTrip.src08]] is the read-time view of
-    * the same rule, [[commitReplace]] the full-rewrite form). The
-    * source must carry at most one row per key (both would survive the
-    * merge — refused loudly, src08's documented contract). The CAS
-    * retry recomputes the sidecar against the new head (a concurrent
-    * compaction remaps (file, row) positions); the data dir is written
-    * ONCE, outside the loop, and `source` is evaluated exactly once:
-    * the matched-key set is read back from the data dir just written
-    * (keys from the written dir), so a nondeterministic source deletes
-    * exactly the keys it appended. No distinct: a left-semi join
-    * ignores duplicate build keys. At 100 TB: cost = one key-column
-    * scan of the table (pruned to the merge keys + _metadata) +
-    * |source| written — never a table rewrite; the written key set is
-    * small in the nightly-delta case, so it broadcasts and the table
-    * key scan is not shuffled.
+    * whose merge key appears in `source` are removed and the whole
+    * `source` appends as a new data dir, BOTH listed by the same
+    * manifest publish, so a reader sees the pre-merge or the fully-
+    * merged state, never an intermediate. That single commit point is
+    * what a deleteWhere-then-commit pair cannot give: a crash between
+    * the two leaves matched rows deleted with their replacements never
+    * landed. Matched → replace, not-matched → insert (the Delta/Iceberg
+    * MERGE in its latest-wins form — [[RoundTrip.src08]] is the
+    * read-time view of the same rule, [[commitReplace]] the full-rewrite
+    * form). The source must carry at most one row per key (both would
+    * survive the merge — refused loudly, src08's documented contract).
+    *
+    * The removal follows [[deleteWhere]]'s bound: a sidecar while dead
+    * rows are fewer than live ones, else a rewrite of the live rows the
+    * merge does not replace into one dir, in the same commit. The data
+    * dir is written ONCE, outside the CAS loop, and `source` is
+    * evaluated exactly once: the matched keys are read back from the
+    * written dir. Cost per merge: one key-column scan of the table (or,
+    * when the debt is due, one rewrite of the live rows — amortized at
+    * most one row per row the merges before it removed) + |source|
+    * written. The written key set is small in the nightly-delta case,
+    * so it broadcasts and the table scan is not shuffled.
     */
   def mergeInto(s: SparkSession, root: String, source: DataFrame,
       keyCols: Seq[String]): Int = {
@@ -552,40 +619,10 @@ object Snapshots {
     val dataDir =
       try writeData(s, root, dupValidated(source, keyCols, "mergeInto"), None)
       catch { case t: Throwable => rethrowDup(t) }
-    val keys = s.read.schema(source.schema).parquet(dataDir)
-      .select(keyCols.map(col): _*)
-    val f = fs(s, root)
-    var attempts = 0
-    while (true) {
-      val head = headVersion(s, root)
-      require(head > 0, s"no snapshot at $root — bootstrap with commit()")
-      val m = manifest(s, root, head)
-      val dvDir = s"$root/dv/w${token()}"
-      // matched rows = semi-join of the live table (earlier sidecars
-      // anti-joined out, so an already-deleted row never double-
-      // records) against the written keys, pruned to keys + positions
-      val scan = m.scan(s)
-        .select(col("_metadata.file_path").as("file_path")
-          +: col("_metadata.row_index").as("row_index")
-          +: keyCols.map(col): _*)
-      minusDvs(s, scan, m.dvs, "file_path", "row_index")
-        .join(keys, keyCols, "left_semi")
-        .select("file_path", "row_index")
-        .write.mode("overwrite").parquet(dvDir)
-      // same contract rule as commit(): merge against the parent's
-      // committed (or, pre-contract, inferred) schema
-      val merged = m.schema
-        .orElse(inferredSchemaOf(s, root, head, m))
-        .fold(source.schema)(p => mergeSchemas(p, source.schema))
-      if (tryPublishManifest(s, root, head + 1,
-          m.dirs :+ dataDir, m.dvs :+ dvDir, Some(merged)))
-        return head + 1
-      f.delete(new Path(dvDir), true)
-      attempts += 1
-      require(attempts < 64,
-        s"mergeInto contention at $root: lost $attempts CAS races")
+    val removal = byKeys(keysOf(s, dataDir, source.schema, keyCols), keyCols)
+    commitRemoving(s, root, "mergeInto", ownsAdded = false) { (head, m) =>
+      (Some(dataDir), removal, Some(mergedSchema(s, root, head, m, source)))
     }
-    -1 // unreachable
   }
 
   /** Versioned MERGE — [[mergeInto]] for OUT-OF-ORDER feeds: a matched
@@ -600,62 +637,47 @@ object Snapshots {
     * mergeInto (and st17) rely on. The table must be key-unique (any
     * table maintained by merges from a key-unique base is). Unlike
     * mergeInto, the winning-rows data dir depends on the head it was
-    * computed against, so it is (re)written inside the CAS loop and a
-    * loser's dir is deleted with its sidecar — still |source|-sized
-    * work per attempt, never a table rewrite.
+    * computed against, so it is (re)written per CAS attempt and a lost
+    * attempt deletes it. The winners' keys, read back from that dir,
+    * are what the commit removes — by sidecar or by rewrite, under
+    * [[deleteWhere]]'s bound on dead rows.
     */
   def mergeIntoVersioned(s: SparkSession, root: String, source: DataFrame,
       keyCols: Seq[String], versionCol: String): Int = {
     require(keyCols.nonEmpty, "mergeIntoVersioned needs a key column")
     require(!keyCols.contains(versionCol),
       s"'$versionCol' cannot be both merge key and version")
-    val f = fs(s, root)
-    var attempts = 0
-    while (true) {
-      val head = headVersion(s, root)
-      require(head > 0, s"no snapshot at $root — bootstrap with commit()")
-      val m = manifest(s, root, head)
-      val scan = m.scan(s)
-        .select(col("_metadata.file_path").as("file_path")
-          +: col("_metadata.row_index").as("row_index")
-          +: col(versionCol).as("_tgt_v")
-          +: keyCols.map(col): _*)
-      val live = minusDvs(s, scan, m.dvs, "file_path", "row_index")
-      val matched = live.join(
-        source.select(keyCols.map(col) :+ col(versionCol).as("_src_v"): _*),
-        keyCols)
-      val losers = matched.filter(col("_src_v") < col("_tgt_v"))
-        .select(keyCols.map(col): _*)
-      // winning rows FIRST: the dup refusal rides this write
-      // (dupValidated — duplicate source keys must be refused before
-      // any sidecar lands; reduce to the max-version row per key
-      // upstream), and every source row is checked because the
-      // anti-join consumes its full probe side
-      val dataDir =
-        try writeData(s, root,
-          dupValidated(source, keyCols, "mergeIntoVersioned")
-            .join(losers, keyCols, "left_anti"), None)
-        catch { case t: Throwable => rethrowDup(t) }
-      val dvDir = s"$root/dv/w${token()}"
-      try matched.filter(col("_src_v") >= col("_tgt_v"))
-        .select("file_path", "row_index")
-        .write.mode("overwrite").parquet(dvDir)
-      catch { case t: Throwable =>
-        f.delete(new Path(dataDir), true); throw t }
-      val merged = m.schema
-        .orElse(inferredSchemaOf(s, root, head, m))
-        .fold(source.schema)(p => mergeSchemas(p, source.schema))
-      if (tryPublishManifest(s, root, head + 1,
-          m.dirs :+ dataDir, m.dvs :+ dvDir, Some(merged)))
-        return head + 1
-      f.delete(new Path(dvDir), true)
-      f.delete(new Path(dataDir), true)
-      attempts += 1
-      require(attempts < 64,
-        s"mergeIntoVersioned contention at $root: lost $attempts CAS races")
+    commitRemoving(s, root, "mergeIntoVersioned", ownsAdded = true) {
+      (head, m) =>
+        // the schema check first: a refused type fork leaves no dir
+        val schema = mergedSchema(s, root, head, m, source)
+        val losers = live(s, m)
+          .select(keyCols.map(col) :+ col(versionCol).as("_tgt_v"): _*)
+          .join(source.select(
+            keyCols.map(col) :+ col(versionCol).as("_src_v"): _*), keyCols)
+          .filter(col("_src_v") < col("_tgt_v"))
+          .select(keyCols.map(col): _*)
+        // the dup refusal rides this write (dupValidated — reduce to the
+        // max-version row per key upstream); every source row is checked
+        // because the anti-join consumes its full probe side
+        val dataDir =
+          try writeData(s, root,
+            dupValidated(source, keyCols, "mergeIntoVersioned")
+              .join(losers, keyCols, "left_anti"), None)
+          catch { case t: Throwable => rethrowDup(t) }
+        (Some(dataDir),
+          byKeys(keysOf(s, dataDir, source.schema, keyCols), keyCols),
+          Some(schema))
     }
-    -1 // unreachable
   }
+
+  /** Same contract rule as commit(): a merge's source merges against the
+    * parent's committed (or, pre-contract, inferred) schema.
+    */
+  private def mergedSchema(s: SparkSession, root: String, head: Int,
+      m: Manifest, source: DataFrame): StructType =
+    m.schema.orElse(inferredSchemaOf(s, root, head, m))
+      .fold(source.schema)(p => mergeSchemas(p, source.schema))
 
   /** Oldest version whose manifest is still resolvable — the retention
     * floor [[vacuum]] leaves behind (head+1 when nothing is committed).
@@ -673,28 +695,109 @@ object Snapshots {
 
   /** One version's manifest, parsed from ONE read: the data dirs
     * (v0 = the empty table — the bootstrap anchor for
-    * [[changesBetween]]), the deletion-vector sidecar dirs (absent key
-    * = none — pre-DV manifests parse unchanged) and the committed
-    * schema (None on v0 and on pre-contract manifests).
+    * [[changesBetween]]), the deletion-vector sidecar dirs, the
+    * committed schema and the row [[Counts]]. Every key but "dirs" is
+    * optional, so manifests written before sidecars, before the schema
+    * contract or before counts parse unchanged (None / empty).
     */
   private[graft] final case class Manifest(dirs: Seq[String],
-      dvs: Seq[String], schema: Option[StructType]) {
+      dvs: Seq[String], schema: Option[StructType],
+      recorded: Option[Counts]) {
     /** The version's data scan, read with the pinned schema when there
       * is one (no footer-inference job); pre-contract manifests infer.
       */
     def scan(s: SparkSession): DataFrame =
-      schema.fold(s.read)(sc => s.read.schema(sc)).parquet(dirs: _*)
+      schema.fold(s.read)(sc => s.read.schema(sc)).parquet(dirs.map(literal): _*)
+
+    /** The recorded counts; a manifest written before counts existed
+      * gets them from the footers of its own files (the next commit
+      * records them, so that happens once per legacy head).
+      */
+    def counts(s: SparkSession): Counts =
+      recorded.getOrElse(Counts(rowsIn(s, dirs), rowsIn(s, dvs)))
+
+    /** One JSON object, written with json4s: any character a path may
+      * hold (`]`, `"`, a space) round-trips. The schema stays base64 of
+      * its canonical JSON, the form every earlier manifest carries.
+      */
+    def toJson(version: Int): String =
+      JsonMethods.compact(JsonMethods.render(JObject(List(
+        "version" -> JInt(version),
+        "dirs" -> JArray(dirs.map(JString(_)).toList),
+        "dvs" -> JArray(dvs.map(JString(_)).toList)) ++
+        schema.map(sc => "schema" -> JString(java.util.Base64.getEncoder
+          .encodeToString(sc.json.getBytes("UTF-8")))) ++
+        recorded.toList.flatMap(c =>
+          List("rows" -> JLong(c.rows), "dead" -> JLong(c.dead))))))
   }
 
-  private[graft] def manifest(s: SparkSession, root: String, v: Int)
-      : Manifest = {
-    val m = manifestOf(s, root, v)
-    Manifest(arrayOf(m, "dirs"), arrayOf(m, "dvs"),
-      stringOf(m, "schema").map(b64 =>
-        org.apache.spark.sql.types.DataType.fromJson(
-          new String(java.util.Base64.getDecoder.decode(b64), "UTF-8"))
-          .asInstanceOf[StructType]))
+  private[graft] object Manifest {
+    def parse(json: String): Manifest = {
+      val m = JsonMethods.parse(json)
+      def strings(key: String): Seq[String] = m \ key match {
+        case JArray(xs) => xs.collect { case JString(p) => p }
+        case _ => Seq.empty
+      }
+      def long(key: String): Option[Long] = m \ key match {
+        case JInt(n) => Some(n.toLong)
+        case _ => None
+      }
+      Manifest(strings("dirs"), strings("dvs"),
+        m \ "schema" match {
+          case JString(b64) => Some(org.apache.spark.sql.types.DataType
+            .fromJson(new String(java.util.Base64.getDecoder.decode(b64),
+              "UTF-8")).asInstanceOf[StructType])
+          case _ => None
+        },
+        for (r <- long("rows"); d <- long("dead")) yield Counts(r, d))
+    }
   }
+
+  /** A version's merge-on-read debt: `rows` physical rows across its
+    * data dirs, `dead` of them named by its sidecars. Sidecar pairs are
+    * unique (every candidate scan anti-joins the earlier sidecars out
+    * first), so `rows - dead` is the live row count.
+    */
+  private[graft] final case class Counts(rows: Long, dead: Long) {
+    def live: Long = rows - dead
+    def add(rows: Long, dead: Long): Counts =
+      Counts(this.rows + rows, this.dead + dead)
+    /** THE rewrite rule: once dead rows match live ones, the next
+      * row-removing commit rewrites the live rows instead of adding a
+      * sidecar. A rewrite writes at most one row per dead row, and no
+      * sidecar lands on a HEAD that already scans twice its live rows
+      * — the array-doubling amortization, so the ratio is a constant,
+      * not a setting. [[deleteWhere]] states what one commit can add.
+      */
+    def due: Boolean = dead >= live
+  }
+
+  /** Rows across the parquet files of `dirs`, summed from their footers
+    * on the driver: no Spark job.
+    */
+  private def rowsIn(s: SparkSession, dirs: Seq[String]): Long = {
+    val conf = s.sparkContext.hadoopConfiguration
+    dirs.iterator.flatMap { d =>
+      val p = new Path(d)
+      p.getFileSystem(conf).listStatus(p).iterator
+    }.filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
+  /** A path as Spark's reader takes it literally: the reader expands
+    * glob patterns, so a root holding `[1]` or `{a}` would match other
+    * paths (or none). Backslash-escaping the metacharacters keeps it
+    * one literal path.
+    */
+  private def literal(path: String): String =
+    path.flatMap(c => if ("\\[]{}*?".indexOf(c) >= 0) s"\\$c" else c.toString)
+
+  private[graft] def manifest(s: SparkSession, root: String, v: Int)
+      : Manifest =
+    if (v == 0) Manifest(Seq.empty, Seq.empty, None, Some(Counts(0, 0)))
+    else Manifest.parse(manifestOf(s, root, v))
 
   private[graft] def dirsOf(s: SparkSession, root: String, v: Int)
       : Seq[String] = manifest(s, root, v).dirs
@@ -703,7 +806,6 @@ object Snapshots {
       : Seq[String] = manifest(s, root, v).dvs
 
   private def manifestOf(s: SparkSession, root: String, v: Int): String = {
-    if (v == 0) return """{"dirs": []}"""
     val f = fs(s, root)
     val mp = new Path(s"$root/manifests/v$v.json")
     // loud, actionable failure — never a partial scan: a reader pinned
@@ -726,9 +828,6 @@ object Snapshots {
     if (m.dirs.isEmpty) None
     else Some(read(s, root, Some(v)).schema)
 
-  private def encodeSchema(sc: StructType): String =
-    java.util.Base64.getEncoder.encodeToString(sc.json.getBytes("UTF-8"))
-
   /** THE append compatibility rule: columns shared with the committed
     * schema must keep their exact type (a silent type fork would make
     * the same column read differently per file — rejected loudly; a
@@ -750,25 +849,6 @@ object Snapshots {
     }
     val known = parent.fieldNames.toSet
     StructType(parent.fields ++ next.fields.filterNot(f => known(f.name)))
-  }
-
-  /** The quoted string value of a flat manifest key (None when the
-    * key is absent — optional fields stay backward compatible).
-    */
-  private def stringOf(manifest: String, key: String): Option[String] =
-    ("\"" + key + "\"\\s*:\\s*\"([^\"]*)\"").r
-      .findFirstMatchIn(manifest).map(_.group(1))
-
-  /** The quoted strings of the named JSON array (the manifest grammar
-    * is ours and flat, so a keyed scan is exact).
-    */
-  private def arrayOf(manifest: String, key: String): Seq[String] = {
-    val k = manifest.indexOf("\"" + key + "\"")
-    if (k < 0) return Seq.empty
-    val start = manifest.indexOf('[', k)
-    val end = manifest.indexOf(']', start)
-    "\"([^\"]+)\"".r.findAllMatchIn(manifest.substring(start, end + 1))
-      .map(_.group(1)).toSeq
   }
 
   /** Incremental read — the change feed between two committed versions,
@@ -798,7 +878,7 @@ object Snapshots {
         "express — read the versions and diff by the writer's key instead")
     val added = target.filterNot(base)
     if (added.isEmpty) s.emptyDataFrame
-    else s.read.parquet(added: _*)
+    else s.read.parquet(added.map(literal): _*)
   }
 
   /** All committed versions, ascending. */
@@ -818,8 +898,12 @@ object Snapshots {
     * the half-written writer-unique dir is an invisible orphan
     * [[vacuumOrphans]] sweeps. Reads the DV-APPLIED state and commits with no
     * sidecars, so compaction also materializes every outstanding
-    * [[deleteWhere]] — the physical-purge half of the erasure story.
-    * Returns the new version.
+    * [[deleteWhere]] at once. It is not what bounds the sidecars: the
+    * row-removing verbs already rewrite the live rows once dead rows
+    * reach the live count ([[deleteWhere]] states the bound).
+    * Compaction is for layout (clustering, fewer
+    * dirs and files) and for purging removed rows' bytes from HEAD's
+    * files before that bound would. Returns the new version.
     */
   def compact(s: SparkSession, root: String, clusterBy: Seq[String],
       maxRecordsPerFile: Long = 1000000): Int = {

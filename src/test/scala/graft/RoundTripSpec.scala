@@ -976,6 +976,157 @@ class RoundTripSpec extends SparkSpec {
     assert(first <= 4, s"first mergeInto ran $first jobs")
     assert(second <= 5, s"mergeInto over sidecars ran $second jobs")
     assert(read <= 2, s"Snapshots.read with sidecars ran $read jobs")
+    // both merges stayed on the sidecar path: before the second, dead
+    // (1) was below live (3)
+    assert(Snapshots.manifest(spark, root, 2).recorded ==
+      Some(Snapshots.Counts(4, 1)))
+    assert(Snapshots.dvDirsOf(spark, root, 3).size == 2)
+  }
+
+  test("snapshots MERGE: once dead rows reach live ones, the next merge rewrites in the same commit") {
+    import graft.sources.Snapshots
+    import org.apache.spark.JobCount
+    import spark.implicits._
+    val root = s"${graft.Scratch.dir}/snap_merge_rewrite"
+    val fsys = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
+    def rows(v: Option[Int] = None): Set[(Long, String)] =
+      Snapshots.read(spark, root, v).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+    Snapshots.commit(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
+    assert(Snapshots.manifest(spark, root, 1).recorded ==
+      Some(Snapshots.Counts(2, 0)))
+    // v2 replaces both rows by sidecar: 4 rows, 2 dead, 2 live — due
+    assert(Snapshots.mergeInto(spark, root,
+      Seq((1L, "A"), (2L, "B")).toDF("id", "tag"), Seq("id")) == 2)
+    assert(Snapshots.manifest(spark, root, 2).recorded ==
+      Some(Snapshots.Counts(4, 2)))
+    val merge = JobCount(spark.sparkContext) {
+      assert(Snapshots.mergeInto(spark, root,
+        Seq((2L, "C"), (3L, "c")).toDF("id", "tag"), Seq("id")) == 3)
+    }
+    // ONE version: the kept live rows and the merge's own dir, no
+    // sidecar, no dir of v2 left in HEAD, and the counts restart
+    val m3 = Snapshots.manifest(spark, root, 3)
+    assert(m3.dvs.isEmpty && m3.dirs.size == 2, m3.toString)
+    assert(m3.dirs.toSet.intersect(Snapshots.dirsOf(spark, root, 2).toSet)
+      .isEmpty)
+    assert(m3.recorded == Some(Snapshots.Counts(3, 0)))
+    var got = Set.empty[(Long, String)]
+    val read = JobCount(spark.sparkContext) { got = rows() }
+    assert(got == Set((1L, "A"), (2L, "C"), (3L, "c")))
+    val plan = Snapshots.read(spark, root).queryExecution.executedPlan.toString
+    assert(!plan.contains("LeftAnti") && !plan.contains("Broadcast"),
+      s"a rewritten HEAD still anti-joins sidecars:\n$plan")
+    // history is untouched
+    assert(rows(Some(2)) == Set((1L, "A"), (2L, "B")))
+    assert(rows(Some(1)) == Set((1L, "a"), (2L, "b")))
+    // measured shape at this Spark version. The rewrite merge runs 5
+    // jobs: the data write (AQE window-shuffle job + write job, the dup
+    // check riding it) and the kept-rows write (the sidecar broadcast
+    // of HEAD's read, the broadcast of the key set read back from the
+    // written dir, and the write job). The read after it runs its
+    // action only: no sidecar broadcast is left to build.
+    assert(merge <= 5, s"rewrite mergeInto ran $merge jobs")
+    assert(read <= 1, s"Snapshots.read after a rewrite ran $read jobs")
+  }
+
+  test("snapshots manifest: a root holding [1], a quote and a space keeps every dir") {
+    import graft.sources.Snapshots
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val root = s"${graft.Scratch.dir}/snap odd \"q\" t[1]"
+    val fsys = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
+    val ids = spark.range(0, 20, 1, 2).select(col("id"), lit("a").as("tag"))
+    assert(Snapshots.commit(spark, root, ids.filter(col("id") < 10)) == 1)
+    assert(Snapshots.commit(spark, root, ids.filter(col("id") >= 10)) == 2)
+    assert(Snapshots.dirsOf(spark, root, 2).size == 2)
+    assert(Snapshots.dirsOf(spark, root, 2).forall(_.startsWith(root)))
+    assert(Snapshots.read(spark, root).count() == 20)
+    assert(Snapshots.read(spark, root, Some(1)).count() == 10)
+    assert(Snapshots.changesBetween(spark, root, 1, 2).count() == 10)
+    // sidecars and merge keys are read back from under the same root
+    assert(Snapshots.deleteWhere(spark, root, col("id") % 5 === 0) == 3)
+    assert(Snapshots.mergeInto(spark, root,
+      Seq((1L, "b"), (30L, "c")).toDF("id", "tag"), Seq("id")) == 4)
+    val live = Snapshots.read(spark, root).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(live.size == 17 && live(1L) == "b" && live(30L) == "c" &&
+      !live.contains(5L))
+    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
+  }
+
+  test("snapshots: a table with file_path and row_index columns deletes and merges by them") {
+    import graft.sources.Snapshots
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = s"${graft.Scratch.dir}/snap_position_names"
+    val fsys = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
+    // the sidecar scan adds the parquet positions beside the table's own
+    // columns; same-named table columns must stay the ones a condition
+    // or a merge key names
+    Snapshots.commit(spark, root, Seq((1L, "a", 10L), (2L, "b", 20L),
+      (3L, "c", 30L)).toDF("id", "file_path", "row_index"))
+    assert(Snapshots.deleteWhere(spark, root, col("file_path") === "b") == 2)
+    assert(Snapshots.mergeInto(spark, root,
+      Seq((9L, "c", 31L)).toDF("id", "file_path", "row_index"),
+      Seq("file_path")) == 3)
+    val got = Snapshots.read(spark, root).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(got == Set((1L, "a", 10L), (9L, "c", 31L)))
+  }
+
+  test("snapshots manifest: pre-change manifests parse unchanged; counts come from footers once") {
+    import graft.sources.Snapshots
+    import graft.sources.Snapshots.{Counts, Manifest}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val sc = StructType(Seq(StructField("id", LongType),
+      StructField("tag", StringType)))
+    val b64 = java.util.Base64.getEncoder
+      .encodeToString(sc.json.getBytes("UTF-8"))
+    // verbatim forms earlier writers published
+    assert(Manifest.parse("""{"version": 3, "dirs": ["/t/data/wa", "/t/data/wb"]}""")
+      == Manifest(Seq("/t/data/wa", "/t/data/wb"), Seq.empty, None, None))
+    assert(Manifest.parse(
+      """{"version": 2, "dirs": ["/t/data/wa"], "dvs": ["/t/dv/wc"]}""")
+      == Manifest(Seq("/t/data/wa"), Seq("/t/dv/wc"), None, None))
+    assert(Manifest.parse(
+      s"""{"version": 4, "dirs": ["/t/data/wa"], "dvs": [], "schema": "$b64"}""")
+      == Manifest(Seq("/t/data/wa"), Seq.empty, Some(sc), None))
+    // the current form round-trips any path character
+    val odd = Manifest(Seq("/t [1]/\"q\"/data/wa", "/t/data/w]"),
+      Seq("/t/dv/w,\\"), Some(sc), Some(Counts(5, 2)))
+    assert(Manifest.parse(odd.toJson(7)) == odd)
+    // a table whose manifests are in the pre-count form reads as before,
+    // and its next commit records counts taken from the footers
+    val root = s"${graft.Scratch.dir}/snap_legacy_counts"
+    val fsys = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
+    Snapshots.commit(spark, root,
+      (1L to 6L).map(i => (i, "a")).toDF("id", "tag").coalesce(2))
+    Snapshots.deleteWhere(spark, root, col("id") <= 2L)
+    def q(ps: Seq[String]) = ps.map(p => "\"" + p + "\"").mkString(", ")
+    Seq(1, 2).foreach { v =>
+      val m = Snapshots.manifest(spark, root, v)
+      val old = s"""{"version": $v, "dirs": [${q(m.dirs)}], "dvs": [${q(m.dvs)}], "schema": "$b64"}"""
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$root/manifests/v$v.json"),
+        old.getBytes("UTF-8"))
+      assert(Snapshots.manifest(spark, root, v).recorded.isEmpty)
+    }
+    assert(Snapshots.read(spark, root, Some(1)).count() == 6)
+    assert(Snapshots.read(spark, root).count() == 4)
+    assert(Snapshots.commit(spark, root, Seq((7L, "b")).toDF("id", "tag")) == 3)
+    assert(Snapshots.manifest(spark, root, 3).recorded == Some(Counts(7, 2)))
+    assert(Snapshots.read(spark, root).count() == 5)
   }
 
   test("snapshots MERGE: a nondeterministic source deletes exactly the keys it wrote") {
@@ -1056,7 +1207,7 @@ class RoundTripSpec extends SparkSpec {
       val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
       assert(txt.contains("\"schema\""))
       java.nio.file.Files.write(p,
-        txt.replaceAll(""", "schema": "[^"]*"""", "").getBytes("UTF-8"))
+        txt.replaceAll(""",\s*"schema"\s*:\s*"[^"]*"""", "").getBytes("UTF-8"))
     }
     val root = s"${graft.Scratch.dir}/snap_precontract"
     val fsys = new org.apache.hadoop.fs.Path(root)

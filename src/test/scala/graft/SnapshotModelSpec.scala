@@ -1,0 +1,155 @@
+package graft
+
+import graft.sources.Snapshots
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+
+object SnapshotModelSpec {
+  final case class R(id: Long, tag: String, v: Long, n: Option[Long])
+
+  sealed trait Op
+  final case class Merge(rows: Seq[R]) extends Op
+  final case class VMerge(rows: Seq[R]) extends Op
+  /** DELETE WHERE n > over OR tag = tag: NULL where n is NULL and the
+    * tag does not match, and such rows stay.
+    */
+  final case class Delete(over: Long, tag: Option[String]) extends Op
+}
+
+/** Model-based test of the snapshot table's row-removing verbs:
+  * random sequences of `mergeInto`, `mergeIntoVersioned` and
+  * `deleteWhere` (with conditions that are NULL on some rows) run on a
+  * small table beside an in-memory latest-wins model, and every version
+  * is checked against the model as it stood when that version landed.
+  * The table is small and the merges touch up to half its keys, so
+  * sequences cross the dead-row bound and exercise both the sidecar and
+  * the rewrite form of a commit.
+  */
+class SnapshotModelSpec extends SparkSpec {
+  import SnapshotModelSpec._
+
+  private type Model = Map[Long, R]
+
+  private def step(m: Model, op: Op): Model = op match {
+    case Merge(rs) => m ++ rs.map(r => r.id -> r)
+    case VMerge(rs) => rs.foldLeft(m) { (acc, r) =>
+      if (acc.get(r.id).exists(t => r.v < t.v)) acc else acc + (r.id -> r)
+    }
+    case Delete(k, t) =>
+      m.filterNot { case (_, r) => r.n.exists(_ > k) || t.contains(r.tag) }
+  }
+
+  private val schema = StructType(Seq(StructField("id", LongType),
+    StructField("tag", StringType), StructField("v", LongType),
+    StructField("n", LongType)))
+
+  private def frame(rs: Seq[R]): DataFrame = {
+    val rows = rs.map(r => Row(r.id, r.tag, r.v, r.n.map(Long.box).orNull))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+  }
+
+  private def cond(d: Delete): Column =
+    d.tag.fold(col("n") > d.over)(t => col("n") > d.over || col("tag") === t)
+
+  private val rowGen: Gen[Long => R] = for {
+    tag <- Gen.oneOf("a", "b", "c")
+    v <- Gen.choose(0L, 9L)
+    n <- Gen.option(Gen.choose(0L, 9L))
+  } yield (id: Long) => R(id, tag, v, n)
+
+  private def rowsGen(min: Int, max: Int): Gen[Seq[R]] = for {
+    k <- Gen.choose(min, max)
+    ids <- Gen.pick(k, 0L until 10L)
+    mk <- Gen.listOfN(k, rowGen)
+  } yield ids.toSeq.zip(mk).map { case (id, f) => f(id) }
+
+  private val opGen: Gen[Op] = Gen.frequency(
+    3 -> rowsGen(1, 5).map(Merge(_)),
+    2 -> rowsGen(1, 5).map(VMerge(_)),
+    2 -> (for {
+      k <- Gen.choose(3L, 9L)
+      t <- Gen.option(Gen.oneOf("a", "b", "c"))
+    } yield Delete(k, t)))
+
+  private val seqGen: Gen[(Seq[R], List[Op])] = for {
+    base <- rowsGen(4, 8)
+    n <- Gen.choose(4, 7)
+    ops <- Gen.listOfN(n, opGen)
+  } yield (base, ops)
+
+  private def fsOf(root: String) = new org.apache.hadoop.fs.Path(root)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  test("row-removing verbs match a latest-wins model at every version") {
+    var run = 0
+    var rewrites = 0
+    var sidecars = 0
+    val prop = Prop.forAllNoShrink(seqGen) { case (base, ops) =>
+      run += 1
+      val root = s"${graft.Scratch.dir}/snap_model/r$run"
+      fsOf(root).delete(new org.apache.hadoop.fs.Path(root), true)
+      assert(Snapshots.commit(spark, root, frame(base)) == 1)
+      val models = ops.scanLeft(base.map(r => r.id -> r).toMap)(step)
+      ops.zipWithIndex.foreach { case (op, i) =>
+        val parent = i + 1
+        val before = Snapshots.manifest(spark, root, parent)
+        val pc = before.recorded.get
+        val due = pc.dead >= pc.rows - pc.dead
+        val v = op match {
+          case Merge(rs) => Snapshots.mergeInto(spark, root, frame(rs), Seq("id"))
+          case VMerge(rs) =>
+            Snapshots.mergeIntoVersioned(spark, root, frame(rs), Seq("id"), "v")
+          case d: Delete => Snapshots.deleteWhere(spark, root, cond(d))
+        }
+        assert(v == parent + 1, s"$op committed v$v after v$parent")
+        // every version, HEAD included, reads as the model did then
+        val got = (1 to v).map(w => Snapshots.read(spark, root, Some(w))
+          .select(lit(w).as("w"), col("id"), col("tag"), col("v"), col("n")))
+          .reduce(_ unionByName _).collect()
+          .groupBy(_.getInt(0)).map { case (w, rs) =>
+            w -> rs.map(r => R(r.getLong(1), r.getString(2), r.getLong(3),
+              if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSet
+          }
+        (1 to v).foreach { w =>
+          assert(got.getOrElse(w, Set.empty) == models(w - 1).values.toSet,
+            s"v$w after $op (ops ${ops.take(i + 1)})")
+        }
+        // the recorded counts equal a recount, and the rule decided
+        val m = Snapshots.manifest(spark, root, v)
+        val c = m.recorded.get
+        val rows = spark.read.parquet(m.dirs: _*).count()
+        val dead =
+          if (m.dvs.isEmpty) 0L else spark.read.parquet(m.dvs: _*).count()
+        assert(c == Snapshots.Counts(rows, dead), s"v$v counts after $op")
+        assert(c.live == models(i + 1).size)
+        if (due) {
+          assert(m.dvs.isEmpty, s"v$v: debt was due, $op added a sidecar")
+          rewrites += 1
+        } else {
+          assert(m.dvs == before.dvs :+ m.dvs.last,
+            s"v$v: debt not due, $op did not add exactly one sidecar")
+          sidecars += 1
+        }
+        // the bound: dead rows at most live rows plus this commit's own
+        // pairs. A merge appends a replacement for every row it removes,
+        // so that holds as stated; a delete also lowers the live count
+        // by its own pairs, so after one the bound is twice those pairs
+        // (the parent had fewer dead than live rows, or it would have
+        // rewritten)
+        val own = math.max(0L, c.dead - pc.dead)
+        val slack = op match { case _: Delete => 2 * own; case _ => own }
+        assert(c.dead <= c.live + slack, s"v$v: $c after $op")
+      }
+      fsOf(root).delete(new org.apache.hadoop.fs.Path(root), true)
+      true
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(12).withWorkers(1)
+        .withInitialSeed(20261019L), prop)
+    assert(res.passed, res.status.toString)
+    assert(rewrites > 0 && sidecars > 0,
+      s"both forms exercised: $rewrites rewrites, $sidecars sidecars")
+  }
+}
