@@ -5,7 +5,8 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** Concurrent-analyst throughput leg — the multi-user face of the
   * reference (an i2b2 webclient fronting many analysts at once; its
@@ -51,26 +52,17 @@ object ConcurrentBench {
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
 
-    def runOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); ((System.nanoTime() - t0) / 1e9, None) }
-      catch { case e: Throwable =>
-        ((System.nanoTime() - t0) / 1e9, Some(s"$name: ${e.getMessage}"))
-      }
-    }
-
     // serial WARM pass: builds + JIT, untimed
     System.err.println(s"[cbench] warm pass over ${all.size} queries")
-    val warmFailures = all.flatMap { case (n, f) => runOne(n, f)._2 }
+    val warmFailures = all.flatMap { case (n, f) =>
+      Bench.timeQuery(spark, n, sfDir, f)._2 }
 
     // serial TIMED pass: the baseline an 8-analyst day would cost if
     // the engine serialized them
     System.err.println("[cbench] serial timed pass")
     var serialFailed = List.empty[String]
     val serial = all.map { case (n, f) =>
-      val (secs, err) = runOne(n, f)
+      val (secs, err) = Bench.timeQuery(spark, n, sfDir, f)
       err.foreach(serialFailed ::= _)
       n -> secs
     }.toMap
@@ -90,7 +82,8 @@ object ConcurrentBench {
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"stream$i")
         val errs = scala.collection.mutable.ListBuffer.empty[String]
         val s0 = System.nanoTime()
-        mix.foreach { case (n, f) => runOne(n, f)._2.foreach(errs += _) }
+        mix.foreach { case (n, f) =>
+          Bench.timeQuery(spark, n, sfDir, f)._2.foreach(errs += _) }
         (s"stream$i", (System.nanoTime() - s0) / 1e9, errs.toList)
       }(ec)
     }
@@ -98,28 +91,25 @@ object ConcurrentBench {
     val makespan = (System.nanoTime() - t0) / 1e9
     ec.shutdown()
 
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
     val concurrentFailed = streams.flatMap(_._3)
-    val streamsJson = streams.map { case (name, secs, _) =>
-      "\"" + name + "\":" + num(secs) }.mkString("{", ",", "}")
-    // full JSON escaping (Bench.jstr): failure messages carry Spark
-    // stack-trace text — newlines/backslashes/control chars — which a
-    // quote-only replace would let corrupt the artifact
-    def arr(xs: Seq[String]) =
-      xs.map(Bench.jstr).mkString("[", ",", "]")
-    val line =
-      s"""{"sf":"$sfDir","n_streams":$nStreams,"n_queries":${all.size},""" +
-        s""""serial_sum_sec":${num(serialSum)},""" +
-        s""""concurrent_makespan_sec":${num(makespan)},""" +
-        s""""speedup_vs_serial":${num(serialSum / makespan)},""" +
-        s""""stream_makespans":$streamsJson,""" +
-        s""""slowest_stream_sec":${num(streams.map(_._2).max)},""" +
-        s""""fastest_stream_sec":${num(streams.map(_._2).min)},""" +
-        s""""failed_warm":${arr(warmFailures)},""" +
-        s""""failed_serial":${arr(serialFailed)},""" +
-        s""""failed_concurrent":${arr(concurrentFailed)},""" +
-        s""""loadavg_before":"$loadBefore","loadavg_after":"${Bench.loadavg()}"}"""
+    // failure messages carry Spark stack-trace text (newlines,
+    // backslashes, control characters): json4s escapes all of them
+    val line = compact(render(JObject(
+      "sf" -> JString(sfDir),
+      "n_streams" -> JInt(nStreams),
+      "n_queries" -> JInt(all.size),
+      "serial_sum_sec" -> Bench.dec(serialSum, 1),
+      "concurrent_makespan_sec" -> Bench.dec(makespan, 1),
+      "speedup_vs_serial" -> Bench.dec(serialSum / makespan, 1),
+      "stream_makespans" -> JObject(streams.toList.map { case (name, secs, _) =>
+        name -> Bench.dec(secs, 1) }),
+      "slowest_stream_sec" -> Bench.dec(streams.map(_._2).max, 1),
+      "fastest_stream_sec" -> Bench.dec(streams.map(_._2).min, 1),
+      "failed_warm" -> Bench.names(warmFailures),
+      "failed_serial" -> Bench.names(serialFailed),
+      "failed_concurrent" -> Bench.names(concurrentFailed),
+      "loadavg_before" -> JString(loadBefore),
+      "loadavg_after" -> JString(Bench.loadavg()))))
     val p = java.nio.file.Paths.get(out)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))

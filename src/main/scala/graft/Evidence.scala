@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{pretty, render}
 
 /** Machine-readable evidence for the declared rows-only operators —
   * the gate's blind spot made checkable. The DuckDB gate hash-checks
@@ -276,12 +278,15 @@ object Evidence {
     val out = if (args.length > 1) args(1) else "docs/rowsonly_evidence.json"
     val spark = Bench.session(Bench.envCpus, Seq(sfDir), gate = true)
     val items = collect(spark, sfDir)
-    val json = items.map { i =>
-      s"""  "${i.query}": {"class": "${i.cls}", "metric": "${i.metric}", """ +
-        s""""value": ${i.value}, "bound": ${i.bound}, "op": "${i.op}", """ +
-        s""""pass": ${i.pass}}"""
-    }.mkString("{\n", ",\n", "\n}")
-    Files.writeString(Paths.get(out), json)
+    Files.writeString(Paths.get(out), pretty(render(JObject(items.toList.map {
+      i => i.query -> JObject(
+        "class" -> JString(i.cls),
+        "metric" -> JString(i.metric),
+        "value" -> JDouble(i.value),
+        "bound" -> JDouble(i.bound),
+        "op" -> JString(i.op),
+        "pass" -> JBool(i.pass))
+    }))))
     items.foreach(i => println(
       s"[evidence] ${if (i.pass) "PASS" else "FAIL"} ${i.query}: " +
         s"${i.metric} = ${i.value} ${i.op} ${i.bound}"))

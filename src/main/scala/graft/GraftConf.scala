@@ -1,17 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.SparkSession
 
 /** Deployment-sizing knobs, surfaced as `spark.graft.*` session confs
   * (the pattern ApproxAtScale's accuracy knobs established —
   * GraftExtensions). Index geometry is a CLUSTER property, not a code
   * property: the bucket count of a persisted index fixes the
-  * parallelism of every co-located self-join over it, and the
-  * quantizer's cell count fixes the per-cell join fan-in — a 1000-
-  * executor deployment sizes both up without recompiling. Defaults are
+  * parallelism of every co-located self-join over it, so a 1000-
+  * executor deployment sizes it up without recompiling. Defaults are
   * the repo's long-standing compile-time constants, so behaviour under
-  * default confs is byte-identical to previous rounds.
+  * default confs is byte-identical to previous rounds. A setting that
+  * only tunes speed and that nothing sets is a constant where it is
+  * used instead; GraftConfSpec pins the keys that remain.
   *
   * Every persisted index ENCODES its layout-affecting parameters in its
   * table name (see the ensure* builders): two sessions with different
@@ -36,30 +36,6 @@ object GraftConf {
     */
   def dedupCellBuckets(s: SparkSession): Int =
     s.conf.get("spark.graft.dedup.cells.buckets", "32").toInt
-
-  /** Explicit k-means cell-count override of the dedup quantizer (None =
-    * derive from corpus size). The derived default keeps the PER-CELL
-    * population bounded (Similarity.dedupCellsKFor) — a fixed K makes
-    * d05b's in-cell pair expansion quadratic in the corpus (measured at
-    * sf1: 13.7x time on 10x data before K scaled).
-    */
-  def dedupCellsK(s: SparkSession): Option[Int] =
-    s.conf.getOption("spark.graft.dedup.cells.k").map(_.toInt)
-
-  /** Multi-assignment width of the dedup quantizer (default 5) — the
-    * "same + adjacent cells" probe; wider catches more boundary pairs.
-    */
-  def dedupCellsAssign(s: SparkSession): Int =
-    s.conf.get("spark.graft.dedup.cells.assign", "5").toInt
-
-  /** Round cap of the connected-components fixpoint (d06/d09 dedup
-    * decision; default 50). The alternating large-star/small-star
-    * contraction converges in O(log^2 n) rounds, so 50 covers any
-    * physically storable corpus; the cap exists to turn a logic bug
-    * into a loud error instead of an unbounded shuffle loop.
-    */
-  def ccMaxIter(s: SparkSession): Int =
-    s.conf.get("spark.graft.cc.maxIter", "50").toInt
 
   /** Document-frequency cap of the shingle inverted index (d02/d03/d07
     * candidate gate; default 50). The oracle SQL under the gate mirrors
@@ -118,16 +94,6 @@ object GraftConf {
   def shardBytes(s: SparkSession): Long =
     s.conf.get("spark.graft.shard.bytes", "4096").toLong
 
-  /** Expected corpus-key count of d10's ingest bloom filter (default
-    * 10⁶ — Spark's own runtime-filter default). Size to the corpus:
-    * the sketch costs ~1.2 bytes/key at the built-in fpp, so a
-    * 10⁹-doc corpus is ~1.2 GB — still ONE broadcastable artifact;
-    * past that, range-partition the corpus and keep one filter per
-    * range.
-    */
-  def bloomItems(s: SparkSession): Long =
-    s.conf.get("spark.graft.dedup.bloomItems", "1000000").toLong
-
   /** Shard count of the d10/p03 corpus bloom gate (default 1 = the
     * single filter). Past ~10¹⁰-10¹¹ corpus keys one bit array exceeds
     * a task/driver buffer; sharding by hash prefix keeps each filter
@@ -137,14 +103,6 @@ object GraftConf {
     */
   def bloomShards(s: SparkSession): Int =
     s.conf.get("spark.graft.dedup.bloomShards", "1").toInt
-
-  /** Build-side size ceiling (bytes) for broadcasting a PAIR-JOIN build
-    * side (d05's label twin). Default = Spark's own 10 MB auto-broadcast
-    * default. Corpus-sized sides never fit and fall back to a shuffle
-    * join — the driver-OOM class of plan is unreachable.
-    */
-  def pairBroadcastBytes(s: SparkSession): Long =
-    s.conf.get("spark.graft.pairJoin.broadcastBytes", "10485760").toLong
 
   /** st11's alerting geometry: trailing window (hours), minimum
     * observed hours before the alert arms, and the spike factor
@@ -222,19 +180,5 @@ object GraftConf {
       "cores, cap=1024; local-FS measurement - non-local deployments " +
       "set SPARK_GRAFT_INIT_PARTS)")
     width
-  }
-
-  /** Broadcast `df` only if its optimizer-estimated size fits under
-    * [[pairBroadcastBytes]]; past the gate it is PINNED to the
-    * sort-merge strategy ("merge" hint) rather than merely unhinted —
-    * a session with a raised autoBroadcastJoinThreshold would
-    * otherwise still size-plan a broadcast of the oversized side. The
-    * hint — not the semantics — is size-gated: both plans compute the
-    * same rows (the cosines are fixed-order, partitioning-independent).
-    */
-  def maybeBroadcast(df: DataFrame): DataFrame = {
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(pairBroadcastBytes(df.sparkSession))) broadcast(df)
-    else df.hint("merge")
   }
 }

@@ -4,6 +4,8 @@ import graft.Tables._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** Skew-resilience leg — measured task-time evidence that the salted
   * join (q28's production path) and AQE's skew-join splitting both
@@ -111,22 +113,26 @@ object SkewLeg {
     val canon = rows("broadcast")
     val agree = legs.forall(l => rows(l.name) == canon)
 
-    def num(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val legsJson = results.map { case (n, el, nt, mx, p50, p95) =>
-      s""""$n":{"elapsed_sec":${num(el)},"n_tasks":$nt,""" +
-        s""""max_task_ms":${num(mx)},"p50_task_ms":${num(p50)},""" +
-        s""""p95_task_ms":${num(p95)},""" +
-        s""""max_over_p50":${num(if (p50 > 0) mx / p50 else 0.0)}}"""
-    }.mkString("{", ",", "}")
     val unsMax = results.find(_._1 == "unsalted_smj").get._4
     val saltMax = results.find(_._1 == "salted").get._4
     val aqeMax = results.find(_._1 == "aqe_skew_smj").get._4
-    val line =
-      s"""{"sf":${Bench.jstr(sfDir)},"top_key_share":${num(topShare)},""" +
-        s""""legs":$legsJson,"results_agree":$agree,""" +
-        s""""salted_max_task_vs_unsalted":${num(if (unsMax > 0) saltMax / unsMax else 0.0)},""" +
-        s""""aqe_max_task_vs_unsalted":${num(if (unsMax > 0) aqeMax / unsMax else 0.0)}}"""
+    val line = compact(render(JObject(
+      "sf" -> JString(sfDir),
+      "top_key_share" -> Bench.dec(topShare, 3),
+      "legs" -> JObject(results.toList.map { case (n, el, nt, mx, p50, p95) =>
+        n -> JObject(
+          "elapsed_sec" -> Bench.dec(el, 3),
+          "n_tasks" -> JInt(nt),
+          "max_task_ms" -> Bench.dec(mx, 3),
+          "p50_task_ms" -> Bench.dec(p50, 3),
+          "p95_task_ms" -> Bench.dec(p95, 3),
+          "max_over_p50" -> Bench.dec(if (p50 > 0) mx / p50 else 0.0, 3))
+      }),
+      "results_agree" -> JBool(agree),
+      "salted_max_task_vs_unsalted" ->
+        Bench.dec(if (unsMax > 0) saltMax / unsMax else 0.0, 3),
+      "aqe_max_task_vs_unsalted" ->
+        Bench.dec(if (unsMax > 0) aqeMax / unsMax else 0.0, 3))))
     val p = java.nio.file.Paths.get(out)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))

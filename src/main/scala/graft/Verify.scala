@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,9 +22,12 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     spark.stop()
   }
+
+  /** `SparkEntry.oracleSql` as one JSON object: query name -> SQL. */
+  private[graft] def oracleJson: String =
+    compact(render(JObject(SparkEntry.oracleSql.toList.map { case (k, v) =>
+      k -> JString(v) })))
 }

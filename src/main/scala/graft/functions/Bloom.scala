@@ -85,7 +85,9 @@ object Bloom {
     */
   def corpusGate(corpus: DataFrame, key: Column): Column => Column = {
     val s = corpus.sparkSession
-    val items = graft.GraftConf.bloomItems(s)
+    // expected corpus keys per filter: Spark's own runtime-filter
+    // default; ~1.2 bytes/key at the built-in fpp
+    val items = 1000000L
     val shards = graft.GraftConf.bloomShards(s)
     if (shards <= 1) {
       val bf = buildBytes(corpus, key, items)

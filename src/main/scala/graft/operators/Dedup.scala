@@ -405,9 +405,9 @@ object Dedup {
   // — routine at 100 TB — would exhaust any fixed cap. DedupSpec's
   // 250-node path graph converges in a handful of rounds here and
   // provably could not under per-hop propagation with the same cap.)
-  // Iterates TO THE FIXPOINT (round output == input) with a conf'd cap
-  // (spark.graft.cc.maxIter) that exists to make a logic bug loud, not
-  // to bound real corpora; lineage is checkpointed per round.
+  // Iterates TO THE FIXPOINT (round output == input) with a round cap
+  // that exists to make a logic bug loud, not to bound real corpora;
+  // lineage is checkpointed per round.
 
   /** Unsorted core — composed by Pipeline.p01. The checkpointer is the
     * deployment knob (graft.Checkpointing): local for single-JVM runs,
@@ -460,7 +460,10 @@ object Dedup {
 
   private[graft] def componentsOf(pairs: DataFrame,
       cp: graft.Checkpointer = graft.LocalCheckpointer): DataFrame = {
-    val maxIter = graft.GraftConf.ccMaxIter(pairs.sparkSession)
+    // O(log^2 n) rounds converge any physically storable corpus in far
+    // fewer than 50; the cap turns a logic bug into a loud error instead
+    // of an unbounded shuffle loop
+    val maxIter = 50
     // LINEAGE TRUNCATION is load-bearing for every iterative DataFrame
     // algorithm: an uncut plan embeds every prior round twice (join
     // left + union right) and Catalyst grinds to a halt around round 8.
@@ -483,9 +486,7 @@ object Dedup {
       nEdges = nNext
       iter += 1
     }
-    require(converged,
-      s"components did not converge within $maxIter rounds " +
-        "(spark.graft.cc.maxIter)")
+    require(converged, s"components did not converge within $maxIter rounds")
     // star edges are (member, component-min); the root labels itself
     edges.select(col("a").as("id"), col("b").as("label"))
       .unionByName(edges.select(col("b").as("id"), col("b").as("label"))
@@ -650,15 +651,14 @@ object Dedup {
     // cores). Same trap as s02's bucket index, pair-expansion edition.
     val eSpread = e
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-    // the build side is SIZE-GATED (GraftConf.maybeBroadcast): under
-    // the few-MB test corpus it broadcasts and the stream side keeps
-    // its spread partitioning; past spark.graft.pairJoin.broadcastBytes
-    // it falls back to a shuffle join on label — a corpus-sized side
-    // can never reach the driver. d05b below is the production shape
-    // (co-located bucketed self-join, no broadcast decision at all).
+    // the join strategy is Spark's own size decision
+    // (spark.sql.autoBroadcastJoinThreshold, then AQE): the few-MB test
+    // corpus broadcasts and the stream side keeps its spread
+    // partitioning; a corpus-sized side falls back to a shuffle join on
+    // label and never reaches the driver. d05b below is the production
+    // shape (co-located bucketed self-join, no broadcast decision at all).
     eSpread.toDF("vec_a", "label", "emb_a", "nrm_a")
-      .join(graft.GraftConf.maybeBroadcast(
-        e.toDF("vec_b", "label", "emb_b", "nrm_b")), "label")
+      .join(e.toDF("vec_b", "label", "emb_b", "nrm_b"), "label")
       .filter(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
         cosineFromNormsLoop("emb_a", "emb_b", col("nrm_a"), col("nrm_b"), 64)
@@ -695,7 +695,7 @@ object Dedup {
   // 100 TB move is Spark's own runtime-filter idea made explicit: ONE
   // aggregate pass builds a constant-size bloom filter over the corpus
   // content hashes (BloomFilterAggregate — distributed, mergeable,
-  // sized by spark.graft.dedup.bloomItems), the delta probes it as a
+  // sized for 10^6 corpus keys), the delta probes it as a
   // codegen'd literal predicate, and only the SURVIVORS (true dups +
   // the fp tail) reach the exact hash join — which AQE then plans as a
   // broadcast of the tiny candidate set against the corpus scan. False
@@ -744,9 +744,8 @@ object Dedup {
   // fraction ~0.9 at any useful recall). The operator's pruning power is
   // real in the production regime it exists for (actual near-dups at
   // cos >= 0.9 share cells with near-certainty while random pairs
-  // don't); spark.graft.dedup.cells.{k,assign} are the cluster-sizing
-  // knobs (at 100 TB K grows with corpus size so per-cell join buckets
-  // stay bounded).
+  // don't); K grows with corpus size (Similarity.dedupCellsKFor) so
+  // per-cell join buckets stay bounded at 100 TB.
   // DedupSpec pins recall >= 0.95 vs the brute-force truth AND vs d05's
   // oracle-checked pairs, plus a no-label-column plan assert.
   // Join SHAPE matters more than the pair count here: the vectors ride

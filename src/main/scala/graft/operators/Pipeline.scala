@@ -77,8 +77,7 @@ object Pipeline {
   // maintainable across nights — d10) and the persisted shingle index
   // (the d03b/d08b append machinery); every shuffle is delta-sized.
   // Bloom sizing is honest only to ~10^9-10^10 corpus keys per filter
-  // (1-12 GB at 1% fp, spark.graft.dedup.bloomItems); past that the
-  // gate SHARDS the filter by hash prefix
+  // (1-12 GB at 1% fp); past that the gate SHARDS the filter by hash prefix
   // (spark.graft.dedup.bloomShards, Bloom.corpusGate — one grouped
   // build pass, per-shard literal probes), keeping every filter
   // honestly sized with the probes still delta-sized (SURVEY §5).

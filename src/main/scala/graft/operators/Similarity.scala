@@ -454,17 +454,16 @@ object Similarity {
   // -- IVF dedup cells: coarse quantization for embedding NEAR-DUP -------
   // Dedup.d05b's candidate index — the pair-mining face of IVF: a
   // dedicated k-means cell assignment where each vector lands in its
-  // spark.graft.dedup.cells.assign nearest cells (multi-assignment IS
-  // the "same + adjacent cells" probe: a pair can meet iff their cell
-  // sets intersect). More cells than the ANN index (16 vs 8) keeps per-cell
+  // 5 nearest cells (multi-assignment IS the "same + adjacent cells"
+  // probe: a pair can meet iff their cell sets intersect). More cells than the ANN index (16 vs 8) keeps per-cell
   // join buckets smaller; more assignments keep boundary pairs
   // together. The table carries the VECTOR and its self-dot alongside
   // the assignment and is persisted bucketed by cid, so d05b's pair
   // expansion is a bucket-local co-located self-join (the src03
   // technique) that never exchanges, never broadcasts, and reads
   // nothing but this one table — parallelism = bucket count, the
-  // cluster-sizing knob (spark.graft.dedup.cells.buckets). Sizing is
-  // conf-driven (GraftConf); defaults reproduce the historical layout.
+  // cluster-sizing knob (spark.graft.dedup.cells.buckets, GraftConf);
+  // its default reproduces the historical layout.
   /** Build-if-absent the persisted dedup cell assignment
     * (vec_id, cid, embedding, nrm); returns the table name. The name
     * encodes the layout parameters, so differently-sized indexes
@@ -480,8 +479,7 @@ object Similarity {
     * true pairs: K=16 recall 0.99 at 8.0 s, K=51 (this law) 0.84 at
     * 2.7 s, K=160 (linear law) 0.62 at 1.2 s. On a genuinely
     * clustered near-dup corpus (the production case — semantic dups
-    * at τ≥0.9 quantize cleanly) linear growth holds recall, and
-    * spark.graft.dedup.cells.k overrides the law outright. The
+    * at τ≥0.9 quantize cleanly) linear growth holds recall. The
     * normalizer reproduces the historical sf0.1 geometry (2000
     * vectors × 5 assignments → K=16), so shipped layouts only change
     * above it.
@@ -491,11 +489,9 @@ object Similarity {
       math.ceil(16.0 * math.sqrt(n.toDouble * assign / 10000.0)).toLong).toInt
 
   def ensureIvfDedupCells(s: SparkSession, d: String): String = {
-    val (assign, buckets) =
-      (graft.GraftConf.dedupCellsAssign(s), graft.GraftConf.dedupCellBuckets(s))
+    val (assign, buckets) = (5, graft.GraftConf.dedupCellBuckets(s))
     // parquet row-count metadata makes this count() a footer read
-    val k = graft.GraftConf.dedupCellsK(s)
-      .getOrElse(dedupCellsKFor(embeddings(s, d).count(), assign))
+    val k = dedupCellsKFor(embeddings(s, d).count(), assign)
     val layout = s"k${k}a${assign}b$buckets"
     val cellsT = s"graft_ivf_dedup_cells_${sanitize(d)}_$layout"
     if (!s.catalog.tableExists(cellsT)) {

@@ -466,22 +466,17 @@ object Snapshots {
         "left_anti")
     }
 
-  /** What one row-removing commit takes out of HEAD's live rows:
-    * `doomed` selects them (the sidecar path records their positions),
-    * `kept` selects the rest (the rewrite path writes those). They are
-    * complements over the live rows; `kept` is spelled out because a
-    * predicate's complement is not its negation when it can be NULL.
+  /** What one row-removing commit takes out of HEAD's live rows: it
+    * selects the doomed rows, whose positions the commit's sidecar
+    * records.
     */
-  private final case class Removal(doomed: DataFrame => DataFrame,
-      kept: DataFrame => DataFrame)
+  private type Removal = DataFrame => DataFrame
 
   /** The MERGE removal: live rows whose key is among `keys` (no
-    * distinct — semi and anti joins ignore duplicate build keys).
+    * distinct — a semi join ignores duplicate build keys).
     */
   private def byKeys(keys: DataFrame, keyCols: Seq[String]): Removal =
-    Removal(_.join(keys, keyCols, "left_semi"),
-      live => live.join(keys, keyCols, "left_anti")
-        .select(live.columns.map(col): _*))
+    _.join(keys, keyCols, "left_semi")
 
   /** The keys a merge wrote, read back from its data dir: the source is
     * evaluated once, so even a nondeterministic source removes exactly
@@ -493,14 +488,18 @@ object Snapshots {
 
   /** THE commit loop of every verb that removes rows ([[deleteWhere]],
     * [[mergeInto]], [[mergeIntoVersioned]]) and the one place the debt
-    * rule ([[Counts.due]]) picks how the removal lands:
+    * rule ([[Counts.due]]) picks how the removal lands. The commit first
+    * writes a sidecar of the doomed rows' (file, row) positions; its
+    * footer count gives the counts the commit would leave:
     *
-    *  - debt not due: a sidecar of the doomed rows' (file, row)
-    *    positions, over HEAD's unchanged data dirs (merge-on-read);
-    *  - debt due: HEAD's live rows minus the doomed ones, written as one
-    *    new data dir that replaces every dir and sidecar of HEAD.
+    *  - debt not due: the sidecar joins HEAD's unchanged data dirs
+    *    (merge-on-read);
+    *  - debt due: HEAD's live rows minus the sidecar's are written as one
+    *    new data dir that replaces every dir and sidecar of HEAD, and the
+    *    sidecar is deleted (one small wasted write per rewrite).
     *
-    * Either way the commit's own data dir (if any) joins the SAME
+    * So every commit leaves fewer dead rows than live ones, or an empty
+    * table. Either way the commit's own data dir (if any) joins the SAME
     * manifest publish, so the verb stays one version. `edit` runs per
     * attempt against the head the CAS asserts and returns that dir, the
     * removal and the schema to pin; with `ownsAdded` the dir was written
@@ -520,31 +519,33 @@ object Snapshots {
       val head = headVersion(s, root)
       require(head > 0, s"no snapshot at $root — bootstrap with commit()")
       val m = manifest(s, root, head)
-      val debt = m.counts(s)
       val (added, removal, schema) = edit(head, m)
       def dropAdded(): Unit =
         if (ownsAdded) added.foreach(d => f.delete(new Path(d), true))
-      val out = s"$root/${if (debt.due) "data" else "dv"}/w${token()}"
-      val next =
+      val (next, out) =
         try {
+          // the candidate scan carries its own positions (_metadata is
+          // a scan column, not a join output), with earlier sidecars
+          // anti-joined out so an already-dead row never re-records
+          val dv = s"$root/dv/w${token()}"
+          val scan = m.scan(s)
+            .select(col("_metadata.file_path").as("_graft_fp"),
+              col("_metadata.row_index").as("_graft_ri"), col("*"))
+          removal(minusDvs(s, scan, m.dvs, "_graft_fp", "_graft_ri"))
+            .select(col("_graft_fp").as("file_path"),
+              col("_graft_ri").as("row_index"))
+            .write.mode("overwrite").parquet(dv)
           val addedRows = rowsIn(s, added.toSeq)
-          if (debt.due) {
-            removal.kept(live(s, m)).write.mode("overwrite").parquet(out)
-            Manifest(out +: added.toSeq, Seq.empty, schema,
-              Some(Counts(rowsIn(s, Seq(out)) + addedRows, 0)))
-          } else {
-            // the candidate scan carries its own positions (_metadata is
-            // a scan column, not a join output), with earlier sidecars
-            // anti-joined out so an already-dead row never re-records
-            val scan = m.scan(s)
-              .select(col("_metadata.file_path").as("_graft_fp"),
-                col("_metadata.row_index").as("_graft_ri"), col("*"))
-            removal.doomed(minusDvs(s, scan, m.dvs, "_graft_fp", "_graft_ri"))
-              .select(col("_graft_fp").as("file_path"),
-                col("_graft_ri").as("row_index"))
-              .write.mode("overwrite").parquet(out)
-            Manifest(m.dirs ++ added, m.dvs :+ out, schema,
-              Some(debt.add(addedRows, rowsIn(s, Seq(out)))))
+          val after = m.counts(s).add(addedRows, rowsIn(s, Seq(dv)))
+          if (!after.due)
+            (Manifest(m.dirs ++ added, m.dvs :+ dv, schema, Some(after)), dv)
+          else {
+            val dir = s"$root/data/w${token()}"
+            live(s, m.copy(dvs = m.dvs :+ dv))
+              .write.mode("overwrite").parquet(dir)
+            f.delete(new Path(dv), true)
+            (Manifest(dir +: added.toSeq, Seq.empty, schema,
+              Some(Counts(rowsIn(s, Seq(dir)) + addedRows, 0))), dir)
           }
         } catch { case t: Throwable => dropAdded(); throw t }
       if (tryPublishManifest(s, root, head + 1, next)) return head + 1
@@ -562,16 +563,12 @@ object Snapshots {
     * table's dead rows are fewer than its live ones the delete is
     * merge-on-read: a sidecar of the rows' (file, row-position) pairs
     * over the SAME immutable data files, so deleting 100 rows from a
-    * large table costs one small parquet write. Once dead rows reach
-    * the live count, the delete instead writes the rows it keeps as one
-    * new data dir and drops every sidecar ([[commitRemoving]]): each
-    * rewrite costs at most one written row per dead row, and no sidecar
-    * lands on a HEAD that scans twice its live rows, however many merges
-    * and deletes the table has taken. The commit that adds a sidecar can
-    * still overshoot: a merge leaves HEAD scanning under twice its live
-    * rows plus the rows it replaced, and a delete that removes most
-    * rows leaves more dead than live rows until the next row-removing
-    * commit rewrites them. Rows where `cond` is NULL
+    * large table costs one small parquet write. Once dead rows would
+    * reach the live count, the delete instead writes the rows it keeps
+    * as one new data dir and drops every sidecar ([[commitRemoving]]):
+    * each rewrite costs at most one written row per dead row, and no
+    * commit leaves a HEAD that scans twice its live rows, however many
+    * merges and deletes the table has taken. Rows where `cond` is NULL
     * stay, as SQL's DELETE keeps them. Pinned readers of older versions
     * are untouched either way. The erasure story: deleteWhere removes a
     * row from HEAD at once; its bytes leave the files HEAD lists at the
@@ -582,8 +579,7 @@ object Snapshots {
     // a delete changes no columns: the parent's committed schema
     // carries forward verbatim
     commitRemoving(s, root, "deleteWhere", ownsAdded = false) { (_, m) =>
-      (None, Removal(_.filter(cond), _.filter(!coalesce(cond, lit(false)))),
-        m.schema)
+      (None, _.filter(cond), m.schema)
     }
 
   /** MERGE INTO — latest-wins upsert as ONE atomic commit: table rows
@@ -600,7 +596,7 @@ object Snapshots {
     * survive the merge — refused loudly, src08's documented contract).
     *
     * The removal follows [[deleteWhere]]'s bound: a sidecar while dead
-    * rows are fewer than live ones, else a rewrite of the live rows the
+    * rows stay fewer than live ones, else a rewrite of the live rows the
     * merge does not replace into one dir, in the same commit. The data
     * dir is written ONCE, outside the CAS loop, and `source` is
     * evaluated exactly once: the matched keys are read back from the
@@ -762,12 +758,12 @@ object Snapshots {
     def live: Long = rows - dead
     def add(rows: Long, dead: Long): Counts =
       Counts(this.rows + rows, this.dead + dead)
-    /** THE rewrite rule: once dead rows match live ones, the next
-      * row-removing commit rewrites the live rows instead of adding a
-      * sidecar. A rewrite writes at most one row per dead row, and no
-      * sidecar lands on a HEAD that already scans twice its live rows
-      * — the array-doubling amortization, so the ratio is a constant,
-      * not a setting. [[deleteWhere]] states what one commit can add.
+    /** THE rewrite rule: a row-removing commit whose sidecar would
+      * leave dead rows matching live ones rewrites the live rows
+      * instead. A rewrite writes at most one row per dead row, and no
+      * commit leaves a HEAD that scans twice its live rows — the
+      * array-doubling amortization, so the ratio is a constant, not a
+      * setting.
       */
     def due: Boolean = dead >= live
   }

@@ -529,18 +529,19 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"),
         r.getAs[Double]("cosine"))).toSet
     val default = rowsOf(Dedup.d05(spark, sfDir))
-    spark.conf.set("spark.graft.pairJoin.broadcastBytes", "0")
+    val gate = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(gate, "-1")
     try {
       val q = Dedup.d05(spark, sfDir)
       val plan = q.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
       assert(!plan.contains("BroadcastExchange"),
-        s"gate at 0 bytes must suppress the broadcast hint:\n$plan")
+        s"with Spark's size gate off no side may broadcast:\n$plan")
       // identical pairs AND identical cosines: the fixed-order dot is
       // partitioning-independent, so the join strategy cannot show
       // through in the answer
       assert(rowsOf(q) == default)
-    } finally spark.conf.unset("spark.graft.pairJoin.broadcastBytes")
+    } finally spark.conf.unset(gate)
   }
 
   test("d12 keeps the max-quality member of every d06 cluster") {

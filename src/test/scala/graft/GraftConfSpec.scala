@@ -60,35 +60,82 @@ class GraftConfSpec extends AnyFunSuite {
     }
   }
 
-  test("Bench.calibrate: the machine probe is positive and repeatable") {
-    val a = Bench.calibrate()
-    val b = Bench.calibrate()
-    assert(a > 0 && b > 0)
-    // the probe's job is to distinguish 1.7x-degraded days from clean
-    // ones; back-to-back runs must agree far tighter than that (the
-    // observed idle spread is ~5%, the bound is deliberately loose)
-    assert(math.max(a, b) / math.min(a, b) < 1.4,
-      s"probe unstable: $a vs $b")
+  test("Bench's record line parses, ends in metric/unit/value, escapes names") {
+    import org.json4s._
+    // a failure name carrying every character a hand-built line broke on
+    val odd = "q\"uote\\slash\nline\u0001ctl"
+    val line = Bench.recordLine(
+      Seq("c01" -> 1.23456, "s02_ann_lsh" -> 2.0, odd -> -1.0),
+      List("scale_check" -> JString("skipped")), Seq(odd), "0.50 0.40 0.30",
+      "0.60 0.50 0.40", Some(Bench.Shares(0.3, 0.01)), contended = true,
+      machineCores = 4, cpus = 4, sf = "/data/sf\"0.1")
+    val j = org.json4s.jackson.JsonMethods.parse(line)
+    val JObject(fields) = j
+    assert(fields.map(_._1).head === "queries")
+    assert(fields.map(_._1).takeRight(3) === List("metric", "unit", "value"))
+    assert(j \ "failed" === JArray(List(JString(odd))))
+    assert(j \ "sf" === JString("/data/sf\"0.1"))
+    assert(j \ "steal_share" === JDouble(0.3))
+    assert(j \ "iowait_share" === JDouble(0.01))
+    assert(j \ "degraded" === JBool(true))
+    assert(j \ "contended" === JBool(true))
+    // the decimals the record has always carried
+    assert(line.contains("\"c01\":1.2346,"))
+    assert(line.contains("\"build_sec\":2.0,\"core_sec\":1.2,"))
+    assert(line.endsWith("\"metric\":\"total\",\"unit\":\"sec\",\"value\":3.2}"))
+    // without /proc/stat the shares are null and only load gates
+    val bare = org.json4s.jackson.JsonMethods.parse(Bench.recordLine(
+      Seq("c01" -> 1.0), Nil, Nil, "", "", None, contended = false, 4, 4, "x"))
+    assert(bare \ "steal_share" === JNull)
+    assert(bare \ "degraded" === JBool(false))
   }
 
-  test("Bench.calibratePar: parallel wall is bounded by the single spin") {
-    val single = Bench.calibrate()
-    val par = Bench.calibratePar(Runtime.getRuntime.availableProcessors())
-    // independent cores: n-way wall can never beat one spin (each
-    // thread does the full spin) and a sane sandbox stays well under
-    // a full serialization of the threads
-    assert(par >= single * 0.7, s"par $par vs single $single")
-    assert(par < single * 16, s"par $par vs single $single")
+  test("Bench.shares: steal over non-idle time, iowait over all time") {
+    // user nice system idle iowait irq softirq steal guest guest_nice
+    val a = Seq(100L, 0L, 50L, 1000L, 10L, 0L, 0L, 0L, 0L, 0L)
+    val b = Seq(170L, 0L, 80L, 1100L, 20L, 0L, 0L, 50L, 0L, 0L)
+    val sh = Bench.shares(a, b).get
+    assert(math.abs(sh.steal - 50.0 / 150) < 1e-12)
+    assert(math.abs(sh.iowait - 10.0 / 260) < 1e-12)
+    assert(Bench.shares(a.take(7), b.take(7)).isEmpty)
+    // the 1.3x bound as a steal share: 1 - 1/1.3 = 0.2308
+    assert(!Bench.Shares(0.23, 0).degraded)
+    assert(Bench.Shares(0.24, 0).degraded)
   }
 
-  test("the official record carries the machine-noise calibration stamps") {
-    val p = java.nio.file.Paths.get("docs/bench_last.json")
-    assume(java.nio.file.Files.exists(p), "no official record on disk")
-    val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    for (k <- Seq("calib_sec", "calib_par_sec", "machine_ratio", "degraded"))
-      assert(s.contains("\"" + k + "\":"),
-        s"official record missing the $k stamp - the bench protocol " +
-          "regressed to unstamped records")
+  test("Verify's oracle_sql.json parses back to SparkEntry.oracleSql") {
+    import org.json4s._
+    val JObject(fields) = org.json4s.jackson.JsonMethods.parse(Verify.oracleJson)
+    val back = fields.map { case (k, JString(v)) => k -> v; case f => fail(s"$f") }
+    assert(back.size === SparkEntry.oracleSql.size)
+    assert(back.toMap === SparkEntry.oracleSql)
+  }
+
+  test("src/main reads exactly these spark.graft.* keys") {
+    import scala.jdk.CollectionConverters._
+    val key = "\"(spark\\.graft\\.[A-Za-z.]+)\"".r
+    val read = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(p => key.findAllMatchIn(java.nio.file.Files.readString(p))
+        .map(_.group(1)))
+      .toSet
+    // answer-changing knobs (their defaults are the recorded oracles'
+    // constants), deployment sizing, and graft's own switches; a
+    // speed-only setting that nothing sets is a constant instead
+    assert(read === Set(
+      "spark.graft.approx", "spark.graft.approx.accuracy",
+      "spark.graft.approx.rsd",
+      "spark.graft.boilerplate.blockTokens", "spark.graft.boilerplate.df",
+      "spark.graft.chunk.stride", "spark.graft.chunk.tokens",
+      "spark.graft.contam.dfCap", "spark.graft.dedup.dfCap",
+      "spark.graft.dedup.passageDfCap",
+      "spark.graft.dedup.bloomShards", "spark.graft.dedup.cells.buckets",
+      "spark.graft.index.buckets", "spark.graft.shard.bytes",
+      "spark.graft.pdc.bar", "spark.graft.sourceQuality.bar",
+      "spark.graft.spike.factor", "spark.graft.spike.minObs",
+      "spark.graft.spike.windowHours",
+      "spark.graft.rep.deliverTimeoutSec",
+      "spark.graft.gateSort", "spark.graft.views.registeredDir"))
   }
 
   test("Bench.runsFor: official protocol trims sub-noise-floor queries") {

@@ -994,17 +994,19 @@ class RoundTripSpec extends SparkSpec {
     def rows(v: Option[Int] = None): Set[(Long, String)] =
       Snapshots.read(spark, root, v).collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
-    Snapshots.commit(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
+    Snapshots.commit(spark, root,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "tag"))
     assert(Snapshots.manifest(spark, root, 1).recorded ==
-      Some(Snapshots.Counts(2, 0)))
-    // v2 replaces both rows by sidecar: 4 rows, 2 dead, 2 live — due
+      Some(Snapshots.Counts(3, 0)))
+    // v2 replaces one row by sidecar: 4 rows, 1 dead, 3 live
     assert(Snapshots.mergeInto(spark, root,
-      Seq((1L, "A"), (2L, "B")).toDF("id", "tag"), Seq("id")) == 2)
+      Seq((1L, "A")).toDF("id", "tag"), Seq("id")) == 2)
     assert(Snapshots.manifest(spark, root, 2).recorded ==
-      Some(Snapshots.Counts(4, 2)))
+      Some(Snapshots.Counts(4, 1)))
+    // v3's sidecar would leave 6 rows, 3 dead, 3 live — due
     val merge = JobCount(spark.sparkContext) {
       assert(Snapshots.mergeInto(spark, root,
-        Seq((2L, "C"), (3L, "c")).toDF("id", "tag"), Seq("id")) == 3)
+        Seq((1L, "X"), (2L, "C")).toDF("id", "tag"), Seq("id")) == 3)
     }
     // ONE version: the kept live rows and the merge's own dir, no
     // sidecar, no dir of v2 left in HEAD, and the counts restart
@@ -1015,20 +1017,22 @@ class RoundTripSpec extends SparkSpec {
     assert(m3.recorded == Some(Snapshots.Counts(3, 0)))
     var got = Set.empty[(Long, String)]
     val read = JobCount(spark.sparkContext) { got = rows() }
-    assert(got == Set((1L, "A"), (2L, "C"), (3L, "c")))
+    assert(got == Set((1L, "X"), (2L, "C"), (3L, "c")))
     val plan = Snapshots.read(spark, root).queryExecution.executedPlan.toString
     assert(!plan.contains("LeftAnti") && !plan.contains("Broadcast"),
       s"a rewritten HEAD still anti-joins sidecars:\n$plan")
     // history is untouched
-    assert(rows(Some(2)) == Set((1L, "A"), (2L, "B")))
-    assert(rows(Some(1)) == Set((1L, "a"), (2L, "b")))
-    // measured shape at this Spark version. The rewrite merge runs 5
+    assert(rows(Some(2)) == Set((1L, "A"), (2L, "b"), (3L, "c")))
+    assert(rows(Some(1)) == Set((1L, "a"), (2L, "b"), (3L, "c")))
+    // measured shape at this Spark version. The rewrite merge runs 7
     // jobs: the data write (AQE window-shuffle job + write job, the dup
-    // check riding it) and the kept-rows write (the sidecar broadcast
-    // of HEAD's read, the broadcast of the key set read back from the
-    // written dir, and the write job). The read after it runs its
-    // action only: no sidecar broadcast is left to build.
-    assert(merge <= 5, s"rewrite mergeInto ran $merge jobs")
+    // check riding it), the sidecar whose count found the debt due (the
+    // broadcast of the key set read back from the written dir, the
+    // broadcast of HEAD's sidecar, the write job) and the kept-rows
+    // write (the broadcast of both sidecars, the write job). The read
+    // after it runs its action only: no sidecar broadcast is left to
+    // build.
+    assert(merge <= 7, s"rewrite mergeInto ran $merge jobs")
     assert(read <= 1, s"Snapshots.read after a rewrite ran $read jobs")
   }
 

@@ -41,6 +41,13 @@ class SnapshotModelSpec extends SparkSpec {
       m.filterNot { case (_, r) => r.n.exists(_ > k) || t.contains(r.tag) }
   }
 
+  /** Live rows `op` takes out of `m`: the rows it replaces or deletes. */
+  private def removed(m: Model, op: Op): Long = op match {
+    case Merge(rs) => rs.count(r => m.contains(r.id)).toLong
+    case VMerge(rs) => rs.count(r => m.get(r.id).exists(t => r.v >= t.v)).toLong
+    case d: Delete => (m.size - step(m, d).size).toLong
+  }
+
   private val schema = StructType(Seq(StructField("id", LongType),
     StructField("tag", StringType), StructField("v", LongType),
     StructField("n", LongType)))
@@ -96,7 +103,9 @@ class SnapshotModelSpec extends SparkSpec {
         val parent = i + 1
         val before = Snapshots.manifest(spark, root, parent)
         val pc = before.recorded.get
-        val due = pc.dead >= pc.rows - pc.dead
+        // the rule: rewrite when the sidecar of this op's removed rows
+        // would leave as many dead rows as live ones
+        val due = pc.dead + removed(models(i), op) >= models(i + 1).size
         val v = op match {
           case Merge(rs) => Snapshots.mergeInto(spark, root, frame(rs), Seq("id"))
           case VMerge(rs) =>
@@ -132,15 +141,9 @@ class SnapshotModelSpec extends SparkSpec {
             s"v$v: debt not due, $op did not add exactly one sidecar")
           sidecars += 1
         }
-        // the bound: dead rows at most live rows plus this commit's own
-        // pairs. A merge appends a replacement for every row it removes,
-        // so that holds as stated; a delete also lowers the live count
-        // by its own pairs, so after one the bound is twice those pairs
-        // (the parent had fewer dead than live rows, or it would have
-        // rewritten)
-        val own = math.max(0L, c.dead - pc.dead)
-        val slack = op match { case _: Delete => 2 * own; case _ => own }
-        assert(c.dead <= c.live + slack, s"v$v: $c after $op")
+        // the bound: every row-removing commit leaves fewer dead rows
+        // than live ones, or an empty table
+        assert(c.dead < c.live || c.rows == 0, s"v$v: $c after $op")
       }
       fsOf(root).delete(new org.apache.hadoop.fs.Path(root), true)
       true
