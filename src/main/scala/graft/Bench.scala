@@ -19,7 +19,10 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *
   * The host is measured, not guessed: `loadavg` before/after, and the
   * `/proc/stat` CPU counters around the timed suite, stamped as
-  * `steal_share` (steal over non-idle time) and `iowait_share`. A run
+  * `steal_share` (steal over non-idle time) and `iowait_share`. The
+  * `steal_share` that perfbench/run.py and tools/ab.py report is steal
+  * over ALL time, idle included: on the same host it reads lower than
+  * Bench's, so compare each only with its own kind. A run
   * starting with 1-min load > machine-cores/2, or one that lost more CPU
   * time to steal than a [[DEGRADED_RATIO]] slowdown would, is stamped
   * `"contended":true`, and such a run REFUSES to overwrite a cleaner

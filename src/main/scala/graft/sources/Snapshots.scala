@@ -467,16 +467,21 @@ object Snapshots {
     }
 
   /** What one row-removing commit takes out of HEAD's live rows: it
-    * selects the doomed rows, whose positions the commit's sidecar
-    * records.
+    * adds the boolean column [[DOOMED]] to the candidate scan, true on
+    * the rows the commit removes. The sidecar takes the rows where it is
+    * true, a rewrite keeps the rest (`NOT coalesce(DOOMED, false)`), so
+    * the two split the live rows by ONE definition — a predicate's
+    * complement is not its negation when it can be NULL.
     */
   private type Removal = DataFrame => DataFrame
+  private val DOOMED = "_graft_doomed"
 
-  /** The MERGE removal: live rows whose key is among `keys` (no
-    * distinct — a semi join ignores duplicate build keys).
+  /** The MERGE removal: live rows whose key is among `keys`. A left
+    * outer join, so each key appears once in `keys`: the merge verbs
+    * read them back from a dir their dup refusal wrote.
     */
   private def byKeys(keys: DataFrame, keyCols: Seq[String]): Removal =
-    _.join(keys, keyCols, "left_semi")
+    _.join(keys.withColumn(DOOMED, lit(true)), keyCols, "left_outer")
 
   /** The keys a merge wrote, read back from its data dir: the source is
     * evaluated once, so even a nondeterministic source removes exactly
@@ -488,69 +493,85 @@ object Snapshots {
 
   /** THE commit loop of every verb that removes rows ([[deleteWhere]],
     * [[mergeInto]], [[mergeIntoVersioned]]) and the one place the debt
-    * rule ([[Counts.due]]) picks how the removal lands. The commit first
-    * writes a sidecar of the doomed rows' (file, row) positions; its
-    * footer count gives the counts the commit would leave:
+    * rule ([[Counts.due]]) picks how the removal lands:
     *
-    *  - debt not due: the sidecar joins HEAD's unchanged data dirs
-    *    (merge-on-read);
-    *  - debt due: HEAD's live rows minus the sidecar's are written as one
-    *    new data dir that replaces every dir and sidecar of HEAD, and the
-    *    sidecar is deleted (one small wasted write per rewrite).
+    *  - a sidecar of the doomed rows' (file, row) positions, over HEAD's
+    *    unchanged data dirs (merge-on-read), while the counts it leaves
+    *    are not due;
+    *  - otherwise a rewrite: HEAD's live rows the removal keeps, written
+    *    as one new data dir that replaces every dir and sidecar of HEAD.
     *
-    * So every commit leaves fewer dead rows than live ones, or an empty
-    * table. Either way the commit's own data dir (if any) joins the SAME
+    * A merge into a key-unique table removes at most one row per row it
+    * adds, so when even that many would bring the debt due the commit
+    * rewrites at once. Otherwise it writes the sidecar first, and its
+    * footer count gives the counts the commit would leave; if those are
+    * due (a delete, or a merge into a table with duplicate keys) the
+    * sidecar is deleted and the commit rewrites instead. So every
+    * commit leaves fewer dead rows than live ones, or an empty table,
+    * and a rewrite writes at most the dead rows it clears plus the rows
+    * the commit adds.
+    *
+    * Either way the commit's own data dir (if any) joins the SAME
     * manifest publish, so the verb stays one version. `edit` runs per
     * attempt against the head the CAS asserts and returns that dir, the
     * removal and the schema to pin; with `ownsAdded` the dir was written
-    * per attempt and a failed or lost attempt deletes it. A lost CAS race
-    * deletes this attempt's sidecar or rewritten dir and re-decides from
-    * the new head (a concurrent compaction remaps positions, a concurrent
-    * delete changes what is dead). The counts come from the parent's
-    * plus the footers of the files this commit wrote: no Spark job.
+    * per attempt. A failed or lost attempt deletes every file it wrote,
+    * and a lost CAS race re-decides from the new head (a concurrent
+    * compaction remaps positions, a concurrent delete changes what is
+    * dead). The counts come from the parent's plus the footers of the
+    * files this commit wrote: no Spark job.
     */
   private def commitRemoving(s: SparkSession, root: String, op: String,
       ownsAdded: Boolean)
       (edit: (Int, Manifest) => (Option[String], Removal, Option[StructType]))
       : Int = {
     val f = fs(s, root)
+    def drop(paths: Seq[String]): Unit =
+      paths.foreach(p => f.delete(new Path(p), true))
     var attempts = 0
     while (true) {
       val head = headVersion(s, root)
       require(head > 0, s"no snapshot at $root — bootstrap with commit()")
       val m = manifest(s, root, head)
       val (added, removal, schema) = edit(head, m)
-      def dropAdded(): Unit =
-        if (ownsAdded) added.foreach(d => f.delete(new Path(d), true))
-      val (next, out) =
+      val dv = s"$root/dv/w${token()}"
+      val dir = s"$root/data/w${token()}"
+      val written = Seq(dv, dir) ++ (if (ownsAdded) added.toSeq else Nil)
+      val next =
         try {
           // the candidate scan carries its own positions (_metadata is
           // a scan column, not a join output), with earlier sidecars
           // anti-joined out so an already-dead row never re-records
-          val dv = s"$root/dv/w${token()}"
-          val scan = m.scan(s)
-            .select(col("_metadata.file_path").as("_graft_fp"),
-              col("_metadata.row_index").as("_graft_ri"), col("*"))
-          removal(minusDvs(s, scan, m.dvs, "_graft_fp", "_graft_ri"))
-            .select(col("_graft_fp").as("file_path"),
-              col("_graft_ri").as("row_index"))
-            .write.mode("overwrite").parquet(dv)
+          val table = m.scan(s)
+          val flagged = removal(minusDvs(s,
+            table.select(col("_metadata.file_path").as("_graft_fp"),
+              col("_metadata.row_index").as("_graft_ri"), col("*")),
+            m.dvs, "_graft_fp", "_graft_ri"))
+          val parent = m.counts(s)
           val addedRows = rowsIn(s, added.toSeq)
-          val after = m.counts(s).add(addedRows, rowsIn(s, Seq(dv)))
-          if (!after.due)
-            (Manifest(m.dirs ++ added, m.dvs :+ dv, schema, Some(after)), dv)
-          else {
-            val dir = s"$root/data/w${token()}"
-            live(s, m.copy(dvs = m.dvs :+ dv))
-              .write.mode("overwrite").parquet(dir)
-            f.delete(new Path(dv), true)
-            (Manifest(dir +: added.toSeq, Seq.empty, schema,
-              Some(Counts(rowsIn(s, Seq(dir)) + addedRows, 0))), dir)
+          val sidecar =
+            if (parent.add(addedRows, addedRows).due) None
+            else {
+              flagged.filter(col(DOOMED))
+                .select(col("_graft_fp").as("file_path"),
+                  col("_graft_ri").as("row_index"))
+                .write.mode("overwrite").parquet(dv)
+              Some(parent.add(addedRows, rowsIn(s, Seq(dv)))).filterNot(_.due)
+            }
+          sidecar match {
+            case Some(after) =>
+              Manifest(m.dirs ++ added, m.dvs :+ dv, schema, Some(after))
+            case None =>
+              flagged.filter(!coalesce(col(DOOMED), lit(false)))
+                .select(table.columns.map(col): _*)
+                .write.mode("overwrite").parquet(dir)
+              drop(Seq(dv))
+              Manifest(dir +: added.toSeq, Seq.empty, schema,
+                Some(Counts(rowsIn(s, Seq(dir)) + addedRows, 0)))
           }
-        } catch { case t: Throwable => dropAdded(); throw t }
+        } catch { case t: Throwable => drop(written); throw t }
       if (tryPublishManifest(s, root, head + 1, next)) return head + 1
-      f.delete(new Path(out), true)
-      dropAdded()
+      drop(written)
       attempts += 1
       require(attempts < 64,
         s"$op contention at $root: lost $attempts CAS races")
@@ -579,7 +600,7 @@ object Snapshots {
     // a delete changes no columns: the parent's committed schema
     // carries forward verbatim
     commitRemoving(s, root, "deleteWhere", ownsAdded = false) { (_, m) =>
-      (None, _.filter(cond), m.schema)
+      (None, _.withColumn(DOOMED, cond), m.schema)
     }
 
   /** MERGE INTO — latest-wins upsert as ONE atomic commit: table rows
@@ -601,8 +622,8 @@ object Snapshots {
     * dir is written ONCE, outside the CAS loop, and `source` is
     * evaluated exactly once: the matched keys are read back from the
     * written dir. Cost per merge: one key-column scan of the table (or,
-    * when the debt is due, one rewrite of the live rows — amortized at
-    * most one row per row the merges before it removed) + |source|
+    * when the debt is due, one rewrite of the live rows — at most the
+    * rows the merges before it removed plus its own) + |source|
     * written. The written key set is small in the nightly-delta case,
     * so it broadcasts and the table scan is not shuffled.
     */

@@ -948,7 +948,7 @@ class RoundTripSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fsys.delete(new org.apache.hadoop.fs.Path(root), true)
     Snapshots.commit(spark, root,
-      Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
+      Seq((1L, "a"), (2L, "b"), (5L, "e"), (6L, "f")).toDF("id", "tag"))
     val first = JobCount(spark.sparkContext) {
       Snapshots.mergeInto(spark, root,
         Seq((2L, "B"), (3L, "c")).toDF("id", "tag"), Seq("id"))
@@ -962,7 +962,8 @@ class RoundTripSpec extends SparkSpec {
       got = Snapshots.read(spark, root).collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
     }
-    assert(got == Set((1L, "a"), (2L, "B"), (3L, "C"), (4L, "d")))
+    assert(got == Set((1L, "a"), (2L, "B"), (3L, "C"), (4L, "d"), (5L, "e"),
+      (6L, "f")))
     // measured shape at this Spark version. A first merge runs 4 jobs:
     // the data write (AQE window-shuffle job + write job, the dup check
     // riding it via dupValidated) and the sidecar write (broadcast of
@@ -976,10 +977,11 @@ class RoundTripSpec extends SparkSpec {
     assert(first <= 4, s"first mergeInto ran $first jobs")
     assert(second <= 5, s"mergeInto over sidecars ran $second jobs")
     assert(read <= 2, s"Snapshots.read with sidecars ran $read jobs")
-    // both merges stayed on the sidecar path: before the second, dead
-    // (1) was below live (3)
+    // both merges stayed on the sidecar path: even one removed row per
+    // added row would leave 2 dead of 6 rows after the first and 3 dead
+    // of 8 after the second
     assert(Snapshots.manifest(spark, root, 2).recorded ==
-      Some(Snapshots.Counts(4, 1)))
+      Some(Snapshots.Counts(6, 1)))
     assert(Snapshots.dvDirsOf(spark, root, 3).size == 2)
   }
 
@@ -1003,7 +1005,8 @@ class RoundTripSpec extends SparkSpec {
       Seq((1L, "A")).toDF("id", "tag"), Seq("id")) == 2)
     assert(Snapshots.manifest(spark, root, 2).recorded ==
       Some(Snapshots.Counts(4, 1)))
-    // v3's sidecar would leave 6 rows, 3 dead, 3 live — due
+    // v3 adds 2 rows: one removed row per added row would leave 6 rows,
+    // 3 dead, 3 live — due, so it rewrites without writing a sidecar
     val merge = JobCount(spark.sparkContext) {
       assert(Snapshots.mergeInto(spark, root,
         Seq((1L, "X"), (2L, "C")).toDF("id", "tag"), Seq("id")) == 3)
@@ -1024,15 +1027,13 @@ class RoundTripSpec extends SparkSpec {
     // history is untouched
     assert(rows(Some(2)) == Set((1L, "A"), (2L, "b"), (3L, "c")))
     assert(rows(Some(1)) == Set((1L, "a"), (2L, "b"), (3L, "c")))
-    // measured shape at this Spark version. The rewrite merge runs 7
+    // measured shape at this Spark version. The rewrite merge runs 5
     // jobs: the data write (AQE window-shuffle job + write job, the dup
-    // check riding it), the sidecar whose count found the debt due (the
-    // broadcast of the key set read back from the written dir, the
-    // broadcast of HEAD's sidecar, the write job) and the kept-rows
-    // write (the broadcast of both sidecars, the write job). The read
-    // after it runs its action only: no sidecar broadcast is left to
-    // build.
-    assert(merge <= 7, s"rewrite mergeInto ran $merge jobs")
+    // check riding it) and the kept-rows write (the broadcast of HEAD's
+    // sidecar, the broadcast of the key set read back from the written
+    // dir, the write job). The read after it runs its action only: no
+    // sidecar broadcast is left to build.
+    assert(merge <= 5, s"rewrite mergeInto ran $merge jobs")
     assert(read <= 1, s"Snapshots.read after a rewrite ran $read jobs")
   }
 
@@ -1131,6 +1132,28 @@ class RoundTripSpec extends SparkSpec {
     assert(Snapshots.commit(spark, root, Seq((7L, "b")).toDF("id", "tag")) == 3)
     assert(Snapshots.manifest(spark, root, 3).recorded == Some(Counts(7, 2)))
     assert(Snapshots.read(spark, root).count() == 5)
+  }
+
+  test("snapshots: a failed delete leaves no sidecar or data dir behind") {
+    import graft.sources.Snapshots
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    import spark.implicits._
+    val root = s"${graft.Scratch.dir}/snap_failed_delete"
+    val fsys = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fsys.delete(new Path(root), true)
+    Snapshots.commit(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
+    def files(): Set[String] = Seq("data", "dv").map(d => new Path(s"$root/$d"))
+      .filter(fsys.exists).flatMap(fsys.listStatus(_).map(_.getPath.getName))
+      .toSet
+    val before = files()
+    // the condition fails inside the sidecar's write job
+    intercept[Exception] {
+      Snapshots.deleteWhere(spark, root,
+        raise_error(lit("refused")).cast("boolean"))
+    }
+    assert(Snapshots.headVersion(spark, root) == 1)
+    assert(files() == before, "the failed attempt left files behind")
   }
 
   test("snapshots MERGE: a nondeterministic source deletes exactly the keys it wrote") {

@@ -41,6 +41,15 @@ class SnapshotModelSpec extends SparkSpec {
       m.filterNot { case (_, r) => r.n.exists(_ > k) || t.contains(r.tag) }
   }
 
+  /** Rows `op` writes to its own data dir: a versioned merge drops the
+    * rows that lose to the live row.
+    */
+  private def added(m: Model, op: Op): Long = op match {
+    case Merge(rs) => rs.size.toLong
+    case VMerge(rs) => rs.count(r => !m.get(r.id).exists(t => r.v < t.v)).toLong
+    case _: Delete => 0L
+  }
+
   /** Live rows `op` takes out of `m`: the rows it replaces or deletes. */
   private def removed(m: Model, op: Op): Long = op match {
     case Merge(rs) => rs.count(r => m.contains(r.id)).toLong
@@ -103,9 +112,11 @@ class SnapshotModelSpec extends SparkSpec {
         val parent = i + 1
         val before = Snapshots.manifest(spark, root, parent)
         val pc = before.recorded.get
-        // the rule: rewrite when the sidecar of this op's removed rows
-        // would leave as many dead rows as live ones
-        val due = pc.dead + removed(models(i), op) >= models(i + 1).size
+        // the rule: rewrite when one removed row per added row would
+        // already leave as many dead rows as live ones, or when the
+        // sidecar of this op's removed rows would
+        val due = pc.dead + added(models(i), op) >= pc.live ||
+          pc.dead + removed(models(i), op) >= models(i + 1).size
         val v = op match {
           case Merge(rs) => Snapshots.mergeInto(spark, root, frame(rs), Seq("id"))
           case VMerge(rs) =>

@@ -726,11 +726,20 @@ class StreamingSpec extends SparkSpec {
     }.toSet
     assert(v1 == wantV1)
   }
-  test("st17 merge-on-read CDC: exactly-once across kill + replay, no rewrite") {
+  /** st17's kill + restart under `name` in the scratch dir: batch 0
+    * (the base) commits as version 1 and the query is KILLED; the delta
+    * arrives with `replay` of the base, and the restart merges it as ONE
+    * batch -> version 2 (in-batch dups reduced by the comparator). A
+    * stale batch replayed against the table must not commit, HEAD must
+    * converge on src08's table and version 1 must stay pinned to the
+    * base generation's merge. Returns the table root.
+    */
+  private def st17KillReplay(name: String,
+      replay: Seq[EventStreams.Upd] => Seq[EventStreams.Upd]): String = {
     import spark.implicits._
     import org.apache.commons.io.FileUtils
     import graft.sources.Snapshots
-    val baseDir = "/root/repo/target/roundtrip/st17_chaos"
+    val baseDir = s"${graft.Scratch.dir}/$name"
     val (feed, root, ckpt) = (s"$baseDir/feed", s"$baseDir/root", s"$baseDir/ckpt")
     FileUtils.deleteQuietly(new java.io.File(baseDir))
     def updRows(df: org.apache.spark.sql.DataFrame): Seq[EventStreams.Upd] =
@@ -740,18 +749,11 @@ class StreamingSpec extends SparkSpec {
     def mkQuery() = EventStreams.mergeCdcSink(spark,
       spark.readStream.schema(spark.createDataset(base).schema).parquet(feed)
         .as[EventStreams.Upd], root, ckpt)
-    // batch 0 commits as version 1, the query is KILLED; the delta
-    // arrives with a replay of half the base; the restart merges it as
-    // ONE batch -> version 2 (in-batch dups reduced by the comparator).
-    // A replay of the whole base would replace every row, leaving as
-    // many dead rows as live ones: that merge rewrites instead
-    // (Snapshots.commitRemoving)
     spark.createDataset(base).write.mode("overwrite").parquet(feed)
     val q1 = mkQuery()
     try q1.processAllAvailable() finally q1.stop()
     assert(Snapshots.headVersion(spark, root) == 1)
-    spark.createDataset(delta ++ base.filter(_.o_orderkey % 2 == 1))
-      .write.mode("append").parquet(feed)
+    spark.createDataset(delta ++ replay(base)).write.mode("append").parquet(feed)
     val q2 = mkQuery()
     try q2.processAllAvailable() finally q2.stop()
     assert(Snapshots.headVersion(spark, root) == 2,
@@ -760,14 +762,6 @@ class StreamingSpec extends SparkSpec {
     val v = EventStreams.mergeCdcBatch(spark, root, 0L,
       spark.createDataset(base).toDF())
     assert(v == 2 && Snapshots.headVersion(spark, root) == 2)
-    // MERGE-ON-READ, not a rewrite: v2 still lists v1's data dirs and
-    // carries a deletion-vector sidecar (st12's replace would swap the
-    // file set and carry none)
-    assert(Snapshots.dirsOf(spark, root, 1).toSet
-      .subsetOf(Snapshots.dirsOf(spark, root, 2).toSet),
-      "merge commit must keep the parent's data files")
-    assert(Snapshots.dvDirsOf(spark, root, 2).nonEmpty,
-      "merge commit must record matched rows as deletion vectors")
     // the converged HEAD is src08's table, row for row
     val got = Snapshots.read(spark, root)
       .select("o_orderkey", "o_orderstatus", "o_totalprice").collect()
@@ -784,6 +778,35 @@ class StreamingSpec extends SparkSpec {
       (b.o_orderkey, b.o_orderstatus, b.o_totalprice)
     }.toSet
     assert(v1 == wantV1)
+    root
+  }
+
+  test("st17 merge-on-read CDC: exactly-once across kill + replay, no rewrite") {
+    import graft.sources.Snapshots
+    // a replay of half the base replaces too few rows to bring the
+    // dead-row debt due
+    val root = st17KillReplay("st17_chaos", _.filter(_.o_orderkey % 2 == 1))
+    // MERGE-ON-READ, not a rewrite: v2 still lists v1's data dirs and
+    // carries a deletion-vector sidecar (st12's replace would swap the
+    // file set and carry none)
+    assert(Snapshots.dirsOf(spark, root, 1).toSet
+      .subsetOf(Snapshots.dirsOf(spark, root, 2).toSet),
+      "merge commit must keep the parent's data files")
+    assert(Snapshots.dvDirsOf(spark, root, 2).nonEmpty,
+      "merge commit must record matched rows as deletion vectors")
+  }
+
+  test("st17 CDC: exactly-once across kill + full base replay, which rewrites") {
+    import graft.sources.Snapshots
+    // the at-least-once replay of the WHOLE base replaces every row, so
+    // a sidecar would leave as many dead rows as live ones: the same
+    // single version rewrites the live rows instead (commitRemoving)
+    val root = st17KillReplay("st17_full_replay", identity)
+    assert(Snapshots.dvDirsOf(spark, root, 2).isEmpty,
+      "a rewriting merge must carry no deletion vectors")
+    assert(Snapshots.dirsOf(spark, root, 1).toSet
+      .intersect(Snapshots.dirsOf(spark, root, 2).toSet).isEmpty,
+      "a rewriting merge must replace the parent's data files")
   }
 
   test("st17's Catalyst latest-wins aggregate equals the better fold per key") {
