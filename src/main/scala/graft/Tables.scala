@@ -114,8 +114,11 @@ object Tables {
   * index layouts across two roots.
   */
 object Scratch {
-  def dir: String =
-    sys.env.getOrElse("GRAFT_SCRATCH", "/root/repo/target/roundtrip")
+  /** `GRAFT_SCRATCH`, else `target/roundtrip` under the working
+    * directory: runs from two checkouts never share roots.
+    */
+  def dir: String = sys.env.getOrElse("GRAFT_SCRATCH",
+    java.nio.file.Paths.get("target", "roundtrip").toAbsolutePath.toString)
 
   /** Filesystem/metastore-safe tag for an sf data dir. */
   def tag(d: String): String = d.replaceAll("[^a-zA-Z0-9]", "_")

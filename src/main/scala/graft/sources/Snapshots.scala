@@ -2,13 +2,20 @@ package graft.sources
 
 import graft.Gate
 import graft.Tables._
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.json4s.{JArray, JInt, JLong, JObject, JString}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType,
+  StructField, StructType}
+import org.json4s.{JArray, JInt, JLong, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
 
 /** A replace-form commit (commitReplace / a compaction attempt) lost
@@ -34,12 +41,13 @@ final class SnapshotConflictException(msg: String)
   *
   *   root/data/w<token>/       immutable data files, one dir per commit
   *                              attempt (writer-unique name)
-  *   root/dv/w<token>/         deletion-vector sidecars: (file, row)
-  *                              pairs of rows a commit removed
-  *   root/manifests/v<n>.json   the dirs, sidecars, schema and row
-  *                              counts of snapshot n (one json4s
-  *                              object) — its EXCLUSIVE creation is the
-  *                              one commit point (optimistic concurrency)
+  *   root/dv/w<token>/         deletion-vector sidecars: one BIGINT
+  *                              position per row a commit removed
+  *   root/manifests/v<n>.json   the dirs, data files (path, bytes,
+  *                              rows), sidecars, schema and row counts
+  *                              of snapshot n (one json4s object) — its
+  *                              EXCLUSIVE creation is the one commit
+  *                              point (optimistic concurrency)
   *   root/HEAD                  hint to the current version; readers
   *                              probe manifests forward from it
   *
@@ -60,12 +68,12 @@ final class SnapshotConflictException(msg: String)
   * versioning, plus the multi-writer safety a lakehouse needs.
   *
   * Scale of the METADATA itself (the thousand-commit story): every
-  * manifest is SELF-CONTAINED — the full dir list, not an action delta
+  * manifest is SELF-CONTAINED — the full file list, not an action delta
   * — so any version resolves from ONE manifest read; there is no log
   * replay to checkpoint away (Delta needs periodic checkpoint files
   * precisely because its log is deltas; writing the checkpoint every
-  * commit is affordable here because a manifest is a dir list, not a
-  * file list — [[commitManaged]] bounds the dirs). HEAD is the
+  * commit is affordable here because [[commitManaged]] bounds the dirs,
+  * and with them the files a manifest lists). HEAD is the
   * `_last_checkpoint`-style pointer: monotonic, self-healing (a probe
   * that advances rewrites it), re-verified by [[vacuum]] before it
   * truncates history — head resolution stays O(1) filesystem ops
@@ -74,7 +82,8 @@ final class SnapshotConflictException(msg: String)
   * against it (same-name columns must keep their type — loud
   * rejection, never a silent fork) and readers scan with the pinned
   * schema, so old versions keep their own narrower shape with zero
-  * footer-merge cost.
+  * footer-merge cost. Every scan is built from the manifest's file list
+  * ([[scanOf]]): no read, merge or delete lists a directory.
   */
 object Snapshots {
 
@@ -170,10 +179,10 @@ object Snapshots {
     // an append extends the PARENT MANIFEST (not "dirs 1..v" by
     // convention — a delete commit contributes no data dir, a replace
     // swapped the set) and carries its deletion vectors forward: new
-    // files can't be referenced by any DV (sidecars name (file, row)
-    // pairs), and rows already deleted must STAY deleted
-    val dataDir = writeData(s, root, df, None)
-    val added = rowsIn(s, Seq(dataDir))
+    // files can't be referenced by any DV (their ordinals are past every
+    // position a sidecar names), and rows already deleted must STAY
+    // deleted
+    val data = writeData(s, root, df, None)
     retryCommit(s, root) { v =>
       // the schema contract rebases per attempt too: the parent the
       // loser merges against is the RACE WINNER's committed schema. A
@@ -183,11 +192,11 @@ object Snapshots {
       // silently narrowing away columns (and bypassing the type-fork
       // check) for every HEAD reader after it.
       val parent = manifest(s, root, v - 1)
-      val merged = parent.schema
-        .orElse(inferredSchemaOf(s, root, v - 1, parent))
+      val merged = parent.schema.orElse(inferredSchemaOf(s, parent))
         .fold(df.schema)(p => mergeSchemas(p, df.schema))
-      Manifest(parent.dirs :+ dataDir, parent.dvs, Some(merged),
-        Some(parent.counts(s).add(added, 0)))
+      parent.copy(dirs = parent.dirs :+ data.dir,
+        files = Some(parent.dataFiles ++ data.files), schema = Some(merged),
+        recorded = Some(parent.counts(s).add(data.rows, 0)))
     }
   }
 
@@ -213,14 +222,15 @@ object Snapshots {
     */
   private[graft] def replaceAt(s: SparkSession, root: String, base: Int,
       df: DataFrame, maxRecordsPerFile: Option[Long]): Int = {
-    val dataDir = writeData(s, root, df, maxRecordsPerFile)
-    if (tryPublishManifest(s, root, base + 1, Manifest(Seq(dataDir),
-        Seq.empty, Some(df.schema), Some(Counts(rowsIn(s, Seq(dataDir)), 0)))))
+    val data = writeData(s, root, df, maxRecordsPerFile)
+    if (tryPublishManifest(s, root, base + 1, Manifest(Seq(data.dir),
+        Some(data.files), Seq.empty, Seq.empty, Some(df.schema),
+        Some(Counts(data.rows, 0)))))
       base + 1
     else {
       // this dir was never referenced by any manifest: safe to drop
       // eagerly instead of waiting out vacuumOrphans' age horizon
-      fs(s, root).delete(new Path(dataDir), true)
+      fs(s, root).delete(new Path(data.dir), true)
       throw new SnapshotConflictException(
         s"replace commit at $root lost the race for v${base + 1}: a " +
           s"concurrent commit landed after this writer read v$base — " +
@@ -281,12 +291,18 @@ object Snapshots {
   }
 
   private def writeData(s: SparkSession, root: String, df: DataFrame,
-      maxRecordsPerFile: Option[Long]): String = {
-    val dataDir = s"$root/data/w${token()}"
+      maxRecordsPerFile: Option[Long]): Listed =
+    writeTo(s, s"$root/data/w${token()}", df, maxRecordsPerFile)
+
+  /** Write `df` as parquet into `dir`, then list what landed: the only
+    * directory listing a commit makes is of the dir it just wrote.
+    */
+  private def writeTo(s: SparkSession, dir: String, df: DataFrame,
+      maxRecordsPerFile: Option[Long] = None): Listed = {
     val w = df.write.mode("overwrite")
     maxRecordsPerFile.fold(w)(n => w.option("maxRecordsPerFile", n))
-      .parquet(dataDir)
-    dataDir
+      .parquet(dir)
+    Listed(dir, listDir(s, dir))
   }
 
   /** The optimistic-concurrency loop of an append: derive the next
@@ -403,7 +419,7 @@ object Snapshots {
   }
 
   /** Read a pinned snapshot (or HEAD when `version` is None). The
-    * returned frame's scan lists exactly the manifest's directories —
+    * returned frame's scan lists exactly the manifest's files —
     * immutable files, so the frame is stable however long the reader
     * holds it and whatever commits land meanwhile.
     */
@@ -416,55 +432,98 @@ object Snapshots {
     // before a later column existed surface it as null), and the scan
     // never pays a mergeSchema footer sweep — at 100 TB schema comes
     // from one manifest read, not a million file footers. Pre-contract
-    // manifests (no schema field) fall back to footer inference. Dirs,
+    // manifests (no schema field) fall back to footer inference. Files,
     // sidecars and schema come from ONE manifest read, and the scan is
-    // built once (one file-index listing).
+    // built from its file list: no directory listing, no listing job
+    // however many commits the table holds.
     live(s, manifest(s, root, v))
   }
 
   /** A manifest's live rows: its data scan minus its sidecars. */
-  private def live(s: SparkSession, m: Manifest): DataFrame = {
-    val base = m.scan(s)
-    if (m.dvs.isEmpty) base
-    else {
-      // merge-on-read: anti-join the (file, row-position) sidecar rows
-      // out of the scan. Positions come from the parquet reader itself
-      // (_metadata.row_index — no stored row ids);
-      // the scan side stays a plain pruned/pushed-down parquet scan.
-      minusDvs(s,
-        base.select(base.columns.map(col)
-          :+ col("_metadata.file_path").as("_graft_fp")
-          :+ col("_metadata.row_index").as("_graft_ri"): _*),
-        m.dvs, "_graft_fp", "_graft_ri")
-        .drop("_graft_fp", "_graft_ri")
+  private def live(s: SparkSession, m: Manifest): DataFrame =
+    if (!m.hasDvs) m.scan(s).drop(FILE)
+    else minusDvs(s, m, positioned(s, m)).drop(POS, FILE)
+
+  /** The hidden partition column every [[scanOf]] carries: the row's
+    * file ordinal in the scanned list.
+    */
+  private val FILE = "_graft_file"
+
+  /** A row's position in its version: file ordinal << [[ROW_BITS]] |
+    * parquet row index. One BIGINT, so the sidecar anti-join hashes a
+    * long, not a file-path string.
+    */
+  private val POS = "_graft_pos"
+  private val ROW_BITS = 40
+  private val MAX_FILES = 1 << (63 - ROW_BITS)
+
+  /** HEAD's data scan with each row's [[POS]]. Positions stay valid for
+    * as long as a sidecar can name them: an append and a sidecar commit
+    * only extend the file list, and the commits that renumber it (a
+    * rewrite, a replace, a compaction) publish no sidecars. Past 2^23
+    * files or 2^40 rows in one file a position would not fit: refused,
+    * never wrapped.
+    */
+  private def positioned(s: SparkSession, m: Manifest): DataFrame = {
+    require(m.dataFiles.size <= MAX_FILES,
+      s"${m.dataFiles.size} files: row positions need fewer than 2^23 " +
+        "per version — compact the table")
+    m.dataFiles.find(_.rows > (1L << ROW_BITS)).foreach { f =>
+      throw new IllegalArgumentException(s"${f.path} holds ${f.rows} rows: " +
+        "row positions need fewer than 2^40 per file")
     }
+    m.scan(s).withColumn(POS, shiftleft(col(FILE), ROW_BITS)
+      .bitwiseOR(col("_metadata.row_index")))
   }
 
-  /** Every sidecar's fixed schema: the (file, row-position) pairs a
-    * delete recorded.
+  /** Sidecars' fixed schemas: a position per dead row, and the legacy
+    * (file, row-position) pair that sidecars written before positions
+    * existed hold.
     */
-  private val DV_SCHEMA = "file_path STRING, row_index BIGINT"
+  private val DV_SCHEMA = StructType(Seq(StructField("pos", LongType)))
+  private val PATH_DV_SCHEMA =
+    StructType.fromDDL("file_path STRING, row_index BIGINT")
 
   /** THE deletion-vector application rule — anti-join the sidecars'
-    * (file, row-position) pairs out of a scan carrying its positions in
-    * columns `fp`/`ri`. The sidecar holds ONLY deleted positions, so it
-    * broadcasts. Sidecars are read with their fixed schema (no footer-
-    * inference job) and NOT de-duplicated: a left-anti join only asks
-    * whether a build row exists, so a duplicate pair changes nothing,
-    * and a distinct would add a shuffle over every sidecar ever written
-    * on each read. One definition shared by [[read]] and the MERGE /
-    * delete candidate scans, so the merge-on-read semantics (both-column
-    * equality, anti-join) cannot fork between them.
+    * positions out of a [[positioned]] scan. The sidecars hold ONLY dead
+    * positions, so they broadcast as a long-keyed hash relation. They
+    * are read with their fixed schema (no footer-inference job) and NOT
+    * de-duplicated: a left-anti join only asks whether a build row
+    * exists, so a duplicate changes nothing, and a distinct would add a
+    * shuffle over every sidecar on each read. One definition shared by
+    * [[read]] and the MERGE / delete candidate scans, so the
+    * merge-on-read semantics cannot fork between them.
     */
-  private def minusDvs(s: SparkSession, scan: DataFrame, dvs: Seq[String],
-      fp: String, ri: String): DataFrame =
-    if (dvs.isEmpty) scan
-    else {
-      val dv = broadcast(s.read.schema(DV_SCHEMA).parquet(dvs.map(literal): _*)
-        .select(col("file_path").as("_dv_fp"), col("row_index").as("_dv_ri")))
-      scan.join(dv, col(fp) === col("_dv_fp") && col(ri) === col("_dv_ri"),
-        "left_anti")
-    }
+  private def minusDvs(s: SparkSession, m: Manifest, scan: DataFrame)
+      : DataFrame =
+    if (!m.hasDvs) scan
+    else scan.join(broadcast(deadPositions(s, m).toDF("_dv_pos")),
+      col(POS) === col("_dv_pos"), "left_anti")
+
+  /** Every position a manifest's sidecars name. Legacy path-keyed
+    * sidecars are translated through a tiny (file_path -> ordinal) table
+    * whose paths are spelled as `_metadata.file_path` spelled them when
+    * the sidecar was written; the version's next rewrite drops them.
+    */
+  private def deadPositions(s: SparkSession, m: Manifest): DataFrame = {
+    val current = m.sidecars.flatMap(_.files)
+    val legacy = m.pathDvs.flatMap(listDir(s, _))
+    val parts =
+      (if (current.isEmpty) Nil
+       else Seq(scanOf(s, current, Some(DV_SCHEMA)).select(col("pos")))) ++
+      (if (legacy.isEmpty) Nil
+       else {
+         val ordinals = s.createDataFrame(m.dataFiles.zipWithIndex.map {
+           case (f, i) => (scannedPath(s, f.path), i.toLong)
+         }).toDF("file_path", "_graft_ord")
+         Seq(scanOf(s, legacy, Some(PATH_DV_SCHEMA))
+           .join(broadcast(ordinals), "file_path")
+           .select(shiftleft(col("_graft_ord"), ROW_BITS)
+             .bitwiseOR(col("row_index")).as("pos")))
+       })
+    parts.reduceOption(_ unionByName _)
+      .getOrElse(s.range(0).select(col("id").as("pos")))
+  }
 
   /** What one row-removing commit takes out of HEAD's live rows: it
     * adds the boolean column [[DOOMED]] to the candidate scan, true on
@@ -487,17 +546,17 @@ object Snapshots {
     * evaluated once, so even a nondeterministic source removes exactly
     * the keys it appended.
     */
-  private def keysOf(s: SparkSession, dataDir: String, schema: StructType,
+  private def keysOf(s: SparkSession, data: Listed, schema: StructType,
       keyCols: Seq[String]): DataFrame =
-    s.read.schema(schema).parquet(literal(dataDir)).select(keyCols.map(col): _*)
+    scanOf(s, data.files, Some(schema)).select(keyCols.map(col): _*)
 
   /** THE commit loop of every verb that removes rows ([[deleteWhere]],
     * [[mergeInto]], [[mergeIntoVersioned]]) and the one place the debt
     * rule ([[Counts.due]]) picks how the removal lands:
     *
-    *  - a sidecar of the doomed rows' (file, row) positions, over HEAD's
-    *    unchanged data dirs (merge-on-read), while the counts it leaves
-    *    are not due;
+    *  - a sidecar of the doomed rows' positions, over HEAD's unchanged
+    *    data files (merge-on-read), while the counts it leaves are not
+    *    due;
     *  - otherwise a rewrite: HEAD's live rows the removal keeps, written
     *    as one new data dir that replaces every dir and sidecar of HEAD.
     *
@@ -512,18 +571,19 @@ object Snapshots {
     * the commit adds.
     *
     * Either way the commit's own data dir (if any) joins the SAME
-    * manifest publish, so the verb stays one version. `edit` runs per
-    * attempt against the head the CAS asserts and returns that dir, the
-    * removal and the schema to pin; with `ownsAdded` the dir was written
-    * per attempt. A failed or lost attempt deletes every file it wrote,
-    * and a lost CAS race re-decides from the new head (a concurrent
-    * compaction remaps positions, a concurrent delete changes what is
-    * dead). The counts come from the parent's plus the footers of the
-    * files this commit wrote: no Spark job.
+    * manifest publish, so the verb stays one version; its files go at
+    * the end of the list, after the files the sidecar names. `edit` runs
+    * per attempt against the head the CAS asserts and returns that dir,
+    * the removal and the schema to pin; with `ownsAdded` the dir was
+    * written per attempt. A failed or lost attempt deletes every file it
+    * wrote, and a lost CAS race re-decides from the new head (a
+    * concurrent compaction renumbers positions, a concurrent delete
+    * changes what is dead). The counts come from the parent's plus the
+    * footers of the files this commit wrote: no Spark job.
     */
   private def commitRemoving(s: SparkSession, root: String, op: String,
       ownsAdded: Boolean)
-      (edit: (Int, Manifest) => (Option[String], Removal, Option[StructType]))
+      (edit: Manifest => (Option[Listed], Removal, Option[StructType]))
       : Int = {
     val f = fs(s, root)
     def drop(paths: Seq[String]): Unit =
@@ -533,41 +593,40 @@ object Snapshots {
       val head = headVersion(s, root)
       require(head > 0, s"no snapshot at $root — bootstrap with commit()")
       val m = manifest(s, root, head)
-      val (added, removal, schema) = edit(head, m)
+      val (added, removal, schema) = edit(m)
       val dv = s"$root/dv/w${token()}"
       val dir = s"$root/data/w${token()}"
-      val written = Seq(dv, dir) ++ (if (ownsAdded) added.toSeq else Nil)
+      val written = Seq(dv, dir) ++
+        (if (ownsAdded) added.map(_.dir).toSeq else Nil)
       val next =
         try {
           // the candidate scan carries its own positions (_metadata is
           // a scan column, not a join output), with earlier sidecars
           // anti-joined out so an already-dead row never re-records
-          val table = m.scan(s)
-          val flagged = removal(minusDvs(s,
-            table.select(col("_metadata.file_path").as("_graft_fp"),
-              col("_metadata.row_index").as("_graft_ri"), col("*")),
-            m.dvs, "_graft_fp", "_graft_ri"))
+          val table = positioned(s, m)
+          val flagged = removal(minusDvs(s, m, table))
           val parent = m.counts(s)
-          val addedRows = rowsIn(s, added.toSeq)
+          val addedFiles = added.toSeq.flatMap(_.files)
+          val addedRows = added.fold(0L)(_.rows)
           val sidecar =
             if (parent.add(addedRows, addedRows).due) None
-            else {
-              flagged.filter(col(DOOMED))
-                .select(col("_graft_fp").as("file_path"),
-                  col("_graft_ri").as("row_index"))
-                .write.mode("overwrite").parquet(dv)
-              Some(parent.add(addedRows, rowsIn(s, Seq(dv)))).filterNot(_.due)
-            }
+            else Some(writeTo(s, dv,
+              flagged.filter(col(DOOMED)).select(col(POS).as("pos"))))
+              .filterNot(sc => parent.add(addedRows, sc.rows).due)
           sidecar match {
-            case Some(after) =>
-              Manifest(m.dirs ++ added, m.dvs :+ dv, schema, Some(after))
+            case Some(sc) =>
+              m.copy(dirs = m.dirs ++ added.map(_.dir),
+                files = Some(m.dataFiles ++ addedFiles),
+                sidecars = m.sidecars :+ sc, schema = schema,
+                recorded = Some(parent.add(addedRows, sc.rows)))
             case None =>
-              flagged.filter(!coalesce(col(DOOMED), lit(false)))
-                .select(table.columns.map(col): _*)
-                .write.mode("overwrite").parquet(dir)
+              val kept = writeTo(s, dir,
+                flagged.filter(!coalesce(col(DOOMED), lit(false)))
+                  .select(table.columns.filterNot(Set(FILE, POS)).map(col): _*))
               drop(Seq(dv))
-              Manifest(dir +: added.toSeq, Seq.empty, schema,
-                Some(Counts(rowsIn(s, Seq(dir)) + addedRows, 0)))
+              Manifest(dir +: added.map(_.dir).toSeq,
+                Some(kept.files ++ addedFiles), Seq.empty, Seq.empty, schema,
+                Some(Counts(kept.rows + addedRows, 0)))
           }
         } catch { case t: Throwable => drop(written); throw t }
       if (tryPublishManifest(s, root, head + 1, next)) return head + 1
@@ -582,8 +641,8 @@ object Snapshots {
   /** DELETE — rows matching `cond` at HEAD leave the table in one
     * commit, without touching any file an older version lists. While the
     * table's dead rows are fewer than its live ones the delete is
-    * merge-on-read: a sidecar of the rows' (file, row-position) pairs
-    * over the SAME immutable data files, so deleting 100 rows from a
+    * merge-on-read: a sidecar of the rows' positions over the SAME
+    * immutable data files, so deleting 100 rows from a
     * large table costs one small parquet write. Once dead rows would
     * reach the live count, the delete instead writes the rows it keeps
     * as one new data dir and drops every sidecar ([[commitRemoving]]):
@@ -599,7 +658,7 @@ object Snapshots {
   def deleteWhere(s: SparkSession, root: String, cond: Column): Int =
     // a delete changes no columns: the parent's committed schema
     // carries forward verbatim
-    commitRemoving(s, root, "deleteWhere", ownsAdded = false) { (_, m) =>
+    commitRemoving(s, root, "deleteWhere", ownsAdded = false) { m =>
       (None, _.withColumn(DOOMED, cond), m.schema)
     }
 
@@ -633,12 +692,12 @@ object Snapshots {
     // duplicate source keys would BOTH survive the merge — refused
     // loudly, but the check rides the data-dir write (dupValidated)
     // instead of costing its own job
-    val dataDir =
+    val data =
       try writeData(s, root, dupValidated(source, keyCols, "mergeInto"), None)
       catch { case t: Throwable => rethrowDup(t) }
-    val removal = byKeys(keysOf(s, dataDir, source.schema, keyCols), keyCols)
-    commitRemoving(s, root, "mergeInto", ownsAdded = false) { (head, m) =>
-      (Some(dataDir), removal, Some(mergedSchema(s, root, head, m, source)))
+    val removal = byKeys(keysOf(s, data, source.schema, keyCols), keyCols)
+    commitRemoving(s, root, "mergeInto", ownsAdded = false) { m =>
+      (Some(data), removal, Some(mergedSchema(s, m, source)))
     }
   }
 
@@ -665,9 +724,9 @@ object Snapshots {
     require(!keyCols.contains(versionCol),
       s"'$versionCol' cannot be both merge key and version")
     commitRemoving(s, root, "mergeIntoVersioned", ownsAdded = true) {
-      (head, m) =>
+      m =>
         // the schema check first: a refused type fork leaves no dir
-        val schema = mergedSchema(s, root, head, m, source)
+        val schema = mergedSchema(s, m, source)
         val losers = live(s, m)
           .select(keyCols.map(col) :+ col(versionCol).as("_tgt_v"): _*)
           .join(source.select(
@@ -677,13 +736,12 @@ object Snapshots {
         // the dup refusal rides this write (dupValidated — reduce to the
         // max-version row per key upstream); every source row is checked
         // because the anti-join consumes its full probe side
-        val dataDir =
+        val data =
           try writeData(s, root,
             dupValidated(source, keyCols, "mergeIntoVersioned")
               .join(losers, keyCols, "left_anti"), None)
           catch { case t: Throwable => rethrowDup(t) }
-        (Some(dataDir),
-          byKeys(keysOf(s, dataDir, source.schema, keyCols), keyCols),
+        (Some(data), byKeys(keysOf(s, data, source.schema, keyCols), keyCols),
           Some(schema))
     }
   }
@@ -691,9 +749,9 @@ object Snapshots {
   /** Same contract rule as commit(): a merge's source merges against the
     * parent's committed (or, pre-contract, inferred) schema.
     */
-  private def mergedSchema(s: SparkSession, root: String, head: Int,
-      m: Manifest, source: DataFrame): StructType =
-    m.schema.orElse(inferredSchemaOf(s, root, head, m))
+  private def mergedSchema(s: SparkSession, m: Manifest, source: DataFrame)
+      : StructType =
+    m.schema.orElse(inferredSchemaOf(s, m))
       .fold(source.schema)(p => mergeSchemas(p, source.schema))
 
   /** Oldest version whose manifest is still resolvable — the retention
@@ -712,61 +770,100 @@ object Snapshots {
 
   /** One version's manifest, parsed from ONE read: the data dirs
     * (v0 = the empty table — the bootstrap anchor for
-    * [[changesBetween]]), the deletion-vector sidecar dirs, the
-    * committed schema and the row [[Counts]]. Every key but "dirs" is
-    * optional, so manifests written before sidecars, before the schema
-    * contract or before counts parse unchanged (None / empty).
+    * [[changesBetween]]), the data files in ordinal order, the position
+    * sidecars, legacy path-keyed sidecars, the committed schema and the
+    * row [[Counts]]. Every key but "dirs" is optional, so manifests
+    * written before sidecars, the schema contract, counts or file lists
+    * parse unchanged (None / empty). The file order is the ordinal a
+    * sidecar position names: an append and a sidecar commit extend the
+    * parent's list at the end; a rewrite, replace or compaction may
+    * renumber it because it publishes no sidecars. A manifest without a
+    * file list gets one from [[legacyFiles]], recorded by its next
+    * commit.
     */
   private[graft] final case class Manifest(dirs: Seq[String],
-      dvs: Seq[String], schema: Option[StructType],
+      files: Option[Seq[DataFile]], sidecars: Seq[Listed],
+      pathDvs: Seq[String], schema: Option[StructType],
       recorded: Option[Counts]) {
+    /** The data files, once [[manifest]] has resolved a legacy list. */
+    def dataFiles: Seq[DataFile] =
+      files.getOrElse(throw new IllegalStateException(
+        s"manifest over ${dirs.mkString(", ")} has no file list"))
+
+    def hasDvs: Boolean = sidecars.nonEmpty || pathDvs.nonEmpty
+
     /** The version's data scan, read with the pinned schema when there
       * is one (no footer-inference job); pre-contract manifests infer.
       */
-    def scan(s: SparkSession): DataFrame =
-      schema.fold(s.read)(sc => s.read.schema(sc)).parquet(dirs.map(literal): _*)
+    def scan(s: SparkSession): DataFrame = scanOf(s, dataFiles, schema)
 
     /** The recorded counts; a manifest written before counts existed
       * gets them from the footers of its own files (the next commit
       * records them, so that happens once per legacy head).
       */
     def counts(s: SparkSession): Counts =
-      recorded.getOrElse(Counts(rowsIn(s, dirs), rowsIn(s, dvs)))
+      recorded.getOrElse(Counts(dataFiles.map(_.rows).sum,
+        (sidecars.flatMap(_.files) ++ pathDvs.flatMap(listDir(s, _)))
+          .map(_.rows).sum))
 
     /** One JSON object, written with json4s: any character a path may
       * hold (`]`, `"`, a space) round-trips. The schema stays base64 of
       * its canonical JSON, the form every earlier manifest carries.
+      * "dvs" keeps its old meaning, path-keyed sidecars.
       */
-    def toJson(version: Int): String =
+    def toJson(version: Int): String = {
+      def strings(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
+      def listing(fs: Seq[DataFile]) = JArray(fs.map(f => JObject(
+        "path" -> JString(f.path), "size" -> JLong(f.size),
+        "rows" -> JLong(f.rows))).toList)
       JsonMethods.compact(JsonMethods.render(JObject(List(
-        "version" -> JInt(version),
-        "dirs" -> JArray(dirs.map(JString(_)).toList),
-        "dvs" -> JArray(dvs.map(JString(_)).toList)) ++
+        "version" -> JInt(version), "dirs" -> strings(dirs)) ++
+        files.map(fs => "files" -> listing(fs)) ++
+        List("sidecars" -> JArray(sidecars.map(l => JObject(
+          "dir" -> JString(l.dir), "files" -> listing(l.files))).toList)) ++
+        (if (pathDvs.isEmpty) Nil else List("dvs" -> strings(pathDvs))) ++
         schema.map(sc => "schema" -> JString(java.util.Base64.getEncoder
           .encodeToString(sc.json.getBytes("UTF-8")))) ++
         recorded.toList.flatMap(c =>
           List("rows" -> JLong(c.rows), "dead" -> JLong(c.dead))))))
+    }
   }
 
   private[graft] object Manifest {
     def parse(json: String): Manifest = {
       val m = JsonMethods.parse(json)
-      def strings(key: String): Seq[String] = m \ key match {
+      def strings(v: JValue): Seq[String] = v match {
         case JArray(xs) => xs.collect { case JString(p) => p }
         case _ => Seq.empty
       }
-      def long(key: String): Option[Long] = m \ key match {
+      def long(v: JValue): Option[Long] = v match {
         case JInt(n) => Some(n.toLong)
+        case JLong(n) => Some(n)
         case _ => None
       }
-      Manifest(strings("dirs"), strings("dvs"),
+      def str(v: JValue): String = v match {
+        case JString(p) => p
+        case other => throw new IllegalArgumentException(s"manifest: $other")
+      }
+      def listing(v: JValue): Option[Seq[DataFile]] = v match {
+        case JArray(xs) => Some(xs.map(f => DataFile(str(f \ "path"),
+          long(f \ "size").get, long(f \ "rows").get)))
+        case _ => None
+      }
+      Manifest(strings(m \ "dirs"), listing(m \ "files"),
+        m \ "sidecars" match {
+          case JArray(xs) => xs.map(l =>
+            Listed(str(l \ "dir"), listing(l \ "files").getOrElse(Seq.empty)))
+          case _ => Seq.empty
+        },
+        strings(m \ "dvs"),
         m \ "schema" match {
           case JString(b64) => Some(org.apache.spark.sql.types.DataType
             .fromJson(new String(java.util.Base64.getDecoder.decode(b64),
               "UTF-8")).asInstanceOf[StructType])
           case _ => None
         },
-        for (r <- long("rows"); d <- long("dead")) yield Counts(r, d))
+        for (r <- long(m \ "rows"); d <- long(m \ "dead")) yield Counts(r, d))
     }
   }
 
@@ -789,38 +886,137 @@ object Snapshots {
     def due: Boolean = dead >= live
   }
 
-  /** Rows across the parquet files of `dirs`, summed from their footers
-    * on the driver: no Spark job.
+  /** One parquet file a manifest lists: its path under one of the
+    * manifest's dirs, its exact byte length (the reader finds the footer
+    * from it) and its row count, read once from that footer.
     */
-  private def rowsIn(s: SparkSession, dirs: Seq[String]): Long = {
-    val conf = s.sparkContext.hadoopConfiguration
-    dirs.iterator.flatMap { d =>
-      val p = new Path(d)
-      p.getFileSystem(conf).listStatus(p).iterator
-    }.filter(_.getPath.getName.endsWith(".parquet")).map { st =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
+  private[graft] final case class DataFile(path: String, size: Long,
+      rows: Long)
+
+  /** A dir and the files it holds, listed once, right after its write. */
+  private[graft] final case class Listed(dir: String, files: Seq[DataFile]) {
+    def rows: Long = files.map(_.rows).sum
   }
 
-  /** A path as Spark's reader takes it literally: the reader expands
-    * glob patterns, so a root holding `[1]` or `{a}` would match other
-    * paths (or none). Backslash-escaping the metacharacters keeps it
-    * one literal path.
+  /** The parquet files of one dir, by name, with their footer row
+    * counts: driver-side, no Spark job. Skips what Spark's own listing
+    * skips (`_SUCCESS`, `.crc`).
     */
-  private def literal(path: String): String =
-    path.flatMap(c => if ("\\[]{}*?".indexOf(c) >= 0) s"\\$c" else c.toString)
+  private def listDir(s: SparkSession, dir: String): Seq[DataFile] = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val p = new Path(dir)
+    p.getFileSystem(conf).listStatus(p).toSeq
+      .filter { st =>
+        val n = st.getPath.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .sortBy(_.getPath.getName)
+      .map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try DataFile(s"$dir/${st.getPath.getName}", st.getLen, r.getRecordCount)
+        finally r.close()
+      }
+  }
 
+  /** The file list of a manifest written before manifests listed files:
+    * one driver-side listing of its dirs, sorted by path. The first
+    * commit over it records this order.
+    */
+  private def legacyFiles(s: SparkSession, dirs: Seq[String]): Seq[DataFile] =
+    dirs.flatMap(listDir(s, _)).sortBy(_.path)
+
+  private def qualified(s: SparkSession, path: String): Path = {
+    val p = new Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(p)
+  }
+
+  /** A file's path as `_metadata.file_path` reports it, the key of a
+    * legacy sidecar: the qualified URI, escaped, without an empty
+    * authority (`file:/a%20b/f`, where the qualified path reads
+    * `file:///a%20b/f`).
+    */
+  private def scannedPath(s: SparkSession, path: String): String = {
+    val u = qualified(s, path).toUri
+    new java.net.URI(u.getScheme, Option(u.getAuthority).filter(_.nonEmpty)
+      .orNull, u.getPath, u.getQuery, u.getFragment).toString
+  }
+
+  /** THE scan of listed parquet files: `schema` (or, pre-contract, the
+    * inferred one) plus the hidden long partition column [[FILE]], each
+    * file's ordinal in `files`. Built from the list alone — no
+    * directory listing, so no parallel-listing job at any file count.
+    */
+  private def scanOf(s: SparkSession, files: Seq[DataFile],
+      schema: Option[StructType]): DataFrame = {
+    val index = new ListedIndex(files.map(f =>
+      new FileStatus(f.size, false, 1, 0L, 0L, qualified(s, f.path))))
+    val format = new ParquetFileFormat
+    val data = schema.getOrElse(format.inferSchema(s, Map.empty,
+      index.statuses).getOrElse(throw new IllegalArgumentException(
+        s"cannot infer a schema from ${files.size} files")))
+    s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      nullable(data).asInstanceOf[StructType], None, format, Map.empty)(s))
+  }
+
+  /** Every field nullable, as Spark's own file reader declares a read
+    * schema: a file written before a column existed reads it as null.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case st: StructType => StructType(st.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), true)
+    case other => other
+  }
+
+  /** One partition per file, valued by the file's ordinal. */
+  private final class ListedIndex(val statuses: Seq[FileStatus])
+      extends FileIndex {
+    override val partitionSchema: StructType =
+      StructType(Seq(StructField(FILE, LongType, nullable = false)))
+    override def rootPaths: Seq[Path] =
+      statuses.map(_.getPath.getParent).distinct
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val keep = partitionFilters.reduceOption(And).map(e =>
+        Predicate.createInterpreted(e.transform {
+          case _: AttributeReference => BoundReference(0, LongType, false)
+        }))
+      statuses.zipWithIndex.map { case (st, i) =>
+        PartitionDirectory(InternalRow(i.toLong), Array(st))
+      }.filter(d => keep.forall(_.eval(d.values)))
+    }
+    override def inputFiles: Array[String] =
+      statuses.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = statuses.map(_.getLen).sum
+  }
+
+  /** A version's manifest, its file list resolved: a legacy manifest
+    * gets one from [[legacyFiles]].
+    */
   private[graft] def manifest(s: SparkSession, root: String, v: Int)
       : Manifest =
-    if (v == 0) Manifest(Seq.empty, Seq.empty, None, Some(Counts(0, 0)))
-    else Manifest.parse(manifestOf(s, root, v))
+    if (v == 0) Manifest(Seq.empty, Some(Seq.empty), Seq.empty, Seq.empty,
+      None, Some(Counts(0, 0)))
+    else {
+      val m = Manifest.parse(manifestOf(s, root, v))
+      if (m.files.isDefined) m
+      else m.copy(files = Some(legacyFiles(s, m.dirs)))
+    }
 
   private[graft] def dirsOf(s: SparkSession, root: String, v: Int)
-      : Seq[String] = manifest(s, root, v).dirs
+      : Seq[String] =
+    if (v == 0) Seq.empty else Manifest.parse(manifestOf(s, root, v)).dirs
 
+  /** Every sidecar dir of a version, position and legacy path-keyed. */
   private[graft] def dvDirsOf(s: SparkSession, root: String, v: Int)
-      : Seq[String] = manifest(s, root, v).dvs
+      : Seq[String] =
+    if (v == 0) Seq.empty
+    else {
+      val m = Manifest.parse(manifestOf(s, root, v))
+      m.sidecars.map(_.dir) ++ m.pathDvs
+    }
 
   private def manifestOf(s: SparkSession, root: String, v: Int): String = {
     val f = fs(s, root)
@@ -835,15 +1031,14 @@ object Snapshots {
   }
 
   /** Schema anchor for a PRE-CONTRACT parent (manifest without a
-    * schema key): inferred ONCE from the version's committed data via
-    * [[read]] (footer inference — pre-contract tables are small legacy
-    * tables by definition; every contract-era commit pays one manifest
-    * read instead). v0 and dir-less parents have no data to anchor.
+    * schema key): inferred ONCE from the version's files (footer
+    * inference — pre-contract tables are small legacy tables by
+    * definition; every contract-era commit pays one manifest read
+    * instead). v0 and file-less parents have no data to anchor.
     */
-  private def inferredSchemaOf(s: SparkSession, root: String, v: Int,
-      m: Manifest): Option[StructType] =
-    if (m.dirs.isEmpty) None
-    else Some(read(s, root, Some(v)).schema)
+  private def inferredSchemaOf(s: SparkSession, m: Manifest)
+      : Option[StructType] =
+    if (m.dataFiles.isEmpty) None else Some(m.scan(s).drop(FILE).schema)
 
   /** THE append compatibility rule: columns shared with the committed
     * schema must keep their exact type (a silent type fork would make
@@ -884,18 +1079,18 @@ object Snapshots {
       : DataFrame = {
     require(0 <= va && va <= vb && vb <= headVersion(s, root),
       s"bad change range v$va..v$vb at $root")
-    val base = dirsOf(s, root, va).toSet
-    val target = dirsOf(s, root, vb)
-    require(base.subsetOf(target.toSet),
+    val (ma, mb) = (manifest(s, root, va), manifest(s, root, vb))
+    require(ma.dirs.toSet.subsetOf(mb.dirs.toSet),
       s"v$va..v$vb is not append-lineage (a replace commit intervened); " +
         "read the versions and diff by the writer's merge key instead")
     require(dvDirsOf(s, root, va) == dvDirsOf(s, root, vb),
       s"v$va..v$vb crosses a delete commit (new deletion vectors): the " +
         "logical change includes row REMOVALS a file-add feed can't " +
         "express — read the versions and diff by the writer's key instead")
-    val added = target.filterNot(base)
+    val known = ma.dataFiles.map(_.path).toSet
+    val added = mb.dataFiles.filterNot(f => known(f.path))
     if (added.isEmpty) s.emptyDataFrame
-    else s.read.parquet(added.map(literal): _*)
+    else scanOf(s, added, mb.schema).drop(FILE)
   }
 
   /** All committed versions, ascending. */
@@ -1046,14 +1241,11 @@ object Snapshots {
     }.sum
   }
 
-  /** Parquet file count under a version's data dirs (the compaction
-    * metric RoundTripSpec asserts on).
+  /** Parquet file count of a version, from its manifest (the
+    * compaction metric RoundTripSpec asserts on).
     */
-  def fileCount(s: SparkSession, root: String, version: Int): Int = {
-    val f = fs(s, root)
-    dirsOf(s, root, version).map(dir => f.listStatus(new Path(dir))
-      .count(_.getPath.getName.endsWith(".parquet"))).sum
-  }
+  def fileCount(s: SparkSession, root: String, version: Int): Int =
+    manifest(s, root, version).dataFiles.size
 
   // -- src15: the gate face ----------------------------------------------
   // Two deterministic event-slice commits (first half of January, then

@@ -1014,7 +1014,8 @@ class RoundTripSpec extends SparkSpec {
     // ONE version: the kept live rows and the merge's own dir, no
     // sidecar, no dir of v2 left in HEAD, and the counts restart
     val m3 = Snapshots.manifest(spark, root, 3)
-    assert(m3.dvs.isEmpty && m3.dirs.size == 2, m3.toString)
+    assert(m3.sidecars.isEmpty && m3.pathDvs.isEmpty && m3.dirs.size == 2,
+      m3.toString)
     assert(m3.dirs.toSet.intersect(Snapshots.dirsOf(spark, root, 2).toSet)
       .isEmpty)
     assert(m3.recorded == Some(Snapshots.Counts(3, 0)))
@@ -1088,50 +1089,155 @@ class RoundTripSpec extends SparkSpec {
 
   test("snapshots manifest: pre-change manifests parse unchanged; counts come from footers once") {
     import graft.sources.Snapshots
-    import graft.sources.Snapshots.{Counts, Manifest}
-    import org.apache.spark.sql.functions.col
+    import graft.sources.Snapshots.{Counts, DataFile, Listed, Manifest}
     import org.apache.spark.sql.types._
     import spark.implicits._
     val sc = StructType(Seq(StructField("id", LongType),
       StructField("tag", StringType)))
     val b64 = java.util.Base64.getEncoder
       .encodeToString(sc.json.getBytes("UTF-8"))
-    // verbatim forms earlier writers published
+    // verbatim forms earlier writers published: no file list, and "dvs"
+    // names path-keyed sidecars
     assert(Manifest.parse("""{"version": 3, "dirs": ["/t/data/wa", "/t/data/wb"]}""")
-      == Manifest(Seq("/t/data/wa", "/t/data/wb"), Seq.empty, None, None))
+      == Manifest(Seq("/t/data/wa", "/t/data/wb"), None, Nil, Nil, None, None))
     assert(Manifest.parse(
       """{"version": 2, "dirs": ["/t/data/wa"], "dvs": ["/t/dv/wc"]}""")
-      == Manifest(Seq("/t/data/wa"), Seq("/t/dv/wc"), None, None))
+      == Manifest(Seq("/t/data/wa"), None, Nil, Seq("/t/dv/wc"), None, None))
     assert(Manifest.parse(
       s"""{"version": 4, "dirs": ["/t/data/wa"], "dvs": [], "schema": "$b64"}""")
-      == Manifest(Seq("/t/data/wa"), Seq.empty, Some(sc), None))
+      == Manifest(Seq("/t/data/wa"), None, Nil, Nil, Some(sc), None))
     // the current form round-trips any path character
     val odd = Manifest(Seq("/t [1]/\"q\"/data/wa", "/t/data/w]"),
-      Seq("/t/dv/w,\\"), Some(sc), Some(Counts(5, 2)))
+      Some(Seq(DataFile("/t [1]/\"q\"/data/wa/part-0.parquet", 812L, 3L),
+        DataFile("/t/data/w]/part-1.parquet", 640L, 2L))),
+      Seq(Listed("/t/dv/w,\\", Seq(DataFile("/t/dv/w,\\/p.parquet", 90L, 2L)))),
+      Seq("/t/dv/wold"), Some(sc), Some(Counts(5, 2)))
     assert(Manifest.parse(odd.toJson(7)) == odd)
-    // a table whose manifests are in the pre-count form reads as before,
-    // and its next commit records counts taken from the footers
+    // a table whose manifests are in the pre-count form, with a
+    // path-keyed sidecar, reads as before, and its next commit records
+    // counts taken from the footers
     val root = s"${graft.Scratch.dir}/snap_legacy_counts"
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
-    Snapshots.commit(spark, root,
-      (1L to 6L).map(i => (i, "a")).toDF("id", "tag").coalesce(2))
-    Snapshots.deleteWhere(spark, root, col("id") <= 2L)
-    def q(ps: Seq[String]) = ps.map(p => "\"" + p + "\"").mkString(", ")
-    Seq(1, 2).foreach { v =>
-      val m = Snapshots.manifest(spark, root, v)
-      val old = s"""{"version": $v, "dirs": [${q(m.dirs)}], "dvs": [${q(m.dvs)}], "schema": "$b64"}"""
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$root/manifests/v$v.json"),
-        old.getBytes("UTF-8"))
-      assert(Snapshots.manifest(spark, root, v).recorded.isEmpty)
-    }
+    legacyTable(root, (1L to 6L).map(i => (i, "a")).toDF("id", "tag"),
+      "id <= 2", counts = false)
+    assert(Snapshots.manifest(spark, root, 2).recorded.isEmpty)
     assert(Snapshots.read(spark, root, Some(1)).count() == 6)
     assert(Snapshots.read(spark, root).count() == 4)
     assert(Snapshots.commit(spark, root, Seq((7L, "b")).toDF("id", "tag")) == 3)
     assert(Snapshots.manifest(spark, root, 3).recorded == Some(Counts(7, 2)))
     assert(Snapshots.read(spark, root).count() == 5)
+  }
+
+  /** A table in the form published before manifests listed files: v1
+    * holds `rows` in two files, v2 adds a (file_path, row_index) sidecar
+    * of the rows matching `dead`, written as that writer wrote it (the
+    * positions a plain parquet read of the dir reports), and both
+    * manifests carry only dirs, dvs, schema and (with `counts`) counts.
+    */
+  private def legacyTable(root: String, rows: org.apache.spark.sql.DataFrame,
+      dead: String, counts: Boolean): Unit = {
+    import graft.sources.Snapshots
+    import org.apache.spark.sql.functions.{col, expr}
+    val fsys = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
+    Snapshots.commit(spark, root, rows.coalesce(2))
+    val dir = Snapshots.dirsOf(spark, root, 1).head
+    val dv = s"$root/dv/wlegacy"
+    spark.read.parquet(dir).filter(expr(dead))
+      .select(col("_metadata.file_path").as("file_path"),
+        col("_metadata.row_index").as("row_index"))
+      .write.parquet(dv)
+    val b64 = java.util.Base64.getEncoder
+      .encodeToString(rows.schema.json.getBytes("UTF-8"))
+    val n = rows.count()
+    val d = rows.filter(expr(dead)).count()
+    def q(ps: Seq[String]) = ps.map(p => "\"" + p + "\"").mkString(", ")
+    Seq(1 -> Nil, 2 -> Seq(dv)).foreach { case (v, dvs) =>
+      val c = if (!counts) "" else s""", "rows": $n, "dead": ${if (v == 1) 0 else d}"""
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$root/manifests/v$v.json"),
+        (s"""{"version": $v, "dirs": [${q(Seq(dir))}], "dvs": [${q(dvs)}], """ +
+          s""""schema": "$b64"$c}""").getBytes("UTF-8"))
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/HEAD"),
+      "2".getBytes("UTF-8"))
+    assert(Snapshots.manifest(spark, root, 2).pathDvs == Seq(dv))
+  }
+
+  test("snapshots: a pre-change table with a path-keyed sidecar reads, merges and time-travels as before") {
+    import graft.sources.Snapshots
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = s"${graft.Scratch.dir}/snap legacy dv"
+    def rows(v: Option[Int] = None): Set[(Long, String)] =
+      Snapshots.read(spark, root, v).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+    val base = (1L to 20L).map(i => (i, "a"))
+    legacyTable(root, base.toDF("id", "tag"), "id <= 2 OR id = 11",
+      counts = true)
+    val v2 = base.filterNot { case (i, _) => i <= 2 || i == 11 }.toSet
+    assert(rows(Some(1)) == base.toSet)
+    assert(rows() == v2)
+    // a merge over it keeps the legacy sidecar, adds a position sidecar
+    // and records the file list in the order the legacy listing gave
+    assert(Snapshots.mergeInto(spark, root,
+      Seq((3L, "b"), (12L, "b"), (30L, "c")).toDF("id", "tag"), Seq("id")) == 3)
+    val m3 = Snapshots.manifest(spark, root, 3)
+    assert(m3.pathDvs == Snapshots.manifest(spark, root, 2).pathDvs)
+    assert(m3.sidecars.size == 1)
+    val listed = Snapshots.manifest(spark, root, 2).dataFiles
+    val recorded = Snapshots.Manifest.parse(new String(java.nio.file.Files
+      .readAllBytes(java.nio.file.Paths.get(s"$root/manifests/v3.json")),
+      "UTF-8")).files
+    assert(recorded.exists(_.take(listed.size) == listed), recorded.toString)
+    assert(m3.recorded == Some(Snapshots.Counts(23, 5)))
+    val v3 = v2.filterNot(r => Set(3L, 12L)(r._1)) ++
+      Set((3L, "b"), (12L, "b"), (30L, "c"))
+    assert(rows() == v3)
+    // an append keeps both kinds of sidecar live
+    assert(Snapshots.commit(spark, root, Seq((40L, "d")).toDF("id", "tag")) == 4)
+    assert(rows() == v3 + ((40L, "d")))
+    // a rewrite drops the legacy sidecar with the rest
+    assert(Snapshots.deleteWhere(spark, root, col("id") > 4L) == 5)
+    val m5 = Snapshots.manifest(spark, root, 5)
+    assert(m5.pathDvs.isEmpty && m5.sidecars.isEmpty, m5.toString)
+    assert(rows() == Set((3L, "b"), (4L, "a")))
+    // time travel to every earlier version reads as it did
+    assert(rows(Some(1)) == base.toSet)
+    assert(rows(Some(2)) == v2)
+    assert(rows(Some(3)) == v3)
+    new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(root), true)
+  }
+
+  test("snapshots: after 40 appends a read runs no job before its action") {
+    import graft.sources.Snapshots
+    import org.apache.spark.JobCount
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = s"${graft.Scratch.dir}/snap_40_appends"
+    val fsys = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
+    (1 to 40).foreach { i =>
+      Snapshots.commit(spark, root, Seq((i.toLong, "a")).toDF("id", "tag"))
+    }
+    // 40 dirs is past Spark's 32-path parallel-listing threshold: a scan
+    // that listed them would run a listing job here
+    var df: org.apache.spark.sql.DataFrame = null
+    val plain = JobCount(spark.sparkContext) { df = Snapshots.read(spark, root) }
+    assert(plain == 0, s"Snapshots.read ran $plain jobs before its action")
+    assert(df.count() == 40)
+    assert(Snapshots.deleteWhere(spark, root, col("id") === 7L) == 41)
+    val withDv = JobCount(spark.sparkContext) { df = Snapshots.read(spark, root) }
+    assert(withDv == 0, s"Snapshots.read over a sidecar ran $withDv jobs")
+    assert(df.count() == 39)
+    // the sidecar anti-join is keyed by one bigint position, not a path
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("LeftAnti") && !plan.contains("file_path"),
+      s"sidecar join not keyed by position:\n$plan")
+    fsys.delete(new org.apache.hadoop.fs.Path(root), true)
   }
 
   test("snapshots: a failed delete leaves no sidecar or data dir behind") {

@@ -16,16 +16,21 @@ object SnapshotModelSpec {
     * tag does not match, and such rows stay.
     */
   final case class Delete(over: Long, tag: Option[String]) extends Op
+  /** `commit` of the rows whose keys are not live: new unique keys. */
+  final case class Append(rows: Seq[R]) extends Op
+  /** `compact`: same rows, renumbered files, no sidecars. */
+  case object Compact extends Op
 }
 
-/** Model-based test of the snapshot table's row-removing verbs:
-  * random sequences of `mergeInto`, `mergeIntoVersioned` and
-  * `deleteWhere` (with conditions that are NULL on some rows) run on a
-  * small table beside an in-memory latest-wins model, and every version
-  * is checked against the model as it stood when that version landed.
-  * The table is small and the merges touch up to half its keys, so
-  * sequences cross the dead-row bound and exercise both the sidecar and
-  * the rewrite form of a commit.
+/** Model-based test of the snapshot table's verbs: random sequences of
+  * `mergeInto`, `mergeIntoVersioned`, `deleteWhere` (with conditions
+  * that are NULL on some rows), appends of new keys through `commit`
+  * and `compact` run on a small table beside an in-memory latest-wins
+  * model, and every version is checked against the model as it stood
+  * when that version landed. The table is small and the merges touch up
+  * to half its keys, so sequences cross the dead-row bound and exercise
+  * both the sidecar and the rewrite form of a commit; appends extend
+  * the file list under live sidecars and compactions renumber it.
   */
 class SnapshotModelSpec extends SparkSpec {
   import SnapshotModelSpec._
@@ -39,7 +44,12 @@ class SnapshotModelSpec extends SparkSpec {
     }
     case Delete(k, t) =>
       m.filterNot { case (_, r) => r.n.exists(_ > k) || t.contains(r.tag) }
+    case Append(rs) => m ++ fresh(m, rs).map(r => r.id -> r)
+    case Compact => m
   }
+
+  private def fresh(m: Model, rs: Seq[R]): Seq[R] =
+    rs.filterNot(r => m.contains(r.id))
 
   /** Rows `op` writes to its own data dir: a versioned merge drops the
     * rows that lose to the live row.
@@ -47,7 +57,8 @@ class SnapshotModelSpec extends SparkSpec {
   private def added(m: Model, op: Op): Long = op match {
     case Merge(rs) => rs.size.toLong
     case VMerge(rs) => rs.count(r => !m.get(r.id).exists(t => r.v < t.v)).toLong
-    case _: Delete => 0L
+    case Append(rs) => fresh(m, rs).size.toLong
+    case _ => 0L
   }
 
   /** Live rows `op` takes out of `m`: the rows it replaces or deletes. */
@@ -55,6 +66,7 @@ class SnapshotModelSpec extends SparkSpec {
     case Merge(rs) => rs.count(r => m.contains(r.id)).toLong
     case VMerge(rs) => rs.count(r => m.get(r.id).exists(t => r.v >= t.v)).toLong
     case d: Delete => (m.size - step(m, d).size).toLong
+    case _ => 0L
   }
 
   private val schema = StructType(Seq(StructField("id", LongType),
@@ -75,9 +87,13 @@ class SnapshotModelSpec extends SparkSpec {
     n <- Gen.option(Gen.choose(0L, 9L))
   } yield (id: Long) => R(id, tag, v, n)
 
-  private def rowsGen(min: Int, max: Int): Gen[Seq[R]] = for {
+  /** Merges and the base draw keys from 0..13, appends from 10..19, so
+    * merges also replace rows that appends wrote.
+    */
+  private def rowsGen(min: Int, max: Int, keys: Seq[Long] = 0L until 14L)
+      : Gen[Seq[R]] = for {
     k <- Gen.choose(min, max)
-    ids <- Gen.pick(k, 0L until 10L)
+    ids <- Gen.pick(k, keys)
     mk <- Gen.listOfN(k, rowGen)
   } yield ids.toSeq.zip(mk).map { case (id, f) => f(id) }
 
@@ -87,7 +103,9 @@ class SnapshotModelSpec extends SparkSpec {
     2 -> (for {
       k <- Gen.choose(3L, 9L)
       t <- Gen.option(Gen.oneOf("a", "b", "c"))
-    } yield Delete(k, t)))
+    } yield Delete(k, t)),
+    2 -> rowsGen(1, 4, 10L until 20L).map(Append(_)),
+    1 -> Gen.const(Compact))
 
   private val seqGen: Gen[(Seq[R], List[Op])] = for {
     base <- rowsGen(4, 8)
@@ -102,6 +120,7 @@ class SnapshotModelSpec extends SparkSpec {
     var run = 0
     var rewrites = 0
     var sidecars = 0
+    var appendsOverSidecars = 0
     val prop = Prop.forAllNoShrink(seqGen) { case (base, ops) =>
       run += 1
       val root = s"${graft.Scratch.dir}/snap_model/r$run"
@@ -122,6 +141,9 @@ class SnapshotModelSpec extends SparkSpec {
           case VMerge(rs) =>
             Snapshots.mergeIntoVersioned(spark, root, frame(rs), Seq("id"), "v")
           case d: Delete => Snapshots.deleteWhere(spark, root, cond(d))
+          case Append(rs) =>
+            Snapshots.commit(spark, root, frame(fresh(models(i), rs)))
+          case Compact => Snapshots.compact(spark, root, Seq.empty)
         }
         assert(v == parent + 1, s"$op committed v$v after v$parent")
         // every version, HEAD included, reads as the model did then
@@ -140,17 +162,27 @@ class SnapshotModelSpec extends SparkSpec {
         val m = Snapshots.manifest(spark, root, v)
         val c = m.recorded.get
         val rows = spark.read.parquet(m.dirs: _*).count()
-        val dead =
-          if (m.dvs.isEmpty) 0L else spark.read.parquet(m.dvs: _*).count()
+        val dvs = Snapshots.dvDirsOf(spark, root, v)
+        val dead = if (dvs.isEmpty) 0L else spark.read.parquet(dvs: _*).count()
         assert(c == Snapshots.Counts(rows, dead), s"v$v counts after $op")
         assert(c.live == models(i + 1).size)
-        if (due) {
-          assert(m.dvs.isEmpty, s"v$v: debt was due, $op added a sidecar")
-          rewrites += 1
-        } else {
-          assert(m.dvs == before.dvs :+ m.dvs.last,
-            s"v$v: debt not due, $op did not add exactly one sidecar")
-          sidecars += 1
+        op match {
+          case _: Append =>
+            assert(m.sidecars == before.sidecars &&
+              m.dataFiles.startsWith(before.dataFiles),
+              s"v$v: an append must keep the sidecars and extend the files")
+            if (m.sidecars.nonEmpty) appendsOverSidecars += 1
+          case Compact =>
+            assert(m.sidecars.isEmpty && c.dead == 0, s"v$v: compact left $c")
+          case _ if due =>
+            assert(m.sidecars.isEmpty,
+              s"v$v: debt was due, $op added a sidecar")
+            rewrites += 1
+          case _ =>
+            assert(m.sidecars == before.sidecars :+ m.sidecars.last &&
+              m.dataFiles.startsWith(before.dataFiles),
+              s"v$v: debt not due, $op did not add exactly one sidecar")
+            sidecars += 1
         }
         // the bound: every row-removing commit leaves fewer dead rows
         // than live ones, or an empty table
@@ -163,7 +195,8 @@ class SnapshotModelSpec extends SparkSpec {
       SCTest.Parameters.default.withMinSuccessfulTests(12).withWorkers(1)
         .withInitialSeed(20261019L), prop)
     assert(res.passed, res.status.toString)
-    assert(rewrites > 0 && sidecars > 0,
-      s"both forms exercised: $rewrites rewrites, $sidecars sidecars")
+    assert(rewrites > 0 && sidecars > 0 && appendsOverSidecars > 0,
+      s"every form exercised: $rewrites rewrites, $sidecars sidecars, " +
+        s"$appendsOverSidecars appends over sidecars")
   }
 }

@@ -102,7 +102,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     // the reference's feed shape: import files arriving in a directory;
     // stream them with the FILE source under an explicit schema
-    val dir = "/root/repo/target/roundtrip/st01_feed"
+    val dir = s"${graft.Scratch.dir}/st01_feed"
     val batchDf = Tables.events(spark, sfDir).select("ts", "user_id")
     val rows = batchDf.as[TsEv].collect().toSeq
     val (h1, h2) = rows.splitAt(rows.size / 2)
@@ -152,7 +152,7 @@ class StreamingSpec extends SparkSpec {
   test("exactly-once sink survives kill + checkpoint restart and batch replay") {
     import spark.implicits._
     import org.apache.commons.io.FileUtils
-    val base = "/root/repo/target/roundtrip/st03"
+    val base = s"${graft.Scratch.dir}/st03"
     val (feed, out, ckpt) = (s"$base/feed", s"$base/out", s"$base/ckpt")
     FileUtils.deleteQuietly(new java.io.File(base))
 
@@ -451,7 +451,7 @@ class StreamingSpec extends SparkSpec {
   test("st06 CDC sink survives kill + restart + full-history replay") {
     import spark.implicits._
     import org.apache.commons.io.FileUtils
-    val baseDir = "/root/repo/target/roundtrip/st06_chaos"
+    val baseDir = s"${graft.Scratch.dir}/st06_chaos"
     val (feed, out, ckpt) = (s"$baseDir/feed", s"$baseDir/out", s"$baseDir/ckpt")
     FileUtils.deleteQuietly(new java.io.File(baseDir))
     def updRows(df: org.apache.spark.sql.DataFrame): Seq[EventStreams.Upd] =
@@ -680,7 +680,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.commons.io.FileUtils
     import graft.sources.Snapshots
-    val baseDir = "/root/repo/target/roundtrip/st12_chaos"
+    val baseDir = s"${graft.Scratch.dir}/st12_chaos"
     val (feed, root, ckpt) = (s"$baseDir/feed", s"$baseDir/root", s"$baseDir/ckpt")
     FileUtils.deleteQuietly(new java.io.File(baseDir))
     def updRows(df: org.apache.spark.sql.DataFrame): Seq[EventStreams.Upd] =
