@@ -99,9 +99,8 @@ object Evidence {
       recall(s13.getOrElse(k, Set.empty), ids) }.sum / s07exact.size
     // s14's reference: the exact top-k over the SURVIVING corpus
     val s14Exact = {
-      val tomb = s.read.parquet(
-        operators.Similarity.ensureTombstones(s, d))
-      topIds(operators.Similarity.exactTopKExcluding(s, d, tomb))
+      topIds(operators.Similarity.exactTopKExcluding(s, d,
+        operators.Similarity.tombstones(s, d)))
     }
 
     val d04pairs = run("d04_dedup_simhash")

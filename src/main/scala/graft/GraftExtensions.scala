@@ -75,30 +75,23 @@ object GraftExtensions {
     }
   )
 
-  /** `graft_cohort('<PanelsJson doc>'[, '<factView>'])` — the panel
-    * compiler as a SQL TABLE FUNCTION, closing the reference's primary
-    * user-facing face: i2b2 analysts submit cohort definitions through
-    * the webclient and get result sets back without writing engine
-    * code (cf. /root/reference/generated/compose.yml httpd/wildfly).
-    * Here the same wire document — either dialect: PanelsXml (the
-    * i2b2 query_definition's native XML shape) or PanelsJson (the
-    * service face) — is placed directly in SQL:
+  /** `graft_cohort('<definition>'[, '<factView>'])` — the panel
+    * compiler as a SQL TABLE FUNCTION, the face i2b2 analysts use:
+    * a cohort definition in either wire dialect, PanelsXml (the i2b2
+    * query_definition's XML shape) or PanelsJson, placed in SQL:
     *
     * {{{
     * SELECT * FROM graft_cohort(
     *   '{"panels":[{"concepts":[{"eventType":"click"}]}]}')
     * }}}
     *
-    * The builder parses the definition at resolution time and splices
-    * in the SAME one-pass `Panels.cohort` logical plan the Scala API
-    * compiles — one fact scan, one conditional aggregate; SQL users
-    * get the identical plan, not a reimplementation. The fact source
-    * defaults to a view named `events` (cf. Tables.registerViews) and
-    * can be any view/table with the events schema. Encounter-scoped
-    * definitions auto-derive `encounter_id` via the 30-min
-    * sessionization when the source lacks the column. Both arguments
-    * must be string literals — the definition shapes the PLAN (one
-    * aggregate column per panel), so it cannot vary per row.
+    * At resolution time the builder parses the definition and splices
+    * in `Panels.cohort`'s logical plan over the fact view (default
+    * `events`, cf. Tables.registerViews; any view with the events
+    * schema): the plan the Scala API compiles, visits derived inside it
+    * when the definition needs them. Both arguments must be string
+    * literals — the definition shapes the PLAN (one aggregate column
+    * per panel), so it cannot vary per row.
     */
   val cohortTableFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = (
     FunctionIdentifier("graft_cohort"),
@@ -122,13 +115,8 @@ object GraftExtensions {
       val cd =
         if (json.trim.startsWith("<")) graft.operators.PanelsXml.parse(json)
         else graft.operators.PanelsJson.parse(json)
-      val facts = spark.table(factView)
-      val needEnc = cd.scope == graft.operators.Panels.EncounterScope ||
-        cd.panels.exists(_.perEncounter)
-      val base = if (needEnc && !facts.columns.contains("encounter_id"))
-        graft.operators.Panels.withEncounters(facts)
-      else facts
-      graft.operators.Panels.cohort(base, cd).queryExecution.logical
+      graft.operators.Panels.cohort(spark.table(factView), cd)
+        .queryExecution.logical
     }
   )
 

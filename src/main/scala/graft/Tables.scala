@@ -13,8 +13,13 @@ import org.apache.spark.sql.Column
   * filters and prune columns all the way into the file reader.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A test table, read with the schema inference would give, taken
+    * from its footer without inference's Spark job. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(graft.sources.Snapshots.footerSchema(spark, path))
+      .parquet(path)
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
@@ -88,24 +93,12 @@ object Tables {
     * door (the reference's users reach the warehouse through the i2b2
     * webclient's SQL face, cf. /root/reference/generated/compose.yml;
     * a graft deployment would register its lake tables in a metastore,
-    * which these session-local views stand in for). Once per
-    * (session, dir): repeated SQL queries must not re-pay ten schema
-    * reads, and a second dir re-registers (last one wins, like
-    * switching databases).
+    * which these session-local views stand in for). Each call reads the
+    * ten footers again (no Spark job) and re-registers: the last dir
+    * registered wins, like switching databases.
     */
-  // The memo lives in the SESSION's own conf, not a global set: a
-  // global Set[SparkSession] pins every registered session in memory
-  // forever (a leak in a long-lived multi-session service), while
-  // session state dies with the session. A dir switch re-registers
-  // because the stored value no longer matches (last one wins, like
-  // switching databases).
-  private val ViewsDirKey = "spark.graft.views.registeredDir"
-
   def registerViews(s: SparkSession, d: String): Unit =
-    if (!s.conf.getOption(ViewsDirKey).contains(d)) {
-      all.foreach { case (n, fn) => fn(s, d).createOrReplaceTempView(n) }
-      s.conf.set(ViewsDirKey, d)
-    }
+    all.foreach { case (n, fn) => fn(s, d).createOrReplaceTempView(n) }
 }
 
 /** Scratch-space layout shared by every operator that persists derived

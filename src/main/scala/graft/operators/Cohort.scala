@@ -141,26 +141,14 @@ object Cohort {
   }
 
   // -- c09: 30-minute-gap sessionization ----------------------------------
-  /** The session fold with raw epoch-µs bounds — ONE definition of the
-    * visit rule, consumed by c09's report shape and c33's occupancy
-    * census (min/max of unix_micros commute with unix_micros of
-    * min/max, so c09's formatted output is unchanged).
-    */
-  private[graft] def c09Core(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val wCum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events(s, d)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > 30L * 60 * 1000000, 1)
-          .otherwise(0))
-      .withColumn("session_id", sum(col("is_new")).over(wCum))
-      .groupBy(col("user_id"), col("session_id"))
+  /** `Panels.withEncounters`' visits folded to raw epoch-µs bounds, for
+    * c09's report shape, c33's census and c37's readmissions. */
+  private[graft] def c09Core(s: SparkSession, d: String): DataFrame =
+    Panels.withEncounters(events(s, d))
+      .groupBy(col("user_id"), col("encounter_id").as("session_id"))
       .agg(count(lit(1)).as("n_events"),
         min(unix_micros(col("ts"))).as("start_us"),
         max(unix_micros(col("ts"))).as("last_us"))
-  }
 
   def c09(s: SparkSession, d: String): DataFrame =
     c09Core(s, d)
@@ -400,13 +388,15 @@ object Cohort {
     // history state persisted ONCE per JVM (the src05/ensure*-index
     // pattern): repeated c20 runs — and Bench's timed iterations — pay
     // only the delta scan + merge, which is the operator's entire point
+    val history = reportState(ev.filter(col("ts") < cut))
     if (!reportStateBuilt.contains(path)) {
-      reportState(ev.filter(col("ts") < cut))
-        .write.mode("overwrite").parquet(path)
+      history.write.mode("overwrite").parquet(path)
       reportStateBuilt += path
     }
     val delta = reportState(ev.filter(col("ts") >= cut))
-    reportFromState(mergeReportState(s.read.parquet(path), delta))
+    // read back with the schema it was written with: no inference job
+    reportFromState(mergeReportState(
+      s.read.schema(history.schema).parquet(path), delta))
       .transform(Gate.ordered("section", "sec_key"))
   }
 

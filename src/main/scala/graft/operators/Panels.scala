@@ -49,8 +49,8 @@ object Panels {
   /** OR of concepts with an occurrence bound, or a NOT-panel (zero
     * matching events). `perEncounter` counts occurrences as DISTINCT
     * visits containing a match (i2b2's "in at least N separate
-    * encounters") instead of raw fact count — requires an encounter_id
-    * column (cf. withEncounters).
+    * encounters") instead of raw fact count — the frame's encounter_id,
+    * or visits `cohort` derives (cf. withEncounters).
     */
   case class Panel(concepts: Seq[Concept], minOccurrences: Long = 1,
       negated: Boolean = false, perEncounter: Boolean = false)
@@ -91,9 +91,10 @@ object Panels {
     .flatten.reduce(_ && _)
 
   /** Derive a visit (encounter) id by 30-minute-gap sessionization — the
-    * ED-visit proxy over a fact table with no explicit visit dimension
-    * (same rule as Cohort.c09). A fact table that already carries an
-    * `encounter_id` column skips this and feeds `cohort` directly.
+    * ED-visit proxy over a fact table with no explicit visit dimension,
+    * and graft's one batch visit rule (c09's sessions and c33's census
+    * fold the same ids). [[cohort]] applies it itself when a definition
+    * needs visits and the frame carries no `encounter_id`.
     */
   def withEncounters(eventsDf: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
@@ -108,40 +109,64 @@ object Panels {
       .drop("prev_us", "is_new")
   }
 
-  /** Compile a cohort definition against an `events`-shaped frame.
-    *
-    * PatientScope output: user_id + one `p<i>` occurrence count per
-    * panel, filtered to qualifying users. EncounterScope (requires an
-    * `encounter_id` column, cf. withEncounters): user_id +
-    * n_encounters (qualifying visits) + per-panel counts summed over
-    * the qualifying visits.
+  /** The facts a definition counts: its [from, until) window, then —
+    * when it needs visits and the frame has none — [[withEncounters]]
+    * over what the window kept. That keeps every answer: the window is
+    * a contiguous `ts` range and visits follow the (ts, event_id)
+    * order, so two in-window facts are neighbours after the filter
+    * exactly when they were before it, and `is_new` reads only a fact's
+    * predecessor. Only the first in-window visit can be renumbered (one
+    * that began before `from` restarts); which in-window facts share a
+    * visit never changes. No compile outputs `encounter_id`, and
+    * `n_encounters`, panel sums and distinct-visit counts are invariant
+    * under renumbering. A patient-set semi-join keeps whole users, so
+    * it commutes with the rule too.
     */
-  def cohort(eventsDf: DataFrame, cd: CohortDef): DataFrame = {
+  private def counted(eventsDf: DataFrame, cd: CohortDef): DataFrame = {
     requireModifierSupport(eventsDf, cd.panels)
     val windowed = Seq(
       cd.from.map(f => col("ts") >= lit(f).cast("timestamp")),
       cd.until.map(u => col("ts") < lit(u).cast("timestamp")))
       .flatten.foldLeft(eventsDf)(_ filter _)
-    val panelCols = cd.panels.zipWithIndex.map { case (p, i) =>
+    val needsVisits = cd.scope == EncounterScope || cd.panels.exists(_.perEncounter)
+    if (needsVisits && !windowed.columns.contains("encounter_id"))
+      withEncounters(windowed)
+    else windowed
+  }
+
+  /** Per panel: its `p<i>` count (distinct visits if `perEncounter`)
+    * and the bound it must meet (0 if negated, else minOccurrences). */
+  private def panelCounts(panels: Seq[Panel]): (Seq[Column], Seq[Column]) =
+    panels.zipWithIndex.map { case (p, i) =>
       val matches = p.concepts.map(conceptMatch).reduce(_ || _)
-      val c =
+      val n =
         if (p.perEncounter) countDistinct(when(matches, col("encounter_id")))
         else count(when(matches, 1))
-      c.as(s"p$i")
-    }
-    val qualifies = cd.panels.zipWithIndex.map { case (p, i) =>
-      if (p.negated) col(s"p$i") === 0 else col(s"p$i") >= p.minOccurrences
-    }.reduce(_ && _)
+      (n.as(s"p$i"),
+        if (p.negated) col(s"p$i") === 0 else col(s"p$i") >= p.minOccurrences)
+    }.unzip
+
+  /** Compile a cohort definition against an `events`-shaped frame.
+    *
+    * PatientScope output: user_id + one `p<i>` occurrence count per
+    * panel, filtered to qualifying users. EncounterScope: user_id +
+    * n_encounters (qualifying visits) + per-panel counts summed over
+    * the qualifying visits (the frame's `encounter_id`, or derived).
+    */
+  def cohort(eventsDf: DataFrame, cd: CohortDef): DataFrame = {
+    val (panelCols, quals) = panelCounts(cd.panels)
+    val qualifies = quals.reduce(_ && _)
+    val facts = counted(eventsDf, cd)
     cd.scope match {
       case PatientScope =>
-        windowed
+        facts
           .groupBy(col("user_id"))
           .agg(panelCols.head, panelCols.tail: _*)
           .filter(qualifies)
       case EncounterScope =>
         val rollup = count(lit(1)).as("n_encounters") +:
           cd.panels.indices.map(i => sum(col(s"p$i")).as(s"p$i"))
-        windowed
+        facts
           .groupBy(col("user_id"), col("encounter_id"))
           .agg(panelCols.head, panelCols.tail: _*)
           .filter(qualifies)
@@ -177,19 +202,9 @@ object Panels {
     */
   def attrition(eventsDf: DataFrame, cd: CohortDef): DataFrame = {
     require(cd.scope == PatientScope, "attrition is a patient-level ladder")
-    requireModifierSupport(eventsDf, cd.panels)
-    val windowed = Seq(
-      cd.from.map(f => col("ts") >= lit(f).cast("timestamp")),
-      cd.until.map(u => col("ts") < lit(u).cast("timestamp")))
-      .flatten.foldLeft(eventsDf)(_ filter _)
-    val panelCols = cd.panels.zipWithIndex.map { case (p, i) =>
-      count(when(p.concepts.map(conceptMatch).reduce(_ || _), 1)).as(s"p$i")
-    }
-    val perUser = windowed.groupBy(col("user_id"))
+    val (panelCols, quals) = panelCounts(cd.panels)
+    val perUser = counted(eventsDf, cd).groupBy(col("user_id"))
       .agg(panelCols.head, panelCols.tail: _*)
-    val quals = cd.panels.zipWithIndex.map { case (p, i) =>
-      if (p.negated) col(s"p$i") === 0 else col(s"p$i") >= p.minOccurrences
-    }
     // survived(step i) = panels 0..i-1 all hold — monotone prefix ANDs
     val prefixes = quals.scanLeft(lit(true))(_ && _)
     val steps = prefixes.zipWithIndex.map { case (c, i) =>
@@ -274,7 +289,7 @@ object Panels {
     scope = EncounterScope)
 
   def c14(s: SparkSession, d: String): DataFrame =
-    cohort(withEncounters(events(s, d)), c14Def)
+    cohort(events(s, d), c14Def)
       .transform(Gate.ordered("user_id"))
 
   // -- c14b: occurrence over distinct encounters -------------------------
@@ -288,7 +303,7 @@ object Panels {
     from = Some("2024-01-01"), until = Some("2024-01-08"))
 
   def c14b(s: SparkSession, d: String): DataFrame =
-    cohort(withEncounters(events(s, d)), c14bDef)
+    cohort(events(s, d), c14bDef)
       .transform(Gate.ordered("user_id"))
 
   // -- c14c: same-encounter scoping over an EXPLICIT visit dimension ------
@@ -518,8 +533,8 @@ object Panels {
   def anchoredCohort(eventsDf: DataFrame, anchor: Concept, days: Int,
       panels: Seq[Panel]): DataFrame = {
     require(!panels.exists(_.perEncounter),
-      "anchored compile counts facts, not encounters — combine " +
-        "withEncounters + cohort(EncounterScope) for per-visit bounds")
+      "anchored compile counts facts, not encounters — use " +
+        "cohort(EncounterScope) for per-visit bounds")
     requireModifierSupport(eventsDf,
       Panel(Seq(anchor)) +: panels)
     val w = Window.partitionBy("user_id")
@@ -529,18 +544,13 @@ object Panels {
       .filter(col("anchor_ts").isNotNull &&
         col("ts") >= col("anchor_ts") &&
         col("ts") < col("anchor_ts") + expr(s"INTERVAL '$days' DAY"))
-    val panelCols = panels.zipWithIndex.map { case (p, i) =>
-      count(when(p.concepts.map(conceptMatch).reduce(_ || _), 1)).as(s"p$i")
-    }
-    val qualifies = panels.zipWithIndex.map { case (p, i) =>
-      if (p.negated) col(s"p$i") === 0 else col(s"p$i") >= p.minOccurrences
-    }.reduce(_ && _)
+    val (panelCols, quals) = panelCounts(panels)
     anchored
       .groupBy(col("user_id"))
       .agg(date_format(min(col("anchor_ts")),
         "yyyy-MM-dd HH:mm:ss.SSSSSS").as("anchor"),
         panelCols: _*)
-      .filter(qualifies)
+      .filter(quals.reduce(_ && _))
   }
 
   // "within one week of first signup: at least 2 substantial purchases
@@ -553,15 +563,9 @@ object Panels {
       .transform(Gate.ordered("user_id"))
 
   // -- c29: the SQL front door -------------------------------------------
-  // The reference's analysts reach the CRC in SQL (i2b2 webclient →
-  // CRC cells, cf. compose.yml httpd/wildfly services); graft's
-  // equivalent is the graft_cohort TABLE FUNCTION (GraftExtensions): a
-  // PanelsJson wire document placed inside ordinary SQL, compiled at
-  // resolution time into the SAME one-pass Panels.cohort plan — no
-  // Scala anywhere in the user's query. c29 runs c13's exact
-  // definition through the SQL surface over the registered views; the
-  // oracle is c13's, so the SQL face is proven hash-identical to the
-  // API face.
+  // c13's exact definition through the graft_cohort SQL table function
+  // (GraftExtensions) over the registered views; the oracle is c13's,
+  // so the SQL face is proven hash-identical to the API face.
   def c29(s: SparkSession, d: String): DataFrame = {
     graft.Tables.registerViews(s, d)
     val doc = PanelsJson.toJson(c13Def).replace("'", "''")

@@ -885,29 +885,28 @@ object Similarity {
     * tmp-then-rename discipline) — a crash between the batch writes
     * can only leave staging debris, never a half-built queue that
     * later runs (s14, Evidence recall, purgeTombstones) would silently
-    * accept as complete.
+    * accept as complete. Read back with the schema it was written with.
     */
-  private[graft] def ensureTombstones(s: SparkSession, d: String): String = {
+  private[graft] def tombstones(s: SparkSession, d: String): DataFrame = {
     val path = tombstonePath(d)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val ids = embeddings(s, d).select(col("vec_id"))
     if (!fs.exists(p)) {
       val tmp = new org.apache.hadoop.fs.Path(path + ".building")
       fs.delete(tmp, true) // debris from a crashed prior attempt
-      val ids = embeddings(s, d).select(col("vec_id"))
       ids.filter(col("vec_id") % 9 === 2)
         .write.mode("append").parquet(tmp.toString)
       ids.filter(col("vec_id") % 23 === 5)
         .write.mode("append").parquet(tmp.toString)
       require(fs.rename(tmp, p), s"tombstone publish $tmp -> $p failed")
     }
-    path
+    s.read.schema(ids.schema).parquet(path)
   }
 
   def s14(s: SparkSession, d: String): DataFrame = {
     val (cellsT, centT) = ensureIvfIndex(s, d)
-    val tomb = broadcast(
-      s.read.parquet(ensureTombstones(s, d)).select("vec_id").distinct())
+    val tomb = broadcast(tombstones(s, d).select("vec_id").distinct())
     val probed = broadcast(s.table(centT)
       .crossJoin(queryVec(s, d))
       .select(col("cid"),
@@ -929,11 +928,9 @@ object Similarity {
     */
   private[graft] def purgeTombstones(s: SparkSession, d: String): String = {
     val (cellsT, _) = ensureIvfIndex(s, d)
-    val tombP = ensureTombstones(s, d)
     val purgedT = s"${cellsT}_purged"
     if (!s.catalog.tableExists(purgedT)) {
-      val tomb = broadcast(
-        s.read.parquet(tombP).select("vec_id").distinct())
+      val tomb = broadcast(tombstones(s, d).select("vec_id").distinct())
       s.table(cellsT).join(tomb, Seq("vec_id"), "left_anti")
         .write.mode("overwrite")
         .option("path", s"$scratch/ivf_cells_purged/${sanitize(d)}")

@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
   BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType,
   StructField, StructType}
@@ -916,6 +917,28 @@ object Snapshots {
         try DataFile(s"$dir/${st.getPath.getName}", st.getLen, r.getRecordCount)
         finally r.close()
       }
+  }
+
+  /** The schema Spark's non-merging inference gives `path`, read on the
+    * driver from the footer it reads (the file, or a dir's first data
+    * file by name, `_*` and `.*` skipped): Spark's own schema key if
+    * written, else the session's converter (`nanosAsLong`, NTZ). No job.
+    */
+  private[graft] def footerSchema(s: SparkSession, path: String): StructType = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file = fs.listStatus(p).filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.minByOption(_.getPath.getName)
+      .getOrElse(throw new IllegalArgumentException(s"no parquet file at $path"))
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val meta = try r.getFooter.getFileMetaData finally r.close()
+    Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(s.sessionState.conf)
+        .convert(meta.getSchema))
   }
 
   /** The file list of a manifest written before manifests listed files:

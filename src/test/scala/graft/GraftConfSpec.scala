@@ -135,7 +135,7 @@ class GraftConfSpec extends AnyFunSuite {
       "spark.graft.spike.factor", "spark.graft.spike.minObs",
       "spark.graft.spike.windowHours",
       "spark.graft.rep.deliverTimeoutSec",
-      "spark.graft.gateSort", "spark.graft.views.registeredDir"))
+      "spark.graft.gateSort"))
   }
 
   test("Bench.runsFor: official protocol trims sub-noise-floor queries") {

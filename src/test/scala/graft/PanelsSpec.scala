@@ -3,6 +3,9 @@ package graft
 import graft.operators.{Panels, PanelsJson, PanelsXml}
 import graft.operators.Panels.{Concept, CohortDef, EncounterScope, Panel}
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 
 case class PanelEv(user_id: Long, event_id: Long, ts: Timestamp,
     event_type: String, value: Double)
@@ -178,6 +181,94 @@ class PanelsSpec extends SparkSpec {
   test("c14c explicit-encounter plan carries no window (visit id is data)") {
     val plan = Panels.c14c(spark, sfDir).queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"session derivation leaked in:\n$plan")
+  }
+
+  // -- cohort() sessionizes after the date window ------------------------
+
+  private type Fact = (Long, Long, Timestamp, String, Double, String)
+  private val T0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+  // a 15-minute grid: equal-ts ties, exactly-30-min gaps (same visit)
+  // and 45-min gaps (a new visit) all occur
+  private val STEP_MS = 15L * 60 * 1000
+  private def at(step: Int) = new Timestamp(T0 + step * STEP_MS)
+  private val types = Seq("a", "b", "c")
+
+  // Some in `some` of `outOf` draws: with every constraint set, most
+  // cohorts come out empty and the comparison shows nothing
+  private def sometimes[T](g: Gen[T], some: Int, outOf: Int): Gen[Option[T]] =
+    Gen.frequency(some -> g.map(Some(_)), (outOf - some) -> Gen.const(None))
+
+  private val factsGen: Gen[Seq[Fact]] = for {
+    n <- Gen.choose(10, 50)
+    rows <- Gen.listOfN(n, for {
+      u <- Gen.choose(1L, 4L)
+      step <- Gen.choose(0, 24)
+      t <- Gen.oneOf(types)
+      v <- Gen.choose(0, 100)
+      k <- Gen.choose(0, 5)
+    } yield (u, step, t, v.toDouble, k))
+  } yield {
+    // user 9 is in every fixture: a tie at step 0, an exactly-30-min gap
+    // to step 2, a 45-min gap to step 5
+    val fixed = Seq((9L, 0, "a", 10.0, 1), (9L, 0, "b", 60.0, 2),
+      (9L, 2, "a", 70.0, 1), (9L, 5, "c", 10.0, 3))
+    (fixed ++ rows).zipWithIndex.map { case ((u, step, t, v, k), i) =>
+      (u, i.toLong, at(step), t, v, s"""{"k": $k}""")
+    }
+  }
+
+  private val conceptGen: Gen[Concept] = for {
+    t <- Gen.oneOf(types)
+    min <- sometimes(Gen.const(50.0), 1, 4)
+    codes <- sometimes(Gen.someOf((0 to 5).map(_.toString)).map(_.toSeq), 1, 4)
+  } yield Concept(t, minValue = min, codeIn = codes.filter(_.nonEmpty))
+
+  private val panelGen: Gen[Panel] = for {
+    cs <- Gen.choose(1, 2).flatMap(Gen.listOfN(_, conceptGen))
+    minOcc <- Gen.choose(1L, 2L)
+    neg <- Gen.frequency(1 -> true, 4 -> false)
+    perEnc <- Gen.frequency(1 -> true, 2 -> false)
+  } yield Panel(cs, minOccurrences = minOcc, negated = neg, perEncounter = perEnc)
+
+  private val defGen: Gen[CohortDef] = for {
+    ps <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, panelGen))
+    window <- sometimes(for {
+      a <- Gen.choose(0, 20)
+      b <- Gen.choose(a + 1, 25)
+    } yield (at(a).toString, at(b).toString), 2, 3)
+    scope <- Gen.oneOf(Panels.PatientScope, EncounterScope)
+  } yield CohortDef(ps, window.map(_._1), window.map(_._2), scope)
+
+  test("cohort() sessionizing after the window == sessionizing the full history") {
+    import spark.implicits._
+    var nonEmpty = 0
+    val cases = Prop.forAllNoShrink(factsGen, defGen,
+        sometimes(Gen.someOf(Seq(1L, 2L, 3L, 9L)), 1, 3)) { (facts, cd, set) =>
+      val f = facts.toDF("user_id", "event_id", "ts", "event_type", "value", "props")
+      def run(ev: DataFrame) = set.map(_.toSeq.toDF("user_id"))
+        .fold(Panels.cohort(ev, cd))(Panels.cohortWithPatientSet(ev, cd, _))
+        .collect().map(_.toSeq).toSet
+      // the reference: the composition cohort() replaced, visits derived
+      // over every fact before the window is applied
+      val (got, want) = (run(f), run(Panels.withEncounters(f)))
+      if (want.nonEmpty) nonEmpty += 1
+      (got == want) :| s"$cd over $set: got $got, want $want"
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(50), cases)
+    assert(res.passed, res.status.toString)
+    assert(nonEmpty >= 15, s"only $nonEmpty of 50 cohorts were non-empty")
+  }
+
+  test("a windowed encounter definition filters ts below the visit Window") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Window}
+    val plan = Panels.c14b(spark, sfDir).queryExecution.optimizedPlan
+    val w = plan.collectFirst { case w: Window => w }
+      .getOrElse(fail(s"c14b derives no visits:\n$plan"))
+    assert(w.child.exists {
+      case Filter(c, _) => c.references.exists(_.name == "ts")
+      case _ => false
+    }, s"the date window must filter before sessionizing:\n$plan")
   }
 
   test("c14 encounter-scope cohort is a subset of its patient-scope twin") {

@@ -318,8 +318,8 @@ class RobustnessSpec extends SparkSpec {
     Tables.registerViews(spark, sfDir)
     val n1 = spark.sql("SELECT COUNT(*) FROM documents").head().getLong(0)
     assert(n1 == Tables.documents(spark, sfDir).count())
-    // re-registering the same dir is a cheap no-op (memoized) but must
-    // keep the views working
+    // re-registering the same dir re-reads ten footers (no Spark job,
+    // TablesSpec pins it) and must keep the views working
     Tables.registerViews(spark, sfDir)
     assert(spark.sql("SELECT COUNT(*) FROM documents").head().getLong(0) == n1)
   }

@@ -219,8 +219,7 @@ class SimilaritySpec extends SparkSpec {
     val got = live.collect()
     assert(got.length == 10)
     // a deleted vector can never surface
-    val dead = spark.read.parquet(
-      Similarity.ensureTombstones(spark, sfDir))
+    val dead = Similarity.tombstones(spark, sfDir)
       .collect().map(_.getLong(0)).toSet
     assert(dead.nonEmpty)
     got.foreach(r => assert(!dead.contains(r.getLong(0)),

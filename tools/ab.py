@@ -17,7 +17,10 @@ tools/gen_sf.py.
 For every metric in a run's result line it prints each side's median and
 quartiles, how many pairs the change won (ties count for neither side,
 the direction comes from BENCHMARK.json), the median change, and whether
-that change exceeds the distance between the base's quartiles. Give
+that change exceeds the distance between the base's quartiles. For
+analyst runs it prints the same for each run's median latency by request
+kind: patient-scope cohorts, encounter-using cohorts with and without a
+date window, and reports (perfbench/plans.py classifies them). Give
 --workdir to keep builds and tables for a later call; without it
 everything lives in a temporary directory that is removed at the end.
 """
@@ -33,6 +36,8 @@ import tarfile
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+import plans  # noqa: E402  (perfbench/plans.py: the analyst request plan)
 
 
 def git(*args):
@@ -65,6 +70,25 @@ def seeds(spec):
     return out
 
 
+def request_kind(key, defs):
+    """An analyst request's kind, from its key in the seed's plan."""
+    if key in plans.REPORTS:
+        return "report"
+    d = defs[key]
+    if not plans.uses_encounters(d):
+        return "patient"
+    return "encounter_window" if "from" in d or "until" in d else "encounter_no_window"
+
+
+def kind_medians(ops, seed):
+    """{kind: median latency} over a run's timed (key, seconds) ops."""
+    defs = plans.analyst_plan(seed, 1)["defs"]
+    by = {}
+    for key, secs in ops:
+        by.setdefault(request_kind(key, defs), []).append(secs)
+    return {k: statistics.median(v) for k, v in sorted(by.items())}
+
+
 def run(tree, build, workload, seed, seconds, trace):
     """The metrics of one perfbench run, or an error string."""
     env = dict(os.environ, CARGO_TARGET_DIR=build)
@@ -79,10 +103,13 @@ def run(tree, build, workload, seed, seconds, trace):
     # the run's full record carries the host annotations
     with open(os.path.join(build, "perfbench", "results",
                            f"{workload}-s{seed}-t{trace}.json")) as f:
-        host = json.load(f)["host"]
-    return {"correct": last["correct"], "failed": last["failed"],
-            "attempted": last["attempted"], "steal_share": host["steal_share"],
-            "metrics": {k: v["value"] for k, v in last["metrics"].items()}}
+        record = json.load(f)
+    out = {"correct": last["correct"], "failed": last["failed"],
+           "attempted": last["attempted"], "steal_share": record["host"]["steal_share"],
+           "metrics": {k: v["value"] for k, v in last["metrics"].items()}}
+    if workload == "analyst":
+        out["kind_latency_p50_s"] = kind_medians(record["ops"], seed)
+    return out
 
 
 def quartiles(xs):
@@ -92,27 +119,32 @@ def quartiles(xs):
     return q1, med, q3
 
 
-def summary(runs, better):
+def summary(runs, better, field="metrics"):
+    """Per-metric paired comparison of each run's `field` values."""
     pairs = {}
     for r in runs:
-        if "metrics" in r:
-            pairs.setdefault(r["seed"], {})[r["side"]] = r["metrics"]
+        if field in r:
+            pairs.setdefault(r["seed"], {})[r["side"]] = r[field]
     pairs = [p for p in pairs.values() if len(p) == 2]
-    names = [k for k in pairs[0]["base"]] if pairs else []
-    print(f"{len(pairs)} complete pairs; failed runs: "
-          f"{sum('error' in r for r in runs)}; runs with wrong answers: "
-          f"{sum(not r.get('correct', True) for r in runs)}")
-    for side in ("base", "change"):
-        st = [r["steal_share"] for r in runs if r["side"] == side and "metrics" in r]
-        if st:
-            print(f"{side} CPU steal share: median {statistics.median(st):.3f}, "
-                  f"max {max(st):.3f}")
+    names = list(dict.fromkeys(k for p in pairs for k in p["base"]))
+    if field == "metrics":
+        print(f"{len(pairs)} complete pairs; failed runs: "
+              f"{sum('error' in r for r in runs)}; runs with wrong answers: "
+              f"{sum(not r.get('correct', True) for r in runs)}")
+        for side in ("base", "change"):
+            st = [r["steal_share"] for r in runs if r["side"] == side and "metrics" in r]
+            if st:
+                print(f"{side} CPU steal share: median {statistics.median(st):.3f}, "
+                      f"max {max(st):.3f}")
+    else:
+        print(f"\n{field}, by request kind:")
     print(f"{'metric':<22} {'base median [q1, q3]':>30} "
           f"{'change median [q1, q3]':>30} {'wins':>6} {'change':>8}  beyond base IQR")
     rows = []
     for k in names:
-        b = [p["base"][k] for p in pairs]
-        c = [p["change"][k] for p in pairs]
+        pairs_k = [p for p in pairs if k in p["base"] and k in p["change"]]
+        b = [p["base"][k] for p in pairs_k]
+        c = [p["change"][k] for p in pairs_k]
         sign = -1 if better.get(k, "lower") == "lower" else 1
         wins = sum((y - x) * sign > 0 for x, y in zip(b, c))
         bq, cq = quartiles(b), quartiles(c)
@@ -121,9 +153,9 @@ def summary(runs, better):
         beyond = delta * sign > 0 and abs(delta) > bq[2] - bq[0]
         print(f"{k:<22} {bq[1]:>10.4g} [{bq[0]:.4g}, {bq[2]:.4g}]".ljust(53)
               + f" {cq[1]:>10.4g} [{cq[0]:.4g}, {cq[2]:.4g}]".ljust(31)
-              + f" {wins:>2}/{len(pairs):<3} {rel:>+8.1%}  {'yes' if beyond else 'no'}")
-        rows.append({"metric": k, "better": better.get(k), "base": bq,
-                     "change": cq, "wins": wins, "pairs": len(pairs),
+              + f" {wins:>2}/{len(pairs_k):<3} {rel:>+8.1%}  {'yes' if beyond else 'no'}")
+        rows.append({"metric": k, "better": better.get(k, "lower"), "base": bq,
+                     "change": cq, "wins": wins, "pairs": len(pairs_k),
                      "beyond_base_iqr": beyond})
     return rows
 
@@ -185,13 +217,16 @@ def main():
         print(f"\n{a.workload}, trace={a.trace}, {a.seconds:g} s windows; "
               f"base {sides['base']['rev']}, change {sides['change']['rev']}")
         rows = summary(runs, better)
+        kinds = summary(runs, better, "kind_latency_p50_s") \
+            if a.workload == "analyst" else []
         if a.out:
             with open(a.out, "w") as f:
                 json.dump({"workload": a.workload, "trace": a.trace,
                            "seconds": a.seconds,
                            "base": sides["base"]["rev"],
                            "change": sides["change"]["rev"],
-                           "runs": runs, "summary": rows}, f, indent=1)
+                           "runs": runs, "summary": rows,
+                           "kind_summary": kinds}, f, indent=1)
         return 0
     finally:
         if not a.workdir:
